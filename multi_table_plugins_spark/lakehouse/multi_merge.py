@@ -398,8 +398,8 @@ def merge_many(
     # every table committed → publish the cross-table-consistent
     # warehouse snapshot pinning each touched table's resulting version
     # (a crash before this point leaves readers on the last complete
-    # batch — see lakehouse/snapshots.py). Best-effort: a snapshot
-    # publish failure must not fail a durably committed batch.
+    # batch — see lakehouse/snapshots.py). A snapshot publish failure
+    # does not fail the durably committed batch; it is logged as degraded.
     # pin the versions each commit ITSELF produced (never a re-read of
     # "latest" — a concurrent writer's half-committed batch must not
     # leak into the pin map); skipped replays pin their table's current
@@ -412,15 +412,9 @@ def merge_many(
     }
     if branch is not None:
         versions = {}  # staged commits must never pin a snapshot
-    if versions:
-        try:
-            from .snapshots import publish_snapshot
+    from .snapshots import publish_batch_snapshot
 
-            publish_snapshot(
-                io, warehouse, versions, app_id=app_id, epoch=epoch
-            )
-        except Exception:
-            pass
+    publish_batch_snapshot(io, warehouse, versions, app_id, epoch)
     results["_batch"] = {
         "rows_in": got.get("rows_in", 0),
         "deletes": got.get("deletes", 0) or 0,

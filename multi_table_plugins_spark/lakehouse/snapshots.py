@@ -31,6 +31,7 @@ contract, made cheap by the manifest log.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
@@ -116,6 +117,42 @@ def publish_snapshot(
     raise RuntimeError(
         f"gave up publishing warehouse snapshot after 20 races at {d}"
     )
+
+
+def publish_batch_snapshot(
+    io: FileIO,
+    warehouse: str,
+    table_versions: "dict[str, int]",
+    app_id: "str | None",
+    epoch: "int | None",
+    lineage=None,
+) -> None:
+    """Publish the snapshot of a batch whose tables have all committed.
+
+    The batch is already durable, so a failed publish must not fail it:
+    readers stay on the previous snapshot, and the failure is recorded as
+    a ``degraded`` lineage record (``site: snapshot_publish``) in
+    ``lineage`` or the warehouse's own lineage log."""
+    if not table_versions:
+        return
+    try:
+        publish_snapshot(io, warehouse, table_versions, app_id=app_id, epoch=epoch)
+    except Exception as e:
+        from ..streaming.lineage import LineageLog
+
+        logging.getLogger(__name__).warning(
+            "warehouse snapshot publish failed for epoch %s", epoch, exc_info=True
+        )
+        (lineage or LineageLog(warehouse)).emit(
+            {
+                "kind": "degraded",
+                "site": "snapshot_publish",
+                "app_id": app_id,
+                "epoch": epoch,
+                "tables": sorted(table_versions),
+                "error": f"{type(e).__name__}: {e}",
+            }
+        )
 
 
 class WarehouseSnapshot:

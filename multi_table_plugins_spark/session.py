@@ -9,9 +9,75 @@ Catalyst broadcasts dimension tables on its own.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+#: Hadoop's local filesystem, bound so that setPermission sets mode bits
+#: in-process (java.nio) instead of forking ``chmod`` for every file,
+#: checksum file and directory Spark writes when libhadoop is absent.
+#: Source and build script: jvm/src, jvm/build.sh.
+LOCALFS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "mtp-localfs.jar"
+)
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "mtp.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "mtp.localfs.NioLocalFs",
+}
+
+
+def _local_fs_conf(conf: dict) -> dict:
+    """Conf that binds the in-process-permissions local filesystem.
+
+    A JVM this call launches gets the jar on its driver classpath (after
+    any caller entries). Into a JVM that is already running (spark-submit,
+    or an earlier session) the binding goes only if its class loads there;
+    otherwise Hadoop's default stays and one warning says how to add it."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        if os.path.isfile(LOCALFS_JAR):
+            cp = conf.get("spark.driver.extraClassPath")
+            return {
+                "spark.driver.extraClassPath": os.pathsep.join(
+                    p for p in (cp, LOCALFS_JAR) if p
+                ),
+                **LOCALFS_CONF,
+            }
+    else:
+        SparkContext._ensure_initialized()
+        jvm = SparkContext._jvm
+        hconf = jvm.org.apache.hadoop.conf.Configuration()
+        cls = LOCALFS_CONF["spark.hadoop.fs.file.impl"]
+        if hconf.getClassByNameOrNull(cls) is not None:
+            if SparkContext._active_spark_context is None:
+                # spark-submit caches a default file: FileSystem while it
+                # resolves --py-files; closing it drops it from Hadoop's
+                # cache, so the new context's conf picks the class
+                fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+                    jvm.java.net.URI("file:///"), hconf
+                )
+                if fs.getClass().getName() != cls:
+                    fs.close()
+            return dict(LOCALFS_CONF)
+    _log.warning(
+        "mtp-localfs.jar is not on the driver classpath: Hadoop's default "
+        "local filesystem forks chmod for every file Spark writes. Pass "
+        "--driver-class-path <checkout>/multi_table_plugins_spark/jvm/"
+        "mtp-localfs.jar to spark-submit."
+    )
+    return {}
+
+
+def local_fs_class(spark: SparkSession) -> str:
+    """Class name of the Hadoop FileSystem that serves ``file:`` paths."""
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    return fs.getClass().getName()
 
 
 def get_spark(
@@ -53,6 +119,8 @@ def get_spark(
         # 128 GiB box (cluster guidance: size to executor memory)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf.update(_local_fs_conf(conf))
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

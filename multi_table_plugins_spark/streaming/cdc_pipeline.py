@@ -599,15 +599,11 @@ def _apply_isolated(
                 for t, m in results.items()
                 if m.get("version") is not None
             }
-            if versions:
-                try:
-                    from ..lakehouse.snapshots import publish_snapshot
+            from ..lakehouse.snapshots import publish_batch_snapshot
 
-                    publish_snapshot(
-                        io, warehouse, versions, app_id=app_id, epoch=epoch
-                    )
-                except Exception:
-                    pass
+            publish_batch_snapshot(
+                io, warehouse, versions, app_id, epoch, lineage=lineage
+            )
         return {"tables": results, "failed": sorted(failures), "epoch": epoch}
     finally:
         batch_df.unpersist()

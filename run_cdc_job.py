@@ -8,6 +8,9 @@
         [--error-mode error-port] [--block-tables a,b]
 
 Build the zip with:  (cd <repo> && zip -r mtp.zip multi_table_plugins_spark)
+and add  --driver-class-path <repo>/multi_table_plugins_spark/jvm/mtp-localfs.jar
+so Hadoop's local filesystem sets file modes without forking chmod (the
+job runs without it, slower; it logs which ``file:`` filesystem is active).
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executors); locally it falls back to local[$SPARK_GRAFT_CPUS]. The job is
@@ -62,11 +65,12 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from multi_table_plugins_spark.session import get_spark
+    from multi_table_plugins_spark.session import get_spark, local_fs_class
     from multi_table_plugins_spark.streaming import run_cdc_stream
 
     active = SparkSession.getActiveSession()
     spark = active if active is not None else get_spark("cdc-ingest")
+    print(f"file: filesystem: {local_fs_class(spark)}", file=sys.stderr, flush=True)
 
     q = run_cdc_stream(
         spark,

@@ -211,3 +211,64 @@ def test_isolated_apply_path_publishes_snapshots(spark, tmp_path):
     snap = WarehouseSnapshot.latest(spark, wh)
     assert snap is not None and set(snap.tables) == {"t0", "t1"}
     assert snap.read("t0").count() == 1
+
+
+def _fail_publish(monkeypatch):
+    from multi_table_plugins_spark.lakehouse import snapshots
+
+    def boom(*a, **k):
+        raise OSError("snapshot dir unwritable")
+
+    monkeypatch.setattr(snapshots, "publish_snapshot", boom)
+
+
+def _degraded(wh):
+    from multi_table_plugins_spark.streaming.lineage import LineageLog
+
+    return [r for r in LineageLog(wh).read() if r["kind"] == "degraded"]
+
+
+def test_fast_path_snapshot_publish_failure_is_recorded(
+    spark, tmp_path, monkeypatch
+):
+    """A failed post-batch publish keeps the committed batch and leaves a
+    ``degraded`` lineage record instead of passing silently."""
+    wh = str(tmp_path / "wh")
+    _fail_publish(monkeypatch)
+    res = _merge(spark, wh, [("t0", 1, "I", 1, 1), ("t1", 2, "I", 1, 1)], 0)
+    assert res["t0"]["version"] is not None and res["t1"]["version"] is not None
+    assert LakeTable(spark, os.path.join(wh, "t0")).read().count() == 1
+    assert latest_snapshot(get_fileio(None), wh) is None
+    (rec,) = _degraded(wh)
+    assert rec["site"] == "snapshot_publish" and rec["epoch"] == 0
+    assert rec["tables"] == ["t0", "t1"] and "unwritable" in rec["error"]
+
+
+def test_isolated_path_snapshot_publish_failure_is_recorded(
+    spark, tmp_path, monkeypatch
+):
+    from multi_table_plugins_spark.streaming.cdc_pipeline import (
+        apply_cdc_batch,
+    )
+
+    wh = str(tmp_path / "wh")
+    _fail_publish(monkeypatch)
+    out = apply_cdc_batch(
+        spark,
+        _batch(
+            spark,
+            [("t0", 1, "I", 1, 1), ("t1", 2, "I", 1, 1)],
+        ).withColumn("ts", F.current_timestamp()),
+        wh,
+        epoch=3,
+        app_id="iso",
+        fast_path=False,
+        validate=False,
+        n_buckets=2,
+        key_col="doc_id",
+    )
+    assert out["failed"] == [] and set(out["tables"]) == {"t0", "t1"}
+    assert latest_snapshot(get_fileio(None), wh) is None
+    (rec,) = _degraded(wh)
+    assert rec["site"] == "snapshot_publish" and rec["app_id"] == "iso"
+    assert rec["epoch"] == 3 and rec["tables"] == ["t0", "t1"]

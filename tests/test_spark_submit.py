@@ -1,6 +1,7 @@
 """The north rule requires the job to run under ``spark-submit
 --py-files``: package the library as a zip, submit the CDC job as a fresh
-application, and verify the final table state."""
+application, and verify the final table state. The local-filesystem
+binding jar rides along on ``--driver-class-path`` and must be active."""
 
 import os
 import shutil
@@ -9,6 +10,8 @@ import sys
 import zipfile
 
 import pytest
+
+from multi_table_plugins_spark.session import LOCALFS_CONF, LOCALFS_JAR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -50,6 +53,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
             spark_submit,
             "--master", "local[4]",
             "--py-files", zpath,
+            "--driver-class-path", LOCALFS_JAR,
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.shuffle.partitions=4",
             os.path.join(REPO, "run_cdc_job.py"),
@@ -65,6 +69,9 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         cwd=str(tmp_path),  # NOT the repo dir — forces --py-files resolution
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    fs_class = LOCALFS_CONF["spark.hadoop.fs.file.impl"]
+    # spark-submit merges the Python driver's stderr into its own stdout
+    assert f"file: filesystem: {fs_class}" in proc.stdout, proc.stdout[-3000:]
 
     # verify final state against the batch oracle with a fresh local session
     oracle = expected_final_state(feed)
