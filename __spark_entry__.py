@@ -2607,8 +2607,12 @@ def q_scd2_history(spark, sf_dir):
     # satisfying this predicate on the unique (key, version) id — and
     # re-proven by the DuckDB oracle hash (r06 optimization round).
     t = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    asof_hit = (F.col("valid_from") <= t) & (
-        F.col("valid_to").isNull() | (F.col("valid_to") > t)
+    # coalesced: a null valid_from is "not live at t" (false), as the
+    # join shape gave, never a null flag
+    asof_hit = F.coalesce(
+        (F.col("valid_from") <= t)
+        & (F.col("valid_to").isNull() | (F.col("valid_to") > t)),
+        F.lit(False),
     )
     return hist.select(
         "user_id",

@@ -174,11 +174,12 @@ class LocalFileIO(_PosixBase):
     def publish_atomic(self, path: str, data: str) -> None:
         d = os.path.dirname(path)
         tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
+        f = open(tmp, "w")
         try:
+            with f:
+                f.write(data)
+                f.flush()
+                os.fsync(f.fileno())
             # link fails with EEXIST if a concurrent writer already
             # published this version — optimistic concurrency, and the
             # published file appears fully formed to readers
@@ -219,19 +220,20 @@ class GenericFileIO(_PosixBase):
         )
         fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         try:
-            _write_all(fd, payload)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        try:
-            os.link(tmp, path)  # atomic claim: full content or EEXIST
-        except OSError as e:
-            if isinstance(e, FileExistsError):
-                raise  # lost the CAS race — caller maps to CommitConflict
-            if e.errno in (errno.EPERM, errno.EOPNOTSUPP, errno.EXDEV):
-                self._publish_exclusive_create(path, payload)
-            else:
-                raise
+            try:
+                _write_all(fd, payload)
+                os.fsync(fd)
+            finally:
+                os.close(fd)
+            try:
+                os.link(tmp, path)  # atomic claim: full content or EEXIST
+            except OSError as e:
+                if isinstance(e, FileExistsError):
+                    raise  # lost the CAS race — caller maps to CommitConflict
+                if e.errno in (errno.EPERM, errno.EOPNOTSUPP, errno.EXDEV):
+                    self._publish_exclusive_create(path, payload)
+                else:
+                    raise
         finally:
             os.unlink(tmp)
 

@@ -531,8 +531,8 @@ def shingle_jaccard_pairs(
     # shipped every bucket row across one more exchange and recomputed
     # the index branch per join side; this shape reuses the window's _s
     # partitioning (zero new exchanges before the pair dedup) and emits
-    # the identical pair multiset (ids sorted per bucket, so i<j ⇒
-    # id_a < id_b).
+    # the identical pair multiset (ids distinct and sorted per bucket, so
+    # i<j ⇒ id_a < id_b: a duplicate input id never pairs with itself).
     combos = F.expr(
         "flatten(transform(_ids, (x, i) -> "
         "transform(slice(_ids, i + 2, size(_ids)), "
@@ -540,7 +540,7 @@ def shingle_jaccard_pairs(
     )
     cand = (
         rare.groupBy("_s")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
+        .agg(F.array_sort(F.collect_set(id_col)).alias("_ids"))
         .filter(F.size("_ids") >= 2)
         .select(F.explode(combos).alias("_p"))
         .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))

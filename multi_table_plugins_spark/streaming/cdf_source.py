@@ -536,7 +536,8 @@ def replicate_table(
 
     Returns the StreamingQuery (``available_now=True`` processes the
     backlog and stops — incremental refresh; ``False`` runs
-    continuously). The merge ledger is keyed on (``app_id``, max SOURCE
+    continuously on the ``CONTINUOUS_TRIGGER_INTERVAL`` trigger). The
+    merge ledger is keyed on (``app_id``, max SOURCE
     version in the batch), so exactly-once survives a lost or recreated
     stream checkpoint; replicating multiple sources into one
     destination requires distinct ``app_id``s."""
@@ -604,4 +605,8 @@ def replicate_table(
     )
     if available_now:
         w = w.trigger(availableNow=True)
+    else:
+        from .cdc_pipeline import CONTINUOUS_TRIGGER_INTERVAL
+
+        w = w.trigger(processingTime=CONTINUOUS_TRIGGER_INTERVAL)
     return w.start()

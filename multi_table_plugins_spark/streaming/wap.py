@@ -86,11 +86,19 @@ def _read_marker(io: FileIO, warehouse: str, branch: str) -> "list[str]":
 def _write_marker(
     io: FileIO, warehouse: str, branch: str, tables: "list[str]"
 ) -> None:
+    """Publish the marker whole: ``publish_atomic`` writes the body under
+    a temp name and links it into place, so a crash mid-write leaves no
+    marker rather than torn JSON that would read as "no tables". A union
+    update removes the old marker first; a crash between the two leaves
+    none, and the stage that crashed is rerun before any publish, which
+    writes it again from the batch's full table set."""
     import json
 
     p = _marker_path(warehouse, branch)
     io.makedirs(os.path.dirname(p))
-    io.write_text(p, json.dumps({"branch": branch, "tables": sorted(tables)}))
+    if io.exists(p):
+        io.remove(p)
+    io.publish_atomic(p, json.dumps({"branch": branch, "tables": sorted(tables)}))
 
 
 def stage_cdc_batch(
@@ -116,9 +124,9 @@ def stage_cdc_batch(
     # durable staged-table set (see _marker_path): union with any
     # earlier marker so a crash-resumed stage keeps the full set
     io = get_fileio(apply_kw.get("io"))
-    tables = set(_read_marker(io, warehouse, branch))
-    tables.update(t for t in out.get("tables", {}) if not t.startswith("_"))
-    if tables:
+    marked = set(_read_marker(io, warehouse, branch))
+    tables = marked | {t for t in out.get("tables", {}) if not t.startswith("_")}
+    if tables != marked:
         _write_marker(io, warehouse, branch, sorted(tables))
     return out
 

@@ -4,6 +4,7 @@ error modes, and mid-stream schema evolution."""
 
 import glob
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,6 +73,61 @@ def test_streaming_replay_equality(spark, tmp_path, feed):
     assert len(recs) >= 3
     assert all("snapshot_id" in r and "rows_applied" in r for r in recs)
     assert all(r["watermark"] is not None for r in recs)
+
+
+def _trigger(q) -> str:
+    """The Scala trigger object the query was started with."""
+    return q._jsq.streamingQuery().trigger().toString()
+
+
+def _wait_until(cond, timeout=60.0):
+    deadline = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < deadline, f"not reached within {timeout} s"
+        time.sleep(0.1)
+
+
+def test_continuous_stream_polls_on_processing_time_trigger(spark, tmp_path, feed):
+    """A continuous stream runs on the fixed processing-time trigger (not
+    Spark's default 10 ms poll) and still applies a file that lands
+    after start, with lineage, within a bounded wait."""
+    feed_dir, files = feed
+    live = str(tmp_path / "live_feed")
+    os.makedirs(live)
+    os.link(files[0], os.path.join(live, os.path.basename(files[0])))
+    wh = str(tmp_path / "wh")
+
+    def applied_epochs():
+        if not os.path.isdir(os.path.join(wh, "_lineage")):
+            return set()
+        return {r["epoch"] for r in LineageLog(wh).read() if r["kind"] == "cdc_apply"}
+
+    q = run_cdc_stream(
+        spark, live, wh, str(tmp_path / "ckpt"), app_id="cont",
+        available_now=False, max_files_per_trigger=1, n_buckets=4,
+    )
+    try:
+        assert _trigger(q) == "ProcessingTimeTrigger(250)"
+        _wait_until(lambda: 0 in applied_epochs())
+        # link(2) makes the file appear whole, as a producer's rename would
+        os.link(files[1], os.path.join(live, os.path.basename(files[1])))
+        _wait_until(lambda: 1 in applied_epochs())
+    finally:
+        q.stop()
+    assert q.exception() is None
+    recs = [r for r in LineageLog(wh).read() if r["kind"] == "cdc_apply" and r["epoch"] == 1]
+    assert recs and sum(r["rows_applied"] for r in recs) > 0
+    _assert_final_state_equal(spark, wh, live)
+
+
+def test_available_now_stream_keeps_available_now_trigger(spark, tmp_path, feed):
+    feed_dir, _ = feed
+    q = run_cdc_stream(
+        spark, feed_dir, str(tmp_path / "wh"), str(tmp_path / "ckpt"),
+        app_id="an", max_files_per_trigger=4, n_buckets=4,
+    )
+    q.awaitTermination(300)
+    assert _trigger(q) == "AvailableNowTrigger"
 
 
 def test_kill_and_resume_from_checkpoint(spark, tmp_path, feed):

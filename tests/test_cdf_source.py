@@ -306,6 +306,49 @@ def test_replicate_table_converges_and_resumes_exactly_once(spark, tmp_path):
     assert v_after > v_dst
 
 
+def test_continuous_replica_polls_on_processing_time_trigger(spark, tmp_path):
+    """``replicate_table(available_now=False)`` runs on the fixed
+    processing-time trigger and applies a source commit made after start
+    within a bounded wait, its source version recorded in the replica's
+    ledger; ``available_now=True`` keeps the available-now trigger."""
+    from multi_table_plugins_spark.streaming.cdf_source import replicate_table
+
+    src_p = str(tmp_path / "src")
+    dst_p = str(tmp_path / "dst")
+    src = LakeTable.create(spark, src_p, SCHEMA, key="doc_id", n_buckets=4)
+    _apply(spark, src, [(i, "I", i, [i], "s") for i in range(20)], 0)
+
+    def replicated_version():
+        if not LakeTable.exists(dst_p):
+            return None
+        return LakeTable(spark, dst_p).last_committed_epoch("replica")
+
+    def wait_for_version(v, timeout=60.0):
+        deadline = time.monotonic() + timeout
+        while replicated_version() != v:
+            assert time.monotonic() < deadline, f"version {v} not replicated"
+            time.sleep(0.1)
+
+    q = replicate_table(spark, src_p, dst_p, str(tmp_path / "ck"), available_now=False)
+    try:
+        trigger = q._jsq.streamingQuery().trigger().toString()
+        assert trigger == "ProcessingTimeTrigger(250)"
+        wait_for_version(src.manifest()["version"])
+        _apply(spark, src, [(100, "U", 3, [33], "s2"), (101, "D", 7, None, None)], 1)
+        wait_for_version(src.manifest()["version"])
+    finally:
+        q.stop()
+    assert q.exception() is None
+    dst = LakeTable(spark, dst_p)
+    assert sorted(map(tuple, dst.read().collect())) == sorted(
+        map(tuple, src.read().collect())
+    )
+
+    q = replicate_table(spark, src_p, dst_p, str(tmp_path / "ck2"))
+    q.awaitTermination(120)
+    assert q._jsq.streamingQuery().trigger().toString() == "AvailableNowTrigger"
+
+
 def test_cdf_stream_survives_mid_stream_schema_evolution(spark, tmp_path):
     """A schema-evolving commit BETWEEN micro-batches must not kill the
     long-lived reader (regression: a frozen schema-version map raised

@@ -14,6 +14,7 @@ from multi_table_plugins_spark.operators.dedup import (
     minhash_dedup,
     minhash_signatures,
     ngram_jaccard,
+    shingle_jaccard_pairs,
     simhash64,
     simhash_near_dup_pairs,
 )
@@ -70,6 +71,15 @@ def test_ngram_jaccard_pairwise(spark):
     out = ngram_jaccard(df, "a", "b").collect()
     assert out[0]["jaccard"] == 1.0
     assert out[1]["jaccard"] < 0.1
+
+
+def test_shingle_jaccard_pairs_never_pair_a_duplicate_id_with_itself(spark):
+    sh = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (1, ["a", "b", "c"]), (2, ["a", "b", "d"]), (3, ["x"])],
+        "doc_id long, shingles array<string>",
+    )
+    pairs = {(r["id_a"], r["id_b"]) for r in shingle_jaccard_pairs(sh, threshold=0.0).collect()}
+    assert pairs == {(1, 2)}
 
 
 def test_simhash_near_dup(docs):

@@ -8,6 +8,7 @@ import sys
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -103,3 +104,20 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert {"doc_id", "tokens", "n_tok", "source"} <= set(df.columns)
+
+
+def test_scd2_asof_hit_is_false_for_null_valid_from(spark, tmp_path):
+    rows = [
+        (1, "2024-01-10 00:00:00", 7, "view", 1.0, None),
+        (2, "2024-01-20 00:00:00", 7, "click", 2.0, None),
+        (3, None, 8, "view", 3.0, None),
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts")).write.parquet(str(tmp_path / "events.parquet"))
+    df = entrymod.q_scd2_history(spark, str(tmp_path))
+    hits = {(r["user_id"], r["version_num"]): r["asof_hit"] for r in df.collect()}
+    assert hits == {(7, 1): True, (7, 2): False, (8, 1): False}
+    assert not df.schema["asof_hit"].nullable

@@ -126,6 +126,89 @@ def test_partitioned_write_forks_less_than_one_process_per_file(spark, tmp_path)
     assert started < 64, started
 
 
+def test_link_status_matches_hadoop_default(spark, tmp_path):
+    """Link targets are read in-process, and the statuses are Hadoop's:
+    the same fields for a symlink, a dangling symlink and a regular file,
+    and the same FileNotFoundException for a missing path."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
+    bound = _bound_fs(spark).getRawFileSystem()
+    assert bound.getClass().getName() == "mtp.localfs.NioRawLocalFileSystem"
+    default = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+    default.initialize(jvm.java.net.URI("file:///"), conf)
+    (tmp_path / "file").write_bytes(b"12345")
+    os.symlink("file", tmp_path / "link")
+    os.symlink(str(tmp_path / "gone"), tmp_path / "dangling")
+    for name in ("link", "dangling", "file"):
+        p = Path(str(tmp_path / name))
+        got, want = bound.getFileLinkStatus(p), default.getFileLinkStatus(p)
+        assert got.toString() == want.toString(), name
+        assert got.isSymlink() == (name != "file")
+        if got.isSymlink():
+            assert bound.getLinkTarget(p).toString() == default.getLinkTarget(p).toString()
+    assert bound.getFileLinkStatus(Path(str(tmp_path / "link"))).getLen() == 5
+    missing = Path(str(tmp_path / "missing"))
+    errors = []
+    for fs in (bound, default):
+        with pytest.raises(Exception, match="FileNotFoundException") as e:
+            fs.getFileLinkStatus(missing)
+        errors.append(str(e.value).splitlines()[-1])
+    assert errors[0] == errors[1]
+
+
+_STREAM_PROBE = """
+import os, sys
+from multi_table_plugins_spark.feed import FeedSpec, generate_feed
+from multi_table_plugins_spark.session import get_spark
+from multi_table_plugins_spark.streaming import run_cdc_stream
+
+work = sys.argv[1]
+generate_feed(os.path.join(work, "feed"), FeedSpec(
+    n_events=3000, n_tables=2, keys_per_table=200, n_files=3, seed=3))
+spark = get_spark("readlink-probe", cores=2, shuffle_partitions=4)
+q = run_cdc_stream(
+    spark, os.path.join(work, "feed"), os.path.join(work, "wh"),
+    os.path.join(work, "ckpt"), app_id="probe", max_files_per_trigger=1, n_buckets=2)
+q.awaitTermination(300)
+print("batches", sum(1 for p in q.recentProgress if p["numInputRows"]))
+jvm = spark.sparkContext._jvm
+os.symlink(os.path.join(work, "feed"), os.path.join(work, "link"))
+hadoop = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+hadoop.initialize(jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration())
+# Hadoop's own class execs readlink once here: proves the shim is on PATH
+hadoop.getFileLinkStatus(jvm.org.apache.hadoop.fs.Path(os.path.join(work, "link")))
+spark.stop()
+"""
+
+
+def test_available_now_stream_execs_no_readlink(tmp_path):
+    """Checkpoint renames go through the FileContext link status; a
+    several-batch stream must exec no ``readlink``. A ``readlink`` shim
+    first on the JVM's PATH logs every exec."""
+    shim = tmp_path / "bin"
+    shim.mkdir()
+    log = tmp_path / "readlink.log"
+    (shim / "readlink").write_text(
+        f'#!/bin/sh\necho "$*" >> "{log}"\nexec {shutil.which("readlink")} "$@"\n'
+    )
+    (shim / "readlink").chmod(0o755)
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    env.update(
+        PATH=f"{shim}{os.pathsep}{env['PATH']}",
+        PYTHONPATH=os.pathsep.join(filter(None, [REPO, env.get("PYTHONPATH")])),
+        SPARK_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _STREAM_PROBE, str(tmp_path)], capture_output=True,
+        text=True, env=env, cwd=str(tmp_path), timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "batches 3" in proc.stdout, proc.stdout
+    execs = log.read_text().splitlines()
+    assert execs == [str(tmp_path / "link")], execs
+
+
 def test_class_missing_from_running_jvm_keeps_default(spark, monkeypatch, caplog):
     monkeypatch.setitem(
         session.LOCALFS_CONF, "spark.hadoop.fs.file.impl", "mtp.localfs.Missing"

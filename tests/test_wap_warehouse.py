@@ -9,6 +9,9 @@ stage or publish after a crash is idempotent; a rejected batch
 discards cleanly; main advancing independently conflicts the publish.
 """
 
+import builtins
+import errno
+import json
 import os
 
 import pytest
@@ -203,6 +206,68 @@ def test_publish_resumes_after_crash_past_last_table(spark, tmp_path):
     for t in ("t0", "t1"):
         head = LakeTable(spark, os.path.join(wh, t)).manifest()["version"]
         assert snap["tables"][t] == head
+
+
+class _TornFile:
+    """A text file whose first write lands half its data and then fails,
+    as a full disk or a kill mid-write would leave it."""
+
+    def __init__(self, f):
+        self._f = f
+
+    def write(self, data):
+        self._f.write(data[: len(data) // 2])
+        self._f.flush()
+        raise OSError(errno.ENOSPC, "injected failure mid-write")
+
+    def __getattr__(self, name):
+        return getattr(self._f, name)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self._f.close()
+
+
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_marker_write_failure_never_leaves_a_torn_marker(tmp_path, monkeypatch, backend):
+    from multi_table_plugins_spark.lakehouse import fileio
+    from multi_table_plugins_spark.streaming.wap import (
+        _marker_path,
+        _read_marker,
+        _write_marker,
+    )
+
+    io, wh = get_fileio(backend), str(tmp_path / "wh")
+    marker = _marker_path(wh, "b")
+
+    def torn_open(path, mode="r", *a, **kw):
+        f = builtins.open(path, mode, *a, **kw)
+        return _TornFile(f) if "w" in mode else f
+
+    def torn_write_all(fd, payload):
+        os.write(fd, payload[: len(payload) // 2])
+        raise OSError(errno.ENOSPC, "injected failure mid-write")
+
+    def write_failing(tables):
+        with monkeypatch.context() as m:
+            m.setattr(fileio, "open", torn_open, raising=False)
+            m.setattr(fileio, "_write_all", torn_write_all)
+            with pytest.raises(OSError, match="injected"):
+                _write_marker(io, wh, "b", tables)
+        # whatever is left at the marker path is a whole marker
+        if os.path.exists(marker):
+            json.loads(open(marker).read())
+        assert not [n for n in os.listdir(os.path.dirname(marker)) if ".tmp" in n]
+
+    write_failing(["t0"])
+    assert not os.path.exists(marker)
+    _write_marker(io, wh, "b", ["t0"])
+    write_failing(["t0", "t1"])  # a union update fails mid-write
+    # rerunning the stage writes the full set
+    _write_marker(io, wh, "b", ["t0", "t1"])
+    assert _read_marker(io, wh, "b") == ["t0", "t1"]
 
 
 def test_discard_and_conflict(spark, tmp_path):
