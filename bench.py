@@ -157,7 +157,6 @@ def _one_cdc_run(cores: int, feed_dir: str) -> float:
         max_files_per_trigger=MFT,
         n_buckets=16,
         compact_threshold=16,
-        max_parallel_tables=8,
         validate=True,
     )
     q.awaitTermination()

@@ -8,19 +8,18 @@ reference's "read/write all tables in one job" shape
 (MultiTableDBSource.java:61-66, one MapReduce job over N tables) on the
 write side:
 
-  1. validate + LWW-dedup the whole batch keyed ``(table_name, doc_id)``
-     (one hash-agg shuffle, map-side partial);
+  1. tag every (already validated) event with its table and its key's
+     bucket — versions are appended, LWW resolves at read/compaction;
   2. one ``partitionBy(table, bucket)`` parquet write to a staging dir
-     (second shuffle co-locates each (table,bucket) into one file);
+     (one shuffle co-locates each (table,bucket) into one file);
   3. driver: place each table's files into its table dir through the
      FileIO seam (hard links on local fs, copy/conditional-PUT on the
      generic/object-store backend — see fileio.py), read row counts
      from parquet footers (no job), and make one atomic ledger-checked
      manifest commit per table.
 
-Row/delete/invalid counts ride the write job via ``Observation`` — zero
-extra passes. Invalid rows are written in a (rare) second job only when
-the observation reports any.
+Row/delete counts, the watermark and the max LSN ride the write job via
+``Observation`` — zero extra passes.
 
 Crash safety: a crash after some tables committed and others not is
 healed on replay — committed tables' ledgers skip, uncommitted apply.
@@ -34,6 +33,7 @@ import os
 import re
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -54,14 +54,19 @@ from .fileio import FileIO, get_fileio
 from .table import (
     DATA_DIR,
     DELTA_WRITE_OPTS,
+    CommitConflict,
     LakeTable,
     _STATS_V,
-    _conform,
     _footer_meta,
+    _violations,
 )
 
 _BUCKET_COL = "_bucket"
 _TABLE_COL = "_table"
+
+#: threads committing tables concurrently — inside one ``merge_many``
+#: call, and across the per-table calls of a fast-path fallback
+COMMIT_THREADS = 8
 
 
 def merge_many(
@@ -74,40 +79,43 @@ def merge_many(
     table_mode: str = "mor",
     compact_threshold: int = 16,
     minor_compact_threshold: int | None = None,
-    table_col: str = "table_name",
     key_col: "str | list[str]" = "doc_id",
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-    allowed_tables: set[str] | None = None,
-    batch_dedup: bool = False,
     io: FileIO | None = None,
     on_violation: str = "fail",
     branch: "str | None" = None,
 ) -> dict[str, dict]:
     """Apply a change-feed batch to every table it mentions; returns
-    {table: merge metrics}. One Spark job (two if invalid rows exist).
+    {table: merge metrics} plus a ``"_batch"`` entry of batch-wide
+    counts. One Spark job writes every table's rows; a table on the slow
+    lane (changed bucket layout or CHECK constraints) adds its own.
 
-    ``batch_dedup=False`` (default) appends every change version as an
-    LSM-style sorted-run delta — read/compaction resolves LWW. This is
-    the throughput path: the heavy token arrays are shuffled exactly once
-    (for write co-location) and never sorted or aggregated.
-    ``batch_dedup=True`` first reduces the batch to one row per key via a
-    keys-only max(lsn) hash-agg (fixed-width buffer — fast) joined back
-    broadcast — worth it when hot keys dominate the batch (e.g. a
-    counter-like key receiving most of the feed).
+    Every change version is appended as an LSM-style sorted-run delta —
+    read/compaction resolves LWW. The heavy token arrays are shuffled
+    exactly once (for write co-location) and never sorted or aggregated.
 
     ``key_col`` may be a list for compound primary keys (reference
     parity: DBTableInfo.java:28-50 carries ``primaryKey: List<String>``);
-    dedup, bucketing, and the per-table LWW merge then key on the column
-    tuple in the given order.
+    bucketing and the per-table LWW merge then key on the column tuple
+    in the given order. A table created with a different key (or key
+    order) refuses the batch.
+
+    Table names are checked here and only here: an unsafe name (see
+    :func:`is_safe_table_name`) is listed in ``_batch.unsafe_tables``
+    and never written.
+
+    If any table fails to commit, the others still commit and a
+    ``RuntimeError`` is raised carrying ``partial_results`` (the
+    committed tables' metrics) and ``failures`` ({table: exception}).
+
+    No warehouse snapshot is published here — the caller publishes one
+    per complete batch (streaming/cdc_pipeline.py).
 
     ``branch`` — stage the whole batch on that named branch of EVERY
     touched table instead of committing to main (warehouse-level
     write-audit-publish, streaming/wap.py): same one-job write, same
     per-table ledger semantics, but commits land on each table's branch
-    manifest chain, no warehouse snapshot is published (snapshots pin
-    MAIN versions only), and nothing is visible to main readers until
-    the branches are fast-forwarded."""
+    manifest chain, and nothing is visible to main readers until the
+    branches are fast-forwarded."""
     io = get_fileio(io)
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     payload_schema = payload_schema_of_changes(batch_df.schema)
@@ -115,12 +123,10 @@ def merge_many(
     internal_names = [f.name for f in internal_fields]
 
     norm = (
-        batch_df.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-        .withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-        .withColumn(_TABLE_COL, F.col(table_col))
+        batch_df.withColumn(LSN_COL, F.col("lsn").cast("long"))
+        .withColumn(DELETED_COL, F.col("op") == F.lit("D"))
+        .withColumn(_TABLE_COL, F.col("table_name"))
     )
-    if allowed_tables is not None:
-        norm = norm.filter(F.col(_TABLE_COL).isin(*sorted(allowed_tables)))
 
     obs = Observation()
     norm = norm.observe(
@@ -128,29 +134,15 @@ def merge_many(
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.col(DELETED_COL).cast("int")).alias("deletes"),
         F.max("ts").alias("watermark") if "ts" in batch_df.columns else F.lit(None).alias("watermark"),
-        F.max(lsn_col).alias("max_lsn"),
+        F.max("lsn").alias("max_lsn"),
     )
 
-    if batch_dedup:
-        # keys-only argmax (fixed-width hash agg, map-side partial), then
-        # broadcast-join winners back — arrays never enter an agg buffer.
-        # NB: max_by(struct(<array>)) would fall back to a sort-based
-        # aggregate (variable-length buffers don't fit HashAggregate).
-        winners = norm.groupBy(_TABLE_COL, *key_cols).agg(
-            F.max(LSN_COL).alias(LSN_COL)
-        )
-        # no broadcast hint: the winners set is bounded by the batch's
-        # distinct-key count, which can be the whole batch — AQE picks a
-        # broadcast join at runtime when it actually fits the threshold
-        deduped = norm.join(winners, [_TABLE_COL, *key_cols, LSN_COL], "inner")
-    else:
-        deduped = norm
     keep = [_TABLE_COL, *key_cols] + [
         c for c in internal_names if c not in key_cols
     ] + [LSN_COL, DELETED_COL]
     # same murmur3-over-key-tuple expression as LakeTable._bucket_expr —
     # the write-side bucket ids must match the table layout exactly
-    bucketed = deduped.select(*keep).withColumn(
+    bucketed = norm.select(*keep).withColumn(
         _BUCKET_COL,
         F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets)),
     )
@@ -186,8 +178,6 @@ def merge_many(
         and commits through the table's own write path — O(this
         table's share of the batch), the hot path untouched for every
         other table."""
-        from .table import CommitConflict, ConstraintViolation
-
         sdir = os.path.join(staging, tdir)
         files = [
             os.path.join(sdir, b, f)
@@ -203,27 +193,9 @@ def merge_many(
         file_schema = file_schema.add(LSN_COL, "long").add(
             DELETED_COL, "boolean"
         )
-        df = spark.read.schema(file_schema).parquet(*files)
-        n_viol = 0
-        cons = lt.constraints()
-        if cons:
-            live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            viol = F.lit(False)
-            for cexpr in cons.values():
-                viol = viol | ~F.coalesce(F.expr(cexpr), F.lit(True))
-            viol = viol & live
-            if on_violation == "fail":
-                sample = df.filter(viol).limit(3).collect()
-                if sample:
-                    raise ConstraintViolation(
-                        f"batch violates constraint(s) {sorted(cons)} on "
-                        f"table {table!r}; sample: "
-                        + "; ".join(str(r.asDict()) for r in sample)
-                    )
-            else:
-                n_viol = df.filter(viol).count()
-                if n_viol:
-                    df = df.filter(~viol)
+        df, viol_obs = lt._enforce_constraints(
+            spark.read.schema(file_schema).parquet(*files), on_violation
+        )
         for attempt in range(3):
             nb = lt.n_buckets
             bucketed2 = df.withColumn(_BUCKET_COL, lt._bucket_expr(nb))
@@ -253,6 +225,7 @@ def merge_many(
             m["rows_applied"] = sum(
                 e["rows"] for es in new_entries.values() for e in es
             )
+            n_viol = _violations(viol_obs)
             if n_viol:
                 m["constraint_violations_dropped"] = n_viol
         results[table] = m
@@ -348,17 +321,14 @@ def merge_many(
     # run it threaded so 100 tables don't serialize the micro-batch.
     # Exceptions are collected per table (not propagated out of ex.map)
     # and staging removal runs in finally: a failing table (e.g. the
-    # n_buckets layout-mismatch refusal) must neither abort its siblings'
-    # commits nor leak the staging directory on every fallback retry.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # key-order refusal) must neither abort its siblings' commits nor
+    # leak the staging directory.
     commit_failures: dict[str, Exception] = {}
 
     def _commit_guarded(tdir: str) -> None:
         # Exception only: a KeyboardInterrupt/SystemExit during a commit
-        # must propagate out of ex.map and abort the batch (the caller's
-        # isolated-fallback retry is for table failures, not interrupts);
-        # the finally below still reclaims staging on the way out.
+        # must propagate out of ex.map and abort the batch; the finally
+        # below still reclaims staging on the way out.
         try:
             _commit_table(tdir)
         except Exception as e:
@@ -366,7 +336,7 @@ def merge_many(
 
     try:
         if len(tdirs) > 1:
-            with ThreadPoolExecutor(max_workers=8) as ex:
+            with ThreadPoolExecutor(max_workers=COMMIT_THREADS) as ex:
                 list(ex.map(_commit_guarded, tdirs))
         else:
             for d in tdirs:
@@ -377,44 +347,16 @@ def merge_many(
         io.remove_dir_if_empty(os.path.dirname(staging))
 
     if commit_failures:
-        # committed tables' ledgers make the retry a no-op for them; the
-        # caller's isolated fallback path re-applies only the failures.
-        # Attach the successful tables' metrics so the caller can still
-        # emit their lineage (the fallback would only see ledger-skips).
+        # committed tables' ledgers make a retry a no-op for them; the
+        # caller re-applies only the failed tables
         first_t, first_e = sorted(commit_failures.items())[0]
         err = RuntimeError(
             f"commit failed for table(s) {sorted(commit_failures)}: "
             f"{first_t}: {first_e}"
         )
         err.partial_results = dict(results)
-        err.batch_stats = {
-            "rows_in": got.get("rows_in", 0),
-            "deletes": got.get("deletes", 0) or 0,
-            "watermark": got.get("watermark"),
-            "max_lsn": got.get("max_lsn"),
-            "unsafe_tables": sorted(unsafe),
-        }
+        err.failures = dict(commit_failures)
         raise err from first_e
-    # every table committed → publish the cross-table-consistent
-    # warehouse snapshot pinning each touched table's resulting version
-    # (a crash before this point leaves readers on the last complete
-    # batch — see lakehouse/snapshots.py). A snapshot publish failure
-    # does not fail the durably committed batch; it is logged as degraded.
-    # pin the versions each commit ITSELF produced (never a re-read of
-    # "latest" — a concurrent writer's half-committed batch must not
-    # leak into the pin map); skipped replays pin their table's current
-    # version, which with sequential per-app epochs already contains
-    # the skipped batch
-    versions = {
-        t: m["version"]
-        for t, m in results.items()
-        if not t.startswith("_") and m.get("version") is not None
-    }
-    if branch is not None:
-        versions = {}  # staged commits must never pin a snapshot
-    from .snapshots import publish_batch_snapshot
-
-    publish_batch_snapshot(io, warehouse, versions, app_id, epoch)
     results["_batch"] = {
         "rows_in": got.get("rows_in", 0),
         "deletes": got.get("deletes", 0) or 0,

@@ -49,7 +49,7 @@ import time
 import uuid
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..schemas import (
@@ -149,6 +149,12 @@ class ConstraintViolation(RuntimeError):
 
 class CommitConflict(RuntimeError):
     """Another writer published this manifest version first."""
+
+
+def _violations(obs: "Observation | None") -> int:
+    """Rows ``LakeTable._enforce_constraints`` dropped, once the write
+    job carrying its Observation has run (0 without one)."""
+    return int(obs.get.get("nv") or 0) if obs is not None else 0
 
 
 def _footer_rows(path: str, io: FileIO | None = None) -> int:
@@ -1335,21 +1341,15 @@ class LakeTable:
         without a column's stats are conservatively never pruned on it;
         the next compaction records the new set on its base files."""
         new = _check_stats_columns(cols, self.schema(), self.key_cols)
-        for _ in range(10):
-            m = json.loads(json.dumps(self.manifest()))
+
+        def mutate(m: dict) -> bool:
             if (m.get("stats_columns") or []) == new:
-                return {"stats_columns": new, "version": m["version"]}
+                return False
             m["stats_columns"] = new
-            self._advance(m, "set-stats-columns")
-            try:
-                self._publish(m)
-                return {"stats_columns": new, "version": m["version"]}
-            except CommitConflict:
-                self._manifest_cache_version = -1
-                continue
-        raise CommitConflict(
-            f"gave up after 10 set-stats-columns attempts at {self.path}"
-        )
+            return True
+
+        m = self._commit_metadata("set-stats-columns", mutate)
+        return {"stats_columns": new, "version": m["version"]}
 
     def sort_order(self) -> "dict | None":
         """The table's persisted default sort order, or None."""
@@ -1397,24 +1397,18 @@ class LakeTable:
                 "zorder": bool(zorder),
                 "files_per_bucket": int(files_per_bucket),
             }
-        for _ in range(10):
-            m = json.loads(json.dumps(self.manifest()))
+
+        def mutate(m: dict) -> bool:
             if m.get("sort_order") == new:
-                return {"sort_order": new, "version": m["version"]}
+                return False
             if new is None:
                 m.pop("sort_order", None)
             else:
                 m["sort_order"] = new
-            self._advance(m, "set-sort-order")
-            try:
-                self._publish(m)
-                return {"sort_order": new, "version": m["version"]}
-            except CommitConflict:
-                self._manifest_cache_version = -1
-                continue
-        raise CommitConflict(
-            f"gave up after 10 set-sort-order attempts at {self.path}"
-        )
+            return True
+
+        m = self._commit_metadata("set-sort-order", mutate)
+        return {"sort_order": new, "version": m["version"]}
 
     def schema(self) -> StructType:
         m = self.manifest()
@@ -2596,9 +2590,10 @@ class LakeTable:
                 f"incoming column(s) {sorted(reserved)} are reserved for "
                 "bookkeeping and cannot evolve into the table schema"
             )
-        for _ in range(10):
-            self._check_not_resurrected(self.manifest(), incoming_payload)
-            cur = self.schema()
+
+        def mutate(m: dict) -> bool:
+            self._check_not_resurrected(m, incoming_payload)
+            cur = schema_from_json(m["schemas"][str(m["current_schema_version"])])
             merged = merge_schemas(cur, incoming_payload)
             # The key's non-null contract never widens: parquet scans
             # report every column nullable, so any batch DERIVED from a
@@ -2620,21 +2615,15 @@ class LakeTable:
                 ]
             )
             if merged.json() == cur.json():
-                return self.manifest()["current_schema_version"]
-            m = json.loads(json.dumps(self.manifest()))  # deep copy
+                return False
             new_sv = m["current_schema_version"] + 1
             m["schemas"][str(new_sv)] = merged.json()
             m["current_schema_version"] = new_sv
-            self._advance(m, "evolve-schema")
-            try:
-                self._publish(m)
-                return new_sv
-            except CommitConflict:
-                self._manifest_cache_version = -1  # force reload
-                continue
-        raise CommitConflict(
-            f"gave up after 10 schema-evolution attempts at {self.path}"
-        )
+            return True
+
+        return self._commit_metadata("evolve-schema", mutate)[
+            "current_schema_version"
+        ]
 
     def drop_column(self, name: str) -> int:
         """Schema evolution downward: DROP a payload column. O(metadata)
@@ -2654,14 +2643,14 @@ class LakeTable:
             raise ValueError(f"cannot drop key column {name!r}")
         if name in BOOKKEEPING_COLS or name == _BUCKET_COL:
             raise ValueError(f"cannot drop bookkeeping column {name!r}")
-        for _ in range(10):
-            m = json.loads(json.dumps(self.manifest()))
+
+        def mutate(m: dict) -> bool:
             cur = schema_from_json(
                 m["schemas"][str(m["current_schema_version"])]
             )
             if name not in cur.fieldNames():
                 if name in (m.get("dropped_columns") or []):
-                    return m["current_schema_version"]  # idempotent re-drop
+                    return False  # idempotent re-drop
                 # a typo'd name silently "succeeding" would let an
                 # operator believe a (PII) column is gone when it isn't
                 raise ValueError(
@@ -2696,16 +2685,11 @@ class LakeTable:
             m.setdefault("dropped_columns", [])
             if name not in m["dropped_columns"]:
                 m["dropped_columns"].append(name)
-            self._advance(m, "drop-column")
-            try:
-                self._publish(m)
-                return new_sv
-            except CommitConflict:
-                self._manifest_cache_version = -1
-                continue
-        raise CommitConflict(
-            f"gave up after 10 drop-column attempts at {self.path}"
-        )
+            return True
+
+        return self._commit_metadata("drop-column", mutate)[
+            "current_schema_version"
+        ]
 
     def _check_not_resurrected(
         self, m: dict, incoming: StructType
@@ -2734,6 +2718,39 @@ class LakeTable:
         """The table's CHECK constraints ({name: boolean SQL expr})."""
         return dict(self.manifest().get("constraints") or {})
 
+    def _enforce_constraints(
+        self, df: DataFrame, on_violation: str
+    ) -> "tuple[DataFrame, Observation | None]":
+        """Apply the table's CHECK constraints to the LIVE rows of the
+        internal-shape frame ``df`` (SQL CHECK semantics — NULL passes;
+        tombstones are exempt). ``"fail"`` raises
+        :class:`ConstraintViolation` with up to 3 sample rows before
+        anything is written; ``"drop"`` filters violators out and
+        returns an Observation counting them on the caller's write job
+        (CollectMetrics is a pushdown barrier, so the filter above it
+        cannot shrink the observed count) — read it with
+        :func:`_violations`. Each caller picks what ``df`` holds: raw
+        events (CDC apply) or resolved rows (``merge_into``)."""
+        cons = self.constraints()
+        if not cons:
+            return df, None
+        live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+        viol = F.lit(False)
+        for cexpr in cons.values():
+            viol = viol | ~F.coalesce(F.expr(cexpr), F.lit(True))
+        viol = viol & live
+        if on_violation == "fail":
+            sample = df.filter(viol).limit(3).collect()
+            if sample:
+                raise ConstraintViolation(
+                    f"batch violates constraint(s) {sorted(cons)} "
+                    f"at {self.path}; sample: "
+                    + "; ".join(str(r.asDict()) for r in sample)
+                )
+            return df, None
+        obs = Observation()
+        return df.observe(obs, F.sum(viol.cast("long")).alias("nv")).filter(~viol), obs
+
     def add_constraint(
         self, name: str, expr: str, validate: bool = True
     ) -> None:
@@ -2761,11 +2778,11 @@ class LakeTable:
                 f"constraint {name!r} must be a boolean expression, "
                 f"got {analyzed.schema['_c'].dataType.simpleString()}"
             )
-        for _ in range(10):
-            m = json.loads(json.dumps(self.manifest()))
+
+        def mutate(m: dict) -> bool:
             cs = m.setdefault("constraints", {})
             if cs.get(name) == expr:
-                return  # idempotent re-add
+                return False  # idempotent re-add
             if name in cs:
                 raise ValueError(
                     f"constraint {name!r} already exists with a "
@@ -2787,35 +2804,40 @@ class LakeTable:
                         f"existing rows violate constraint {name!r} ({expr})"
                     )
             cs[name] = expr
-            self._advance(m, "add-constraint")
-            try:
-                self._publish(m)
-                return
-            except CommitConflict:
-                self._manifest_cache_version = -1
-                continue
-        raise CommitConflict(
-            f"gave up after 10 add-constraint attempts at {self.path}"
-        )
+            return True
+
+        self._commit_metadata("add-constraint", mutate)
 
     def drop_constraint(self, name: str) -> None:
-        for _ in range(10):
-            m = json.loads(json.dumps(self.manifest()))
+        def mutate(m: dict) -> bool:
             cs = m.get("constraints") or {}
             if name not in cs:
-                return  # idempotent
+                return False  # idempotent
             del cs[name]
             m["constraints"] = cs
-            self._advance(m, "drop-constraint")
+            return True
+
+        self._commit_metadata("drop-constraint", mutate)
+
+    def _commit_metadata(self, op: str, mutate) -> dict:
+        """Metadata-only commit with optimistic retry. Each of up to 10
+        attempts deep-copies the current manifest and lets ``mutate``
+        edit it in place; ``mutate`` returns False when the manifest
+        already holds the change (nothing is published). Otherwise the
+        copy is advanced and published as the next version, and a lost
+        version race (CommitConflict) reloads the winner's manifest for
+        the next attempt. Returns the manifest the table is now at."""
+        for _ in range(10):
+            m = json.loads(json.dumps(self.manifest()))
+            if not mutate(m):
+                return m
+            self._advance(m, op)
             try:
                 self._publish(m)
-                return
+                return m
             except CommitConflict:
-                self._manifest_cache_version = -1
-                continue
-        raise CommitConflict(
-            f"gave up after 10 drop-constraint attempts at {self.path}"
-        )
+                self._manifest_cache_version = -1  # force reload
+        raise CommitConflict(f"gave up after 10 {op} attempts at {self.path}")
 
     def _advance(self, m: dict, op: str = "append") -> None:
         m["parent_snapshot_id"] = m["snapshot_id"]
@@ -3006,7 +3028,6 @@ class LakeTable:
         base_norm = changes.withColumn(
             LSN_COL, F.col(lsn_col).cast("long")
         ).withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-        from pyspark.sql import Observation
 
         # Patch mode is read-modify-write: the written rows bake in the
         # table state read by _patch_resolve, so the commit carries
@@ -3050,30 +3071,7 @@ class LakeTable:
             # patch-mode violations that only appear after coalescing
             # against the current row (e.g. CHECK a <= b with a patched
             # and b carried forward).
-            viol_obs = None
-            cons = self.manifest().get("constraints") or {}
-            if cons:
-                live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-                viol = F.lit(False)
-                for cexpr in cons.values():
-                    viol = viol | ~F.coalesce(F.expr(cexpr), F.lit(True))
-                viol = viol & live
-                if on_violation == "fail":
-                    sample = deduped.filter(viol).limit(3).collect()
-                    if sample:
-                        raise ConstraintViolation(
-                            f"batch violates constraint(s) {sorted(cons)} "
-                            f"at {self.path}; sample: "
-                            + "; ".join(str(r.asDict()) for r in sample)
-                        )
-                else:  # drop: count rides the write job (CollectMetrics
-                    # is a pushdown barrier, so the filter above it
-                    # cannot shrink the observed count)
-                    viol_obs = Observation()
-                    deduped = deduped.observe(
-                        viol_obs,
-                        F.sum(viol.cast("long")).alias("nv"),
-                    ).filter(~viol)
+            deduped, viol_obs = self._enforce_constraints(deduped, on_violation)
             # Observation piggybacks row/delete counts on the write job
             # itself — no second pass over the batch for metrics.
             nb = self.n_buckets
@@ -3091,9 +3089,7 @@ class LakeTable:
             got = obs.get
             rows = got.get("rows", 0)
             n_del_row = got.get("deletes", 0) or 0
-            n_viol = (
-                int(viol_obs.get.get("nv") or 0) if viol_obs is not None else 0
-            )
+            n_viol = _violations(viol_obs)
 
             # Publish through commit_delta: delta commits are append-only,
             # so its reload-and-retry loop makes a concurrent compaction/

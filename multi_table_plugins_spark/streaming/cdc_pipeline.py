@@ -18,15 +18,17 @@ Two drivers over the same batch-apply core:
     schema for the life of a query, so the streaming driver takes the
     union schema; evolution is still applied per-batch by the table layer.)
 
-Fan-out parallelism: tables are applied concurrently from a thread pool —
-Spark schedules the per-table merge jobs simultaneously, so many small
-tables don't serialize (the reference's analog was one MapReduce split per
-table running in parallel task slots).
+One writer: every batch goes through ``lakehouse.multi_merge.merge_many``,
+which applies all of its tables in one Spark job and commits them from a
+pool of threads (the reference's analog was one MapReduce job over N
+tables, MultiTableDBSource.java:61-66).
 
 Error channel: three modes per MultiTableConf.java:48-50 — ``fail`` aborts
 the batch, ``skip`` drops the failing table's records, ``error-port``
 emits one ERROR_SCHEMA row per failed table (plus row-level validation
-errors) to ``<warehouse>/_errors``.
+errors) to ``<warehouse>/_errors``. Under ``skip`` and ``error-port`` a
+failed one-job apply falls back to one ``merge_many`` call per table that
+did not commit, so only the failing tables lose the batch.
 """
 
 from __future__ import annotations
@@ -35,12 +37,14 @@ import os
 import traceback
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .. import errors as errmod
-from ..catalog import discover_tables, lake_fqn
+from ..catalog import lake_fqn
 from ..errors import ERROR_PORT, FAIL, MODES, SKIP, TableFailure, split_valid_invalid
-from ..lakehouse import LakeTable
+from ..lakehouse import LakeTable, multi_merge
+from ..lakehouse.fileio import get_fileio
+from ..lakehouse.snapshots import publish_batch_snapshot
 from ..schemas import CHANGE_FEED_SCHEMA, payload_schema_of_changes
 from .lineage import LineageLog
 
@@ -137,10 +141,7 @@ def apply_cdc_batch(
     table_mode: str = "mor",
     compact_threshold: int = 16,
     minor_compact_threshold: int | None = None,
-    max_parallel_tables: int = 8,
     validate: bool = True,
-    fast_path: bool = True,
-    batch_dedup: bool = False,
     lineage: LineageLog | None = None,
     io=None,
     key_col: "str | list[str]" = "doc_id",
@@ -164,12 +165,17 @@ def apply_cdc_batch(
     as the ``change_op`` payload column, ``ts`` as ``event_ts``). Read
     validity intervals back with :func:`read_history`.
 
-    ``fast_path`` applies ALL tables with one Spark job
-    (lakehouse.multi_merge) — validation/delete/watermark counts ride the
-    job via Observation. If that job fails and ``error_mode`` is not
-    ``fail``, the batch is retried on the per-table isolated path so a
-    poison table cannot take down its siblings (E2/E3 semantics,
-    ErrorCollectingRecordReader.java:58-73).
+    Every table is written by ``lakehouse.multi_merge.merge_many``: one
+    Spark job for the whole batch, with validation/delete/watermark
+    counts riding it via Observation. If that call fails and
+    ``error_mode`` is not ``fail``, the batch falls back to one
+    ``merge_many`` call per table that did not commit, so a poison table
+    cannot take down its siblings (E2/E3 semantics,
+    ErrorCollectingRecordReader.java:58-73); each table that still fails
+    is reported in ``failed`` (and on the error port). Either way, CHECK
+    constraints are enforced per live event and a table whose key
+    differs from ``key_col`` refuses the batch. A batch with no failed
+    table publishes one warehouse snapshot pinning its tables' versions.
 
     ``branch`` — STAGE the batch instead of committing it: every
     touched table's commit lands on that named branch of the table
@@ -181,8 +187,6 @@ def apply_cdc_batch(
     write-audit-publish flow.
     """
     assert error_mode in MODES, error_mode
-    from ..lakehouse.fileio import get_fileio
-
     # driver-side commit IO backend ("local" | "generic" | FileIO);
     # default resolves $MTP_FILEIO — see lakehouse/fileio.py
     io = get_fileio(io)
@@ -190,8 +194,6 @@ def apply_cdc_batch(
         lineage = LineageLog(warehouse)
 
     if history_tables:
-        from ..errors import invalid_condition as _invalid
-
         # refuse a clashing feed BEFORE any table commits: checking
         # after the main apply would permanently commit current-state
         # epochs (the ledger then skips them on replay) while capturing
@@ -207,15 +209,11 @@ def apply_cdc_batch(
         main = apply_cdc_batch(
             spark, batch_df, warehouse, epoch, app_id, error_mode,
             allow_tables, block_tables, n_buckets, table_mode,
-            compact_threshold, minor_compact_threshold,
-            max_parallel_tables, validate, fast_path, batch_dedup,
+            compact_threshold, minor_compact_threshold, validate,
             lineage, io, key_col, history_tables=False, branch=branch,
         )
-        src = batch_df.filter(~_invalid()) if validate else batch_df
-        if allow_tables:
-            src = src.filter(F.col("table_name").isin(*allow_tables))
-        if block_tables:
-            src = src.filter(~F.col("table_name").isin(*block_tables))
+        src = batch_df.filter(~errmod.invalid_condition()) if validate else batch_df
+        src = _route(src, allow_tables, block_tables)
         # never capture history OF a history-suffixed table (no
         # x__history__history); a feed table literally named x__history
         # alongside x is refused downstream by merge_many's key guard
@@ -233,8 +231,7 @@ def apply_cdc_batch(
         hres = apply_cdc_batch(
             spark, hist, warehouse, epoch, app_id, error_mode,
             (), (), n_buckets, table_mode,
-            compact_threshold, minor_compact_threshold,
-            max_parallel_tables, False, fast_path, batch_dedup,
+            compact_threshold, minor_compact_threshold, False,
             lineage, io, keys + ["lsn_key"], history_tables=False,
             branch=branch,
         )
@@ -245,10 +242,6 @@ def apply_cdc_batch(
             hres.get("failed", ())
         )
         return main
-
-    from pyspark.sql import Observation
-
-    from ..errors import error_projection, invalid_condition
 
     good = batch_df
     obs_v = None
@@ -262,156 +255,247 @@ def apply_cdc_batch(
         else:
             # count invalid rows on the apply job itself (no extra scan);
             # materialize them afterwards only if the count is non-zero
-            is_bad = invalid_condition()
+            is_bad = errmod.invalid_condition()
             obs_v = Observation()
             observed = batch_df.observe(
                 obs_v, F.sum(is_bad.cast("int")).alias("n_bad")
             )
             good = observed.filter(~is_bad)
-    if allow_tables:
-        good = good.filter(F.col("table_name").isin(*allow_tables))
-    if block_tables:
-        good = good.filter(~F.col("table_name").isin(*block_tables))
+    good = _route(good, allow_tables, block_tables)
 
-    if fast_path:
-        try:
-            from ..lakehouse.multi_merge import merge_many
-
-            results = merge_many(
-                spark,
-                good,
+    merge_kw = dict(
+        app_id=app_id,
+        epoch=epoch,
+        n_buckets=n_buckets,
+        table_mode=table_mode,
+        compact_threshold=compact_threshold,
+        minor_compact_threshold=minor_compact_threshold,
+        io=io,
+        key_col=key_col,
+        # CHECK-constraint violations follow the pipeline's error
+        # discipline: FAIL aborts the batch, skip / error-port drop
+        # them with a counted metric
+        on_violation="fail" if error_mode == FAIL else "drop",
+        branch=branch,
+    )
+    failures: dict[str, Exception] = {}
+    try:
+        results = multi_merge.merge_many(spark, good, warehouse, **merge_kw)
+    except Exception as e:  # KeyboardInterrupt/SystemExit must propagate
+        if error_mode == FAIL:
+            raise
+        lineage.emit(
+            {
+                "kind": "fast_path_fallback",
+                "app_id": app_id,
+                "epoch": epoch,
+                "error": str(e),
+            }
+        )
+        results, failures, stats = _apply_per_table(
+            spark, batch_df, warehouse, e, error_mode,
+            allow_tables, block_tables, validate, merge_kw,
+        )
+    else:
+        stats = results.pop("_batch")
+        if (
+            error_mode == ERROR_PORT
+            and obs_v is not None
+            and (obs_v.get.get("n_bad") or 0) > 0
+        ):
+            write_errors(
+                batch_df.filter(errmod.invalid_condition()).select(
+                    *errmod.error_projection(app_id, columns=batch_df.columns)
+                ),
                 warehouse,
                 app_id=app_id,
                 epoch=epoch,
-                n_buckets=n_buckets,
-                table_mode=table_mode,
-                compact_threshold=compact_threshold,
-                minor_compact_threshold=minor_compact_threshold,
-                batch_dedup=batch_dedup,
-                io=io,
-                key_col=key_col,
-                # CHECK-constraint violations follow the pipeline's
-                # error discipline: FAIL aborts the batch, skip /
-                # error-port drop them with a counted metric
-                on_violation="fail" if error_mode == FAIL else "drop",
-                branch=branch,
+                kind="validation",
             )
-            batch_stats = results.pop("_batch", {})
-            unsafe_names = batch_stats.get("unsafe_tables", [])
-            for bad_name in unsafe_names:
-                lineage.emit(
-                    {
-                        "kind": "table_rejected",
-                        "app_id": app_id,
-                        "epoch": epoch,
-                        "table": bad_name,
-                        "error": "unsafe table name",
-                    }
-                )
-            if unsafe_names and error_mode == ERROR_PORT:
-                write_errors(
-                    errmod.error_df(
-                        spark,
-                        [
-                            errmod.ErrorRecord(
-                                reference_name=app_id,
-                                error_message=f"unsafe table name {n!r} rejected",
-                                exception_class_name="UnsafeTableName",
-                                table_name=n,
-                            )
-                            for n in unsafe_names
-                        ],
-                    ),
-                    warehouse,
-                    app_id=app_id,
-                    epoch=epoch,
-                    kind="unsafe",
-                )
-            if obs_v is not None and (obs_v.get.get("n_bad") or 0) > 0:
-                if error_mode == ERROR_PORT:
-                    write_errors(
-                        batch_df.filter(invalid_condition()).select(
-                            *error_projection(
-                                app_id, columns=batch_df.columns
-                            )
-                        ),
-                        warehouse,
-                        app_id=app_id,
-                        epoch=epoch,
-                        kind="validation",
-                    )
-            fields = [
-                f.name for f in payload_schema_of_changes(good.schema).fields
-            ]
-            for t, m in results.items():
-                lineage.emit(
-                    {
-                        "kind": "cdc_apply",
-                        "app_id": app_id,
-                        "epoch": epoch,
-                        "table": t,
-                        "fqn": lake_fqn(warehouse, t),
-                        "fields": fields,
-                        "watermark": batch_stats.get("watermark"),
-                        "max_lsn": batch_stats.get("max_lsn"),
-                        **m,
-                    }
-                )
-            return {"tables": results, "failed": [], "epoch": epoch}
-        except TableFailure:
-            raise
-        except Exception as e:  # KeyboardInterrupt/SystemExit must propagate
-            if error_mode == FAIL:
-                raise
-            # tables that DID commit before a sibling failed carry their
-            # metrics on the exception — emit their lineage now (the
-            # isolated retry will only see their ledgers skip)
-            partial = getattr(e, "partial_results", None) or {}
-            pstats = getattr(e, "batch_stats", None) or {}
-            for t, pm in partial.items():
-                if not pm.get("skipped"):
-                    lineage.emit(
-                        {
-                            "kind": "cdc_apply",
-                            "app_id": app_id,
-                            "epoch": epoch,
-                            "table": t,
-                            "fqn": lake_fqn(warehouse, t),
-                            "watermark": pstats.get("watermark"),
-                            "max_lsn": pstats.get("max_lsn"),
-                            **pm,
-                        }
-                    )
-            lineage.emit(
-                {
-                    "kind": "fast_path_fallback",
-                    "app_id": app_id,
-                    "epoch": epoch,
-                    "error": str(e),
-                }
-            )
-            # fall through to the isolated path
 
-    return _apply_isolated(
-        spark,
-        batch_df,
-        warehouse,
-        epoch,
-        app_id,
-        error_mode,
-        allow_tables,
-        block_tables,
-        n_buckets,
-        table_mode,
-        compact_threshold,
-        minor_compact_threshold,
-        max_parallel_tables,
-        validate,
-        lineage,
-        io,
-        key_col,
-        branch,
+    _report_rejected(
+        spark, lineage, warehouse, app_id, epoch, error_mode,
+        stats["unsafe_tables"], failures,
     )
+    fields = [f.name for f in payload_schema_of_changes(batch_df.schema).fields]
+    _emit_applied(lineage, warehouse, app_id, epoch, fields, stats, results)
+    # a COMPLETE batch advances the warehouse snapshot, pinning the
+    # versions each commit ITSELF produced (never a re-read of "latest" —
+    # a concurrent writer's half-committed batch must not leak into the
+    # pin map). An incomplete batch publishes nothing — readers stay on
+    # the last complete one — and staged commits never pin one.
+    if not failures and branch is None:
+        publish_batch_snapshot(
+            io,
+            warehouse,
+            {t: m["version"] for t, m in results.items() if m.get("version") is not None},
+            app_id,
+            epoch,
+            lineage=lineage,
+        )
+    return {"tables": results, "failed": sorted(failures), "epoch": epoch}
+
+
+def _route(
+    df: DataFrame, allow_tables: tuple[str, ...], block_tables: tuple[str, ...]
+) -> DataFrame:
+    """Keep the events of the allowed, unblocked tables."""
+    if allow_tables:
+        df = df.filter(F.col("table_name").isin(*allow_tables))
+    if block_tables:
+        df = df.filter(~F.col("table_name").isin(*block_tables))
+    return df
+
+
+def _apply_per_table(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    warehouse: str,
+    error: Exception,
+    error_mode: str,
+    allow_tables: tuple[str, ...],
+    block_tables: tuple[str, ...],
+    validate: bool,
+    merge_kw: dict,
+) -> "tuple[dict[str, dict], dict[str, Exception], dict]":
+    """The fast-path fallback: after the one-job ``merge_many`` raised
+    ``error``, re-validate the batch and call ``merge_many`` once per
+    table that did not commit, so a failure stays with its table.
+    Returns (committed results, {table: exception}, batch stats)."""
+    batch_df = batch_df.persist()
+    try:
+        # a fresh validated frame: the fast path's Observations are
+        # never read again (only the first finished action sets one)
+        good = batch_df
+        if validate:
+            app_id = merge_kw["app_id"]
+            good, bad = split_valid_invalid(batch_df, reference_name=app_id)
+            _flush_validation_errors(
+                spark, bad, warehouse, app_id, error_mode, epoch=merge_kw["epoch"]
+            )
+        good = _route(good, allow_tables, block_tables)
+        wm = F.max("ts") if "ts" in good.columns else F.lit(None)
+        per_table = (
+            good.groupBy("table_name")
+            .agg(wm.alias("wm"), F.max("lsn").alias("max_lsn"))
+            .collect()
+        )
+        # tables that committed before a sibling failed are not re-run
+        results: dict[str, dict] = dict(getattr(error, "partial_results", None) or {})
+        failures: dict[str, Exception] = {}
+        unsafe: list[str] = []
+
+        def apply_one(t: str) -> None:
+            try:
+                r = multi_merge.merge_many(
+                    spark,
+                    good.filter(F.col("table_name").eqNullSafe(t)),
+                    warehouse,
+                    **merge_kw,
+                )
+            except Exception as e:  # isolated per table; interrupts propagate
+                failures[t] = getattr(e, "failures", {}).get(t, e)
+                return
+            unsafe.extend(r.pop("_batch")["unsafe_tables"])
+            results.update(r)
+
+        todo = [r["table_name"] for r in per_table if r["table_name"] not in results]
+        with ThreadPoolExecutor(max_workers=multi_merge.COMMIT_THREADS) as ex:
+            list(ex.map(apply_one, todo))
+
+        def top(col: str):
+            return max((r[col] for r in per_table if r[col] is not None), default=None)
+
+        stats = {
+            "watermark": top("wm"),
+            "max_lsn": top("max_lsn"),
+            "unsafe_tables": sorted(unsafe),
+        }
+        return results, failures, stats
+    finally:
+        batch_df.unpersist()
+
+
+def _report_rejected(
+    spark, lineage, warehouse, app_id, epoch, error_mode, unsafe, failures
+) -> None:
+    """Record the tables that did not apply: one ``table_rejected``
+    lineage record per unsafe name and one ``table_failure`` record per
+    failed table, plus one error row each under error-port."""
+    for n in unsafe:
+        lineage.emit(
+            {
+                "kind": "table_rejected",
+                "app_id": app_id,
+                "epoch": epoch,
+                "table": n,
+                "error": "unsafe table name",
+            }
+        )
+    for t, e in sorted(failures.items()):
+        lineage.emit(
+            {
+                "kind": "table_failure",
+                "app_id": app_id,
+                "epoch": epoch,
+                "table": t,
+                "error": str(e),
+            }
+        )
+    if error_mode != ERROR_PORT:
+        return
+    rows = {
+        "unsafe": [
+            (n, f"unsafe table name {n!r} rejected", "UnsafeTableName")
+            for n in unsafe
+        ],
+        "failure": [
+            (
+                t,
+                "".join(traceback.format_exception_only(type(e), e)).strip(),
+                type(e).__name__,
+            )
+            for t, e in sorted(failures.items())
+        ],
+    }
+    for kind, recs in rows.items():
+        if recs:
+            write_errors(
+                errmod.error_df(
+                    spark,
+                    [
+                        errmod.ErrorRecord(
+                            reference_name=app_id,
+                            error_message=msg,
+                            exception_class_name=cls,
+                            table_name=t,
+                        )
+                        for t, msg, cls in recs
+                    ],
+                ),
+                warehouse,
+                app_id=app_id,
+                epoch=epoch,
+                kind=kind,
+            )
+
+
+def _emit_applied(lineage, warehouse, app_id, epoch, fields, stats, results) -> None:
+    """One ``cdc_apply`` lineage record per committed table."""
+    for t, m in results.items():
+        lineage.emit(
+            {
+                "kind": "cdc_apply",
+                "app_id": app_id,
+                "epoch": epoch,
+                "table": t,
+                "fqn": lake_fqn(warehouse, t),
+                "fields": fields,
+                "watermark": stats.get("watermark"),
+                "max_lsn": stats.get("max_lsn"),
+                **m,
+            }
+        )
 
 
 def _flush_validation_errors(
@@ -435,187 +519,6 @@ def _flush_validation_errors(
         return n_bad
     finally:
         bad.unpersist()
-
-
-def _apply_isolated(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    warehouse: str,
-    epoch: int,
-    app_id: str,
-    error_mode: str,
-    allow_tables: tuple[str, ...],
-    block_tables: tuple[str, ...],
-    n_buckets: int,
-    table_mode: str,
-    compact_threshold: int,
-    minor_compact_threshold: int | None,
-    max_parallel_tables: int,
-    validate: bool,
-    lineage: LineageLog,
-    io=None,
-    key_col: "str | list[str]" = "doc_id",
-    branch: "str | None" = None,
-) -> dict:
-    """Per-table isolated apply: one merge job per table, failures
-    contained to their table (slow path / error-isolation path)."""
-    batch_df = batch_df.persist()
-    try:
-        if validate:
-            good, bad = split_valid_invalid(batch_df, reference_name=app_id)
-            _flush_validation_errors(
-                spark, bad, warehouse, app_id, error_mode, epoch=epoch
-            )
-        else:
-            good = batch_df
-
-        from ..lakehouse.multi_merge import is_safe_table_name
-
-        names = sorted(
-            r[0] for r in good.select("table_name").distinct().collect()
-        )
-        names = discover_tables(names, allow_tables, block_tables)
-        # same path-traversal guard as the fast path: feed-supplied names
-        # become warehouse directory names
-        unsafe_names = [n for n in names if not is_safe_table_name(n)]
-        for bad_name in unsafe_names:
-            names.remove(bad_name)
-            lineage.emit(
-                {
-                    "kind": "table_rejected",
-                    "app_id": app_id,
-                    "epoch": epoch,
-                    "table": bad_name,
-                    "error": "unsafe table name",
-                }
-            )
-        if unsafe_names and error_mode == ERROR_PORT:
-            write_errors(
-                errmod.error_df(
-                    spark,
-                    [
-                        errmod.ErrorRecord(
-                            reference_name=app_id,
-                            error_message=f"unsafe table name {n!r} rejected",
-                            exception_class_name="UnsafeTableName",
-                            table_name=n,
-                        )
-                        for n in unsafe_names
-                    ],
-                ),
-                warehouse,
-                app_id=app_id,
-                epoch=epoch,
-                kind="unsafe",
-            )
-        payload_schema = payload_schema_of_changes(good.schema)
-
-        wm_row = good.agg(
-            F.max("ts").alias("wm"), F.max("lsn").alias("max_lsn")
-        ).collect()[0]
-
-        results: dict[str, dict] = {}
-        failures: dict[str, BaseException] = {}
-
-        def apply_one(t: str) -> None:
-            try:
-                changes = good.filter(F.col("table_name") == t).drop(
-                    "table_name", "ts"
-                )
-                lt = LakeTable.get_or_create(
-                    spark,
-                    os.path.join(warehouse, t),
-                    payload_schema,
-                    key=key_col,
-                    n_buckets=n_buckets,
-                    mode=table_mode,
-                    compact_threshold=compact_threshold,
-                    minor_compact_threshold=minor_compact_threshold,
-                    io=io,
-                    branch=branch,
-                )
-                m = lt.merge_into(
-                    changes,
-                    app_id=app_id,
-                    epoch=epoch,
-                    on_violation="fail" if error_mode == FAIL else "drop",
-                )
-                results[t] = m
-                lineage.emit(
-                    {
-                        "kind": "cdc_apply",
-                        "app_id": app_id,
-                        "epoch": epoch,
-                        "table": t,
-                        "fqn": lake_fqn(warehouse, t),
-                        "fields": [f.name for f in lt.schema().fields],
-                        "watermark": wm_row["wm"],
-                        "max_lsn": wm_row["max_lsn"],
-                        **m,
-                    }
-                )
-            except Exception as e:  # isolated per table; interrupts propagate
-                failures[t] = e
-
-        if max_parallel_tables > 1 and len(names) > 1:
-            with ThreadPoolExecutor(max_workers=max_parallel_tables) as ex:
-                list(ex.map(apply_one, names))
-        else:
-            for t in names:
-                apply_one(t)
-
-        for t, e in failures.items():
-            if error_mode == FAIL:
-                raise TableFailure(t, e)
-            lineage.emit(
-                {
-                    "kind": "table_failure",
-                    "app_id": app_id,
-                    "epoch": epoch,
-                    "table": t,
-                    "error": str(e),
-                }
-            )
-        if failures and error_mode == ERROR_PORT:
-            write_errors(
-                errmod.error_df(
-                    spark,
-                    [
-                        errmod.ErrorRecord(
-                            reference_name=app_id,
-                            error_message="".join(
-                                traceback.format_exception_only(type(e), e)
-                            ).strip(),
-                            exception_class_name=type(e).__name__,
-                            table_name=t,
-                        )
-                        for t, e in sorted(failures.items())
-                    ],
-                ),
-                warehouse,
-                app_id=app_id,
-                epoch=epoch,
-                kind="failure",
-            )
-        # a COMPLETE batch on the isolated path advances the warehouse
-        # snapshot too (else a fast-path fallback or fast_path=False
-        # would silently stall snapshot readers on ever-staler pins);
-        # an incomplete batch publishes nothing — readers stay on the
-        # last complete one
-        if results and not failures and branch is None:
-            versions = {
-                t: m["version"]
-                for t, m in results.items()
-                if m.get("version") is not None
-            }
-            from ..lakehouse.snapshots import publish_batch_snapshot
-
-            publish_batch_snapshot(
-                io, warehouse, versions, app_id, epoch, lineage=lineage
-            )
-        return {"tables": results, "failed": sorted(failures), "epoch": epoch}
-    finally:
-        batch_df.unpersist()
 
 
 def run_cdc_stream(

@@ -7,6 +7,11 @@
         [--continuous] [--max-files-per-trigger 32] [--n-buckets 64] \
         [--error-mode error-port] [--block-tables a,b]
 
+Each micro-batch is applied to all of its tables by one Spark job. If that
+job fails under --error-mode skip or error-port, every table that did not
+commit is re-applied on its own; a table that fails again skips the batch
+(error-port also writes an error row for it) while its siblings commit.
+
 Build the zip with:  (cd <repo> && zip -r mtp.zip multi_table_plugins_spark)
 and add  --driver-class-path <repo>/multi_table_plugins_spark/jvm/mtp-localfs.jar
 so Hadoop's local filesystem sets file modes without forking chmod (the
@@ -47,7 +52,6 @@ def main() -> None:
     p.add_argument("--allow-tables", default="")
     p.add_argument("--block-tables", default="")
     p.add_argument("--watermark", default="10 minutes")
-    p.add_argument("--batch-dedup", action="store_true")
     p.add_argument("--progress-listener", action="store_true",
                    help="also log engine-reported per-trigger progress "
                         "to <warehouse>/_lineage/progress.jsonl")
@@ -87,7 +91,6 @@ def main() -> None:
         error_mode=args.error_mode,
         allow_tables=tuple(t for t in args.allow_tables.split(",") if t),
         block_tables=tuple(t for t in args.block_tables.split(",") if t),
-        batch_dedup=args.batch_dedup,
         progress_listener=args.progress_listener,
         io=args.fileio,
         history_tables=args.history_tables,

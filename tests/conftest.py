@@ -18,3 +18,22 @@ def spark():
 @pytest.fixture()
 def tmp_table_dir(tmp_path):
     return str(tmp_path / "table")
+
+
+@pytest.fixture()
+def fail_next_merge_many(monkeypatch):
+    """Returns ``arm()``: once armed, the next
+    ``lakehouse.multi_merge.merge_many`` call raises (one shot), so the
+    ``apply_cdc_batch`` running it takes its per-table fallback."""
+    from multi_table_plugins_spark.lakehouse import multi_merge
+
+    orig = multi_merge.merge_many
+
+    def arm() -> None:
+        def once(*a, **kw):
+            monkeypatch.setattr(multi_merge, "merge_many", orig)
+            raise RuntimeError("injected one-job apply failure")
+
+        monkeypatch.setattr(multi_merge, "merge_many", once)
+
+    return arm

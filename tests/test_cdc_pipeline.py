@@ -8,10 +8,19 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from multi_table_plugins_spark.feed import FeedSpec, generate_feed, expected_final_state
-from multi_table_plugins_spark.lakehouse import LakeTable
+from multi_table_plugins_spark.lakehouse import LakeTable, latest_snapshot
+from multi_table_plugins_spark.lakehouse.fileio import get_fileio
 from multi_table_plugins_spark.schemas import CHANGE_FEED_SCHEMA
 from multi_table_plugins_spark.streaming import (
     apply_cdc_batch,
@@ -225,3 +234,126 @@ def test_mid_stream_schema_evolution(spark, tmp_path):
     lt = LakeTable(spark, os.path.join(wh, "t00"))
     assert lt.read().filter(F.col("lang").isNull()).count() > 0
     assert lt.read().filter(F.col("lang").isNotNull()).count() > 0
+
+
+KEYED_FEED = StructType(
+    [
+        StructField("lsn", LongType(), False),
+        StructField("table_name", StringType(), False),
+        StructField("op", StringType(), False),
+        StructField("k1", StringType(), False),
+        StructField("k2", LongType(), False),
+        StructField("tokens", ArrayType(IntegerType()), True),
+        StructField("n_tok", IntegerType(), True),
+        StructField("ts", TimestampType(), True),
+    ]
+)
+
+
+def _keyed(spark, rows):
+    from datetime import datetime
+
+    t0 = datetime(2026, 1, 1)
+    return spark.createDataFrame(
+        [(l, t, o, a, b, [1] * n, n, t0) for l, t, o, a, b, n in rows],
+        KEYED_FEED,
+    )
+
+
+@pytest.mark.parametrize("mode", ["skip", "error-port"])
+def test_key_order_mismatch_refused_on_fallback(spark, tmp_path, mode):
+    """A batch whose key_col reorders ``ta``'s key is refused under every
+    error mode. The one-job apply commits the new table ``tb`` and fails
+    on ``ta``; the per-table fallback re-runs only ``ta``, which fails
+    again — it is reported once, ``tb`` keeps exactly one apply record,
+    and the incomplete batch publishes no snapshot."""
+    wh = str(tmp_path / "wh")
+    apply_cdc_batch(
+        spark, _keyed(spark, [(1, "ta", "I", "x", 1, 2)]), wh, epoch=0,
+        app_id="kg", n_buckets=4, key_col=["k1", "k2"],
+    )
+    v0 = LakeTable(spark, os.path.join(wh, "ta")).manifest()["version"]
+    snap0 = latest_snapshot(get_fileio(None), wh)
+    assert snap0["epoch"] == 0
+
+    out = apply_cdc_batch(
+        spark,
+        _keyed(spark, [(2, "ta", "U", "x", 1, 3), (3, "tb", "I", "y", 2, 1)]),
+        wh, epoch=1, app_id="kg", n_buckets=4, key_col=["k2", "k1"],
+        error_mode=mode,
+    )
+    assert out["failed"] == ["ta"] and set(out["tables"]) == {"tb"}
+    ta = LakeTable(spark, os.path.join(wh, "ta"))
+    assert ta.manifest()["version"] == v0
+    assert {r["n_tok"] for r in ta.read().collect()} == {2}
+    tb = LakeTable(spark, os.path.join(wh, "tb"))
+    assert tb.last_committed_epoch("kg") == 1 and tb.read().count() == 1
+
+    recs = [r for r in LineageLog(wh).read() if r.get("epoch") == 1]
+    (fail,) = [r for r in recs if r["kind"] == "table_failure"]
+    assert fail["table"] == "ta" and "key" in fail["error"]
+    assert [r["table"] for r in recs if r["kind"] == "cdc_apply"] == ["tb"]
+    assert any(r["kind"] == "fast_path_fallback" for r in recs)
+
+    errs = read_errors(spark, wh).collect()
+    if mode == "error-port":
+        (err,) = errs
+        assert err["table_name"] == "ta"
+        assert err["exception_class_name"] == "ValueError"
+    else:
+        assert errs == []
+    assert latest_snapshot(get_fileio(None), wh) == snap0
+
+
+def test_fallback_checks_constraints_per_live_event(
+    spark, tmp_path, fail_next_merge_many
+):
+    """The per-table fallback checks CHECK constraints per live change
+    event, as the one-job apply does — not on the LWW-resolved rows. Key
+    ``a``'s violating event is dropped even though a later event makes
+    its resolved row valid."""
+    from datetime import datetime
+
+    t0 = datetime(2026, 1, 1)
+    wh = str(tmp_path / "wh")
+    apply_cdc_batch(
+        spark,
+        spark.createDataFrame(
+            [(1, "c0", "I", "z", [1], 1, "ok", t0),
+             (2, "c1", "I", "z", [1], 1, "ok", t0)],
+            CHANGE_FEED_SCHEMA,
+        ),
+        wh, epoch=0, app_id="ck", n_buckets=2,
+    )
+    LakeTable(spark, os.path.join(wh, "c0")).add_constraint(
+        "no_bad", "source <> 'bad'"
+    )
+    fail_next_merge_many()
+    out = apply_cdc_batch(
+        spark,
+        spark.createDataFrame(
+            [
+                (10, "c0", "I", "a", [1], 1, "bad", t0),
+                (11, "c0", "U", "a", [2], 1, "ok", t0),
+                (12, "c0", "I", "b", [3], 1, "bad", t0),
+                (13, "c1", "I", "b", [3], 1, "bad", t0),
+            ],
+            CHANGE_FEED_SCHEMA,
+        ),
+        wh, epoch=1, app_id="ck", n_buckets=2, error_mode="skip",
+    )
+    assert out["failed"] == []
+    assert out["tables"]["c0"]["constraint_violations_dropped"] == 2
+    assert "constraint_violations_dropped" not in out["tables"]["c1"]
+    c0 = LakeTable(spark, os.path.join(wh, "c0"))
+    assert {r["doc_id"]: r["source"] for r in c0.read().collect()} == {
+        "z": "ok",
+        "a": "ok",
+    }
+    recs = [r for r in LineageLog(wh).read() if r.get("epoch") == 1]
+    assert any(r["kind"] == "fast_path_fallback" for r in recs)
+    assert sorted(r["table"] for r in recs if r["kind"] == "cdc_apply") == [
+        "c0",
+        "c1",
+    ]
+    assert latest_snapshot(get_fileio(None), wh)["epoch"] == 1

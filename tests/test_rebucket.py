@@ -180,7 +180,7 @@ def test_fast_path_handles_rebucketed_table(spark, tmp_path):
     multi-table fast path must keep working: the divergent table takes
     the slow lane (re-bucketed to its own layout), siblings stay on the
     zero-copy lane, and the warehouse snapshot still advances."""
-    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+    from multi_table_plugins_spark.streaming.cdc_pipeline import apply_cdc_batch
     from multi_table_plugins_spark.lakehouse.snapshots import latest_snapshot
     from multi_table_plugins_spark.lakehouse.fileio import get_fileio
     from pyspark.sql.types import StructField, StructType, StringType
@@ -197,7 +197,7 @@ def test_fast_path_handles_rebucketed_table(spark, tmp_path):
     )
 
     wh = str(tmp_path / "wh")
-    merge_many(
+    apply_cdc_batch(
         spark,
         spark.createDataFrame(
             [("t0", i, "I", i, [i], "s") for i in range(10)]
@@ -208,11 +208,13 @@ def test_fast_path_handles_rebucketed_table(spark, tmp_path):
         app_id="rb",
         epoch=0,
         n_buckets=4,
+        error_mode="fail",
+        validate=False,
     )
     import os as _os
 
     LakeTable(spark, _os.path.join(wh, "t0")).rebucket(8)
-    merge_many(
+    apply_cdc_batch(
         spark,
         spark.createDataFrame(
             [("t0", 1000, "I", 50, [5], "late"),
@@ -223,6 +225,8 @@ def test_fast_path_handles_rebucketed_table(spark, tmp_path):
         app_id="rb",
         epoch=1,
         n_buckets=4,
+        error_mode="fail",
+        validate=False,
     )
     t0 = LakeTable(spark, _os.path.join(wh, "t0"))
     t1 = LakeTable(spark, _os.path.join(wh, "t1"))

@@ -20,7 +20,7 @@ def test_reserved_names_rejected():
     assert is_safe_table_name("a_b")  # interior underscores stay legal
 
 
-def test_isolated_path_rejects_traversal(spark, tmp_path):
+def test_isolated_path_rejects_traversal(spark, tmp_path, fail_next_merge_many):
     t0 = datetime(2026, 1, 1)
     rows = [
         (1, "good_t", "I", "a", [1], 1, "web", t0),
@@ -30,10 +30,10 @@ def test_isolated_path_rejects_traversal(spark, tmp_path):
     wh = str(tmp_path / "wh")
     os.makedirs(wh)
     before = set(os.listdir(str(tmp_path)))
-    # force the slow/isolated path directly
+    # force the per-table fallback: the one-job apply fails once
+    fail_next_merge_many()
     apply_cdc_batch(
         spark, df, wh, epoch=0, app_id="sec2", error_mode="error-port",
-        fast_path=False,
     )
     assert LakeTable.exists(os.path.join(wh, "good_t"))
     assert set(os.listdir(str(tmp_path))) == before

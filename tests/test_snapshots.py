@@ -23,7 +23,7 @@ from multi_table_plugins_spark.lakehouse import (
     publish_snapshot,
 )
 from multi_table_plugins_spark.lakehouse.fileio import get_fileio
-from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+from multi_table_plugins_spark.streaming.cdc_pipeline import apply_cdc_batch
 
 FEED = StructType(
     [
@@ -41,15 +41,20 @@ def _batch(spark, rows):
 
 
 def _merge(spark, wh, rows, epoch):
-    return merge_many(
+    """One batch through the pipeline (which publishes the snapshot);
+    ``fail`` mode raises a table's commit failure instead of isolating
+    it."""
+    return apply_cdc_batch(
         spark,
         _batch(spark, rows),
         wh,
-        app_id="snap",
         epoch=epoch,
+        app_id="snap",
+        error_mode="fail",
+        validate=False,
         n_buckets=2,
         key_col="doc_id",
-    )
+    )["tables"]
 
 
 def test_batch_publishes_snapshot_and_reads_are_consistent(spark, tmp_path):
@@ -186,14 +191,13 @@ def test_snapshot_read_supports_pruning_kwargs(spark, tmp_path):
     assert got.count() == 10
 
 
-def test_isolated_apply_path_publishes_snapshots(spark, tmp_path):
-    """fast_path=False (and the fallback path) must advance the
-    warehouse snapshot on complete batches too."""
-    from multi_table_plugins_spark.streaming.cdc_pipeline import (
-        apply_cdc_batch,
-    )
-
+def test_isolated_apply_path_publishes_snapshots(
+    spark, tmp_path, fail_next_merge_many
+):
+    """The per-table fallback must advance the warehouse snapshot on
+    complete batches too."""
     wh = str(tmp_path / "wh")
+    fail_next_merge_many()
     apply_cdc_batch(
         spark,
         _batch(
@@ -203,7 +207,6 @@ def test_isolated_apply_path_publishes_snapshots(spark, tmp_path):
         wh,
         epoch=0,
         app_id="iso",
-        fast_path=False,
         validate=False,
         n_buckets=2,
         key_col="doc_id",
@@ -245,14 +248,11 @@ def test_fast_path_snapshot_publish_failure_is_recorded(
 
 
 def test_isolated_path_snapshot_publish_failure_is_recorded(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, fail_next_merge_many
 ):
-    from multi_table_plugins_spark.streaming.cdc_pipeline import (
-        apply_cdc_batch,
-    )
-
     wh = str(tmp_path / "wh")
     _fail_publish(monkeypatch)
+    fail_next_merge_many()
     out = apply_cdc_batch(
         spark,
         _batch(
@@ -262,7 +262,6 @@ def test_isolated_path_snapshot_publish_failure_is_recorded(
         wh,
         epoch=3,
         app_id="iso",
-        fast_path=False,
         validate=False,
         n_buckets=2,
         key_col="doc_id",

@@ -65,12 +65,15 @@ def _state(spark, wh, t, **kw):
     }
 
 
-@pytest.fixture(params=[True, False], ids=["fast", "isolated"])
-def fast_path(request):
-    return request.param
+@pytest.fixture(params=["fast", "isolated"])
+def arm_route(request, fail_next_merge_many):
+    """Called right before the staged batch: ``isolated`` makes its
+    one-job apply fail once, so the batch lands through the per-table
+    fallback."""
+    return fail_next_merge_many if request.param == "isolated" else (lambda: None)
 
 
-def test_stage_audit_publish_with_snapshot(spark, tmp_path, fast_path):
+def test_stage_audit_publish_with_snapshot(spark, tmp_path, arm_route):
     wh = str(tmp_path / "wh")
     apply_cdc_batch(spark, _feed(spark, 1, 12), wh, epoch=0, app_id="w",
                     n_buckets=2)
@@ -82,9 +85,10 @@ def test_stage_audit_publish_with_snapshot(spark, tmp_path, fast_path):
         for t in ("t0", "t1")
     }
 
+    arm_route()
     res = stage_cdc_batch(
         spark, _feed(spark, 100, 12, op="U"), wh, epoch=1, app_id="w",
-        n_buckets=2, fast_path=fast_path,
+        n_buckets=2,
     )
     assert res["branch"] == "wap-w-1"
     assert set(staged_tables(wh, "wap-w-1")) == {"t0", "t1"}
