@@ -28,7 +28,6 @@ from multi_table_plugins_spark.functions.textfns import (  # noqa: E402
     quality_score,
     token_count,
 )
-from multi_table_plugins_spark.functions.vectors import cosine_sim  # noqa: E402
 from multi_table_plugins_spark.operators.router import union_tagged  # noqa: E402
 from multi_table_plugins_spark.operators.similarity import (  # noqa: E402
     cosine_topk,
@@ -614,11 +613,6 @@ FROM documents GROUP BY md5(text)
 """
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    docs = _r(spark, sf_dir, "documents")
-    return docs.select("doc_id", doc_fingerprint("text").alias("fingerprint"))
-
-
 #: DuckDB expression for textfns.doc_fingerprint — shared by every
 #: oracle that keys on content fingerprints so they cannot drift apart
 FP_SQL = (
@@ -627,41 +621,10 @@ FP_SQL = (
     ")), ' '))"
 )
 
-O_DOC_FINGERPRINT = f"""
-SELECT doc_id, {FP_SQL} AS fingerprint
-FROM documents
-"""
-
-
-def q_token_count_quality(spark, sf_dir):
-    docs = _r(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").cast("long").alias("n_tokens"),
-        F.round(
-            F.col("n_chars").cast("double") / F.greatest(token_count("text"), F.lit(1)),
-            4,
-        ).alias("mean_token_len"),
-    )
-
-
-O_TOKEN_COUNT = """
-SELECT doc_id,
-       CAST(length(regexp_extract_all(text, '[A-Za-z0-9]+')) AS BIGINT) AS n_tokens,
-       ROUND(CAST(n_chars AS DOUBLE) /
-             GREATEST(length(regexp_extract_all(text, '[A-Za-z0-9]+')), 1), 4) AS mean_token_len
-FROM documents
-"""
-
 
 def _lang_hits_sql(lang: str) -> str:
     pat = r"\b(" + "|".join(LANG_STOPWORDS[lang]) + r")\b"
     return f"length(regexp_extract_all(lower(text), '{pat}'))"
-
-
-def q_lang_id(spark, sf_dir):
-    docs = _r(spark, sf_dir, "documents")
-    return docs.select("doc_id", lang_id("text").alias("lang_pred"))
 
 
 def _o_lang_pred_expr() -> str:
@@ -676,19 +639,13 @@ def _o_lang_pred_expr() -> str:
     return best
 
 
-def _o_lang_id() -> str:
-    return f"SELECT doc_id, {_o_lang_pred_expr()} AS lang_pred FROM documents"
-
-
 def q_text_metrics(spark, sf_dir):
     """Text-analysis battery in ONE pass over ``documents``: language-id,
     composite quality score, token count + mean token length, and the
     content fingerprint — the four per-doc metrics every curation
     pipeline computes together, so computing them in one projection on a
     shared scan is both the realistic usage AND the consolidation that
-    keeps the registry inside the driver's 50-entry budget (the four
-    single-metric queries remain as functions; this battery carries
-    their driver-oracle coverage)."""
+    keeps the registry inside the driver's 50-entry budget."""
     docs = _r(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -1192,34 +1149,6 @@ WITH w AS (
   JOIN sh sb ON sb.doc_id = c.id_b
 )
 SELECT id_a, id_b, ROUND(j, 4) AS jaccard FROM scored WHERE j >= 0.3
-"""
-
-
-def q_quality_score(spark, sf_dir):
-    # composite quality heuristic (length band + alpha density + mean
-    # word length band) — pure Catalyst, mirrored exactly in SQL
-    docs = _r(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", quality_score("text", "n_chars").alias("quality")
-    )
-
-
-O_QUALITY_SCORE = """
-WITH s AS (
-  SELECT doc_id,
-         CAST(n_chars AS DOUBLE) AS nc,
-         CAST(length(regexp_extract_all(text, '[A-Za-z0-9]+')) AS DOUBLE) AS n_words,
-         CAST(length(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) AS n_alpha
-  FROM documents
-)
-SELECT doc_id,
-       ROUND(
-         (CASE WHEN nc >= 100 AND nc <= 20000 THEN 1.0 ELSE 0.5 END) * 0.4
-         + (CASE WHEN nc > 0 THEN n_alpha / nc ELSE 0.0 END) * 0.4
-         + (CASE WHEN (CASE WHEN n_words > 0 THEN nc / n_words ELSE 0.0 END) >= 3
-                 AND (CASE WHEN n_words > 0 THEN nc / n_words ELSE 0.0 END) <= 12
-            THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-FROM s
 """
 
 

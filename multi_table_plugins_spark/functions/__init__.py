@@ -5,7 +5,6 @@ inline into WholeStageCodegen."""
 from .vectors import cosine_sim, dot, l2_norm  # noqa: F401
 from .textfns import (  # noqa: F401
     doc_fingerprint,
-    punct_ratio,
     token_count,
     word_shingles,
     words,

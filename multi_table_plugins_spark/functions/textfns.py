@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 WORD_RE = "[A-Za-z0-9]+"
-PUNCT_RE = r"[.,;:!?'\"()\[\]{}-]"
 
 
 def _c(c: Column | str) -> Column:
@@ -44,13 +43,6 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
         F.array().cast("array<int>")
     )
     return F.transform(idx, lambda i: F.array_join(F.slice(w, i, k), " "))
-
-
-def punct_ratio(text: Column | str, n_chars: Column | str) -> Column:
-    nc = _c(n_chars).cast("double")
-    return F.when(
-        nc > 0, F.regexp_count(_c(text), F.lit(PUNCT_RE)) / nc
-    ).otherwise(F.lit(0.0))
 
 
 def doc_fingerprint(text: Column | str) -> Column:

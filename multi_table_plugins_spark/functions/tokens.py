@@ -1,71 +1,9 @@
-"""Token-array operations for pre-tokenized training sequences.
-
-JVM higher-order functions where expressible; Arrow-vectorized pandas
-UDFs where not (input_hint: vectorized pandas/Arrow UDFs, never per-row
-Python). The pandas UDFs below operate on the flattened
-values/offsets representation so the kernel is numpy over contiguous
-arrays, not a Python loop over lists.
-"""
+"""Token-array operations for pre-tokenized training sequences, built
+from JVM higher-order functions (no per-row Python)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, LongType
-
-
-def recount_tokens(tokens: Column | str) -> Column:
-    """Maintain the ``n_tok = size(tokens)`` invariant (JVM expr)."""
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(F.size(c))
-
-
-def distinct_token_count(tokens: Column | str) -> Column:
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.size(F.array_distinct(c))
-
-
-def clip_vocab(tokens: Column | str, vocab: int, unk: int = 0) -> Column:
-    """Replace out-of-vocab ids with ``unk`` — pure Catalyst transform."""
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.transform(
-        c, lambda t: F.when((t >= 0) & (t < vocab), t).otherwise(F.lit(unk))
-    )
-
-
-@pandas_udf(ArrayType(IntegerType()))
-def dedupe_consecutive(tokens: pd.Series) -> pd.Series:
-    """Collapse runs of repeated token ids (whitespace-run-collapse
-    analog for token streams).
-
-    Vectorized: each Arrow batch is flattened to one contiguous values
-    array + offsets; the keep-mask and per-row re-slicing are numpy ops —
-    no per-row Python loop over token lists."""
-    out = []
-    # pandas gives us a Series of numpy arrays; concatenate once per batch
-    lens = np.fromiter(
-        (0 if a is None else len(a) for a in tokens), dtype=np.int64, count=len(tokens)
-    )
-    if lens.sum() == 0:
-        return pd.Series([None if a is None else [] for a in tokens])
-    flat = np.concatenate([np.asarray(a, dtype=np.int32) for a in tokens if a is not None and len(a)])
-    offsets = np.zeros(len(tokens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    keep = np.ones(len(flat), dtype=bool)
-    keep[1:] = flat[1:] != flat[:-1]
-    keep[offsets[:-1][lens > 0]] = True  # row starts always kept
-    kept_prefix = np.zeros(len(flat) + 1, dtype=np.int64)
-    np.cumsum(keep, out=kept_prefix[1:])
-    kept_flat = flat[keep]
-    for i, a in enumerate(tokens):
-        if a is None:
-            out.append(None)
-            continue
-        lo, hi = kept_prefix[offsets[i]], kept_prefix[offsets[i + 1]]
-        out.append(kept_flat[lo:hi])
-    return pd.Series(out)
 
 
 def token_shingles(tokens: Column | str, k: int = 3) -> Column:
@@ -118,14 +56,3 @@ def token_near_dup_pairs(
         .persist()
     )
     return shingle_jaccard_pairs(sh_all, id_col, threshold, max_df)
-
-
-@pandas_udf(LongType())
-def bpe_token_estimate(text: pd.Series) -> pd.Series:
-    """BPE-ish token-count estimate from raw text: ~chars/4 blended with
-    word count — the standard quick estimator. Vectorized pandas string
-    ops end to end."""
-    chars = text.str.len().fillna(0)
-    words = text.str.count(r"[A-Za-z0-9]+").fillna(0)
-    est = (0.4 * words + 0.6 * (chars / 4.0)).round()
-    return est.astype("int64")

@@ -4,7 +4,7 @@ from .table import (  # noqa: F401
     ConstraintViolation,
     LakeTable,
 )
-from .rollup import refresh_rollup, rollup_read, rollup_schema  # noqa: F401
+from .rollup import refresh_rollup, rollup_schema  # noqa: F401
 from .snapshots import (  # noqa: F401
     WarehouseSnapshot,
     latest_snapshot,

@@ -50,11 +50,10 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     ShortType,
-    StringType,
     StructType,
 )
 
-from ..schemas import DELETED_COL, LSN_COL
+from ..schemas import DELETED_COL
 from .fileio import FileIO
 from .table import LakeTable
 
@@ -282,8 +281,3 @@ def refresh_rollup(
             }
         finally:
             deltas.unpersist()
-
-
-def rollup_read(spark: SparkSession, view_path: str, io=None) -> DataFrame:
-    """The current rollup state (live groups only, user columns)."""
-    return LakeTable(spark, view_path, io=io).read()

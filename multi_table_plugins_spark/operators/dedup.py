@@ -1,11 +1,10 @@
 """Deduplication family for web-scale training-data curation.
 
 Scale design: every method here avoids the O(n²) all-pairs comparison —
-candidates are generated by hash bucketing (exact), LSH band bucketing
-(MinHash), or Hamming-chunk bucketing (SimHash), so the shuffle key
-always bounds the comparison set. Verification (exact Jaccard) runs only
-inside candidate buckets. Everything is Catalyst higher-order-function
-expressions; no Python UDFs.
+candidates are generated by hash bucketing (exact) or LSH band
+bucketing (MinHash), so the shuffle key always bounds the comparison
+set. Verification (exact Jaccard) runs only inside candidate buckets.
+Everything is Catalyst higher-order-function expressions; no Python UDFs.
 
   * exact_dedup          — md5 content hash groupBy, one shuffle
   * minhash_signatures   — n independent murmur3 min-hashes over shingles
@@ -410,49 +409,6 @@ def simhash64(text: Column | str, id_hash=F.xxhash64, n_bits: int = 64) -> Colum
         return out
 
     return F.element_at(F.transform(F.array(tally), sign_fold), 1)
-
-
-def simhash_hamming(a: Column | str, b: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    num_chunks: int = 4,
-) -> DataFrame:
-    """Candidate pairs with Hamming(simhash) ≤ max_hamming via the chunk
-    trick: ≤3 differing bits over 4 16-bit chunks ⇒ at least one chunk is
-    identical, so bucket-join on each chunk (pigeonhole) instead of n²."""
-    h = df.select(F.col(id_col), simhash64(text_col).alias("sh"))
-    chunk = lambda c, j: F.shiftrightunsigned(c, j * 16).bitwiseAND(F.lit(0xFFFF))  # noqa: E731
-    exploded = h.select(
-        id_col,
-        "sh",
-        F.explode(
-            F.array(*[F.struct(F.lit(j).alias("j"), chunk(F.col("sh"), j).alias("c")) for j in range(num_chunks)])
-        ).alias("b"),
-    ).select(id_col, "sh", "b.j", "b.c")
-    l, r = exploded.alias("l"), exploded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.j") == F.col("r.j"))
-            & (F.col("l.c") == F.col("r.c"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            simhash_hamming(F.col("l.sh"), F.col("r.sh")).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def jaccard_near_dup_pairs(

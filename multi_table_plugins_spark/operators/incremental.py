@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..lakehouse.fileio import get_fileio
 from .dedup import band_hash_frame, jaccard_distinct, minhash_signatures
@@ -236,133 +236,3 @@ def incremental_near_dup(
         [raw_sigs._mtp_cached] if hasattr(raw_sigs, "_mtp_cached") else []
     )
     return pairs
-
-
-_FP_DIR = "fingerprints"
-_FP_META = "_fp_index.json"
-_FP_BUCKET = "fp_bucket"
-
-
-def build_fingerprint_index(
-    docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_fp_buckets: int = 64,
-    mode: str = "overwrite",
-    fileio=None,
-) -> dict:
-    """Persist an EXACT-dedup fingerprint index: ``(doc_id,
-    fingerprint)`` written ``partitionBy(fp_bucket)`` where
-    ``fp_bucket = pmod(murmur3(fingerprint), n_fp_buckets)`` — the
-    exact-match sibling of :func:`build_signature_index`. A probe
-    computes its own batch's buckets and reads ONLY those partition
-    directories, so "is this document already in the 100 TB corpus"
-    costs O(matched buckets), never O(corpus). The fingerprint is
-    :func:`~multi_table_plugins_spark.functions.textfns.doc_fingerprint`
-    (md5 of the sorted distinct word set — whitespace/word-order
-    insensitive). ``mode="append"`` adds a batch; parameters are
-    checked against the stored metadata like the signature index."""
-    from ..functions.textfns import doc_fingerprint
-
-    io = get_fileio(fileio)
-    meta = {"id_col": id_col, "n_fp_buckets": n_fp_buckets}
-    meta_path = os.path.join(index_path, _FP_META)
-    if mode == "append" and io.exists(meta_path):
-        existing = json.loads(io.read_text(meta_path))
-        if existing != meta:
-            raise ValueError(
-                f"fingerprint index at {index_path} was built with "
-                f"{existing}, append requested with {meta}"
-            )
-    fps = docs.select(
-        F.col(id_col), doc_fingerprint(text_col).alias("fp")
-    ).withColumn(_FP_BUCKET, F.pmod(F.hash("fp"), F.lit(n_fp_buckets)))
-    (
-        fps.repartition(F.col(_FP_BUCKET))
-        .write.partitionBy(_FP_BUCKET)
-        .mode(mode)
-        .parquet(os.path.join(index_path, _FP_DIR))
-    )
-    io.makedirs(index_path)
-    io.write_text(meta_path, json.dumps(meta))
-    return meta
-
-
-def incremental_exact_dedup(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    fileio=None,
-) -> DataFrame:
-    """Split a new batch against the persisted fingerprint corpus:
-    returns ``new_docs`` + ``is_dup`` (boolean — content already in the
-    corpus OR duplicated earlier within the batch, first-id-wins) +
-    ``dup_of`` (the minimum corpus doc id with the same fingerprint,
-    null for batch-internal firsts and non-dups).
-
-    Index IO is bucket-pruned through the FileIO seam exactly like the
-    near-dup probe: only the partition directories matching the batch's
-    fingerprint buckets are read (``df._mtp_probe_paths``). A probe of
-    a document already IN the index (append-then-probe) does not flag
-    itself: a corpus match counts only when it involves a DIFFERENT
-    doc id (min-id ≠ own, or ≥2 corpus entries share the print)."""
-    from ..functions.textfns import doc_fingerprint
-
-    io = get_fileio(fileio)
-    meta = json.loads(io.read_text(os.path.join(index_path, _FP_META)))
-    id_col = meta["id_col"]
-
-    fps = new_docs.withColumn("_fp", doc_fingerprint(text_col)).withColumn(
-        _FP_BUCKET, F.pmod(F.hash("_fp"), F.lit(meta["n_fp_buckets"]))
-    )
-    fps = fps.persist()
-    buckets = [r[0] for r in fps.select(_FP_BUCKET).distinct().collect()]
-    fp_root = os.path.join(index_path, _FP_DIR)
-    paths = []
-    for b in sorted(set(buckets)):
-        p = os.path.join(fp_root, f"{_FP_BUCKET}={b}")
-        if io.isdir(p):
-            paths.append(p)
-
-    id_type = new_docs.schema[id_col].dataType
-    if paths:
-        idx = (
-            spark.read.option("basePath", fp_root)
-            .parquet(*paths)
-            .groupBy("fp")
-            .agg(
-                F.min(id_col).alias("_min_id"),
-                F.count("*").alias("_fp_cnt"),
-            )
-        )
-    else:
-        idx = None
-
-    w = Window.partitionBy("_fp").orderBy(id_col)
-    out = fps.withColumn("_fp_rn", F.row_number().over(w))
-    if idx is not None:
-        out = out.join(idx, out["_fp"] == idx["fp"], "left").drop("fp")
-    else:
-        out = out.withColumn(
-            "_min_id", F.lit(None).cast(id_type)
-        ).withColumn("_fp_cnt", F.lit(0))
-    own = F.col(id_col)
-    corpus_dup = F.col("_min_id").isNotNull() & (
-        (F.col("_min_id") != own) | (F.col("_fp_cnt") > 1)
-    )
-    out = (
-        out.withColumn(
-            "dup_of",
-            F.when(
-                F.col("_min_id").isNotNull() & (F.col("_min_id") != own),
-                F.col("_min_id"),
-            ),
-        )
-        .withColumn("is_dup", corpus_dup | (F.col("_fp_rn") > 1))
-        .drop("_fp", _FP_BUCKET, "_fp_rn", "_min_id", "_fp_cnt")
-    )
-    out._mtp_probe_paths = paths
-    out._mtp_cached = [fps]
-    return out

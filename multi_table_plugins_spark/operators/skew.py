@@ -1,4 +1,4 @@
-"""Skew handling: salted repartition for hot keys.
+"""Skew handling: salted two-stage LWW dedup for hot keys.
 
 The reference has no skew story (one split per table — a hot table
 serializes, SURVEY.md §4 gap). The north rule requires explicit handling:
@@ -19,18 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 _SALT = "_salt"
-
-
-def salted_repartition(
-    df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 8
-) -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over
-    ``salt_buckets`` partitions. Use when downstream work is per-row
-    (e.g. a pandas UDF) rather than a keyed aggregation."""
-    salted = df.withColumn(
-        _SALT, F.pmod(F.hash(F.monotonically_increasing_id()), salt_buckets)
-    )
-    return salted.repartition(num_partitions, F.col(key), F.col(_SALT)).drop(_SALT)
 
 
 def salted_lww_dedup(

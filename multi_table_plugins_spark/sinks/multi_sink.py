@@ -14,8 +14,9 @@ Spark-native DynamicMultiFileset/DynamicMultiADLS sink
     (logical start time seconds, DynamicMultiFilesetSink.java:71,100-102).
   * format dispatch text(csv)/avro/orc/parquet/json
     (RecordFilterOutputFormat.java:46-53,81-99). Avro needs the external
-    spark-avro module; when absent it is reported unavailable rather
-    than failing at write time.
+    spark-avro module, which pip pyspark does not bundle; without it the
+    write raises Spark's ``AnalysisException`` "Failed to find data
+    source: avro" before any file lands.
   * drops the routing field from the stored record
     (RecordFilterOutputFormat.java:124-131) — ``partitionBy`` does this
     inherently (the value lives in the directory name).
@@ -27,27 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TEXT = "csv"
 FORMATS = ("csv", "json", "parquet", "orc", "avro")
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True iff the external spark-avro module is on the classpath
-    (package ``org.apache.spark:spark-avro_2.13`` — not bundled with
-    pyspark). Probes with a zero-row write into a throwaway tempdir."""
-    import shutil
-    import tempfile
-
-    probe = tempfile.mkdtemp(prefix="avro_probe_")
-    try:
-        spark.range(0).write.format("avro").mode("overwrite").save(
-            os.path.join(probe, "p")
-        )
-        return True
-    except Exception:
-        return False
-    finally:
-        shutil.rmtree(probe, ignore_errors=True)
 
 
 def write_multi_table(

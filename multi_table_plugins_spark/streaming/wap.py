@@ -24,6 +24,9 @@ Crash/replay matrix (every arrow is a rerun of the same call):
     half-fast-forwarded branch resumes (byte-identical manifest
     re-check in ``fast_forward``), the snapshot publishes last and
     covers the WHOLE batch, never a mix of pre- and post-batch pins.
+  * table dropped before a resumed publish → the publish pins the
+    remaining tables, records a ``degraded`` lineage record for the
+    missing one, and consumes the marker.
   * audit rejects        → ``discard_staged_batch``: branch chains
     removed; staged files become orphans reclaimed by
     ``expire_snapshots(remove_orphans=True)`` after the grace window.
@@ -52,6 +55,7 @@ from ..lakehouse.snapshots import publish_snapshot
 from ..lakehouse.table import LakeTable
 from .cdc_pipeline import apply_cdc_batch
 from .cdf_source import _discover_tables
+from .lineage import LineageLog
 
 
 def default_branch(app_id: str, epoch: int) -> str:
@@ -160,7 +164,9 @@ def publish_staged_batch(
     whole batch at once. Raises ``CommitConflict`` (before any
     snapshot) if any table's main advanced independently — discard and
     re-stage. Idempotently resumable: rerunning after a crash publishes
-    only what remains. O(staged commits) metadata IO, no data IO."""
+    only what remains; a marker table whose directory has vanished is
+    left out of the snapshot with a ``degraded`` lineage record
+    (``site: wap_publish``). O(staged commits) metadata IO, no data IO."""
     io = get_fileio(io)
     still_staged = staged_tables(warehouse, branch, io=io)
     # the full batch = marker set (durable across a crashed publish) ∪
@@ -179,7 +185,20 @@ def publish_staged_batch(
             # successful fast-forward deleted the branch): pin its
             # CURRENT main head so the resumed snapshot still flips the
             # whole batch atomically instead of carrying a pre-batch pin
-            versions[t] = lt.manifest()["version"]
+            try:
+                versions[t] = lt.manifest()["version"]
+            except FileNotFoundError as e:
+                # the table itself is gone since staging: pin the rest
+                # rather than fail every retry on a table that cannot return
+                LineageLog(warehouse).emit(
+                    {
+                        "kind": "degraded",
+                        "site": "wap_publish",
+                        "branch": branch,
+                        "table": t,
+                        "error": f"{type(e).__name__}: {e}",
+                    }
+                )
     doc = None
     if snapshot and versions:
         doc = publish_snapshot(

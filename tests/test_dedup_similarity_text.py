@@ -16,7 +16,6 @@ from multi_table_plugins_spark.operators.dedup import (
     ngram_jaccard,
     shingle_jaccard_pairs,
     simhash64,
-    simhash_near_dup_pairs,
 )
 from multi_table_plugins_spark.operators.similarity import (
     cosine_topk,
@@ -80,14 +79,6 @@ def test_shingle_jaccard_pairs_never_pair_a_duplicate_id_with_itself(spark):
     )
     pairs = {(r["id_a"], r["id_b"]) for r in shingle_jaccard_pairs(sh, threshold=0.0).collect()}
     assert pairs == {(1, 2)}
-
-
-def test_simhash_near_dup(docs):
-    pairs = simhash_near_dup_pairs(docs, max_hamming=8)
-    found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 2) in found
-    h = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
-    assert h[(1, 2)] == 0  # identical text → identical simhash
 
 
 def test_simhash_is_jvm_expression(docs):

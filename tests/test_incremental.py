@@ -160,93 +160,3 @@ def test_index_io_routes_through_fileio_seam(spark, docs, tmp_path):
     assert got == _full_pairs_touching_new(docs)
     for c in pairs._mtp_cached:
         c.unpersist()
-
-
-# --- exact-dedup fingerprint index -----------------------------------
-
-
-def test_incremental_exact_dedup_against_corpus(spark, docs, tmp_path):
-    """New-batch exact dedup against the persisted fingerprint corpus
-    must equal the brute-force recompute: a batch doc is a dup iff its
-    fingerprint appears in the corpus (any id) or earlier in the batch
-    (first-id-wins), and the probe reads only matched buckets."""
-    from multi_table_plugins_spark.functions.textfns import doc_fingerprint
-    from multi_table_plugins_spark.operators.incremental import (
-        build_fingerprint_index,
-        incremental_exact_dedup,
-    )
-
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    idx = str(tmp_path / "fpidx")
-    build_fingerprint_index(old, idx, n_fp_buckets=32)
-
-    out = incremental_exact_dedup(spark, new, idx)
-    got = {r["doc_id"]: (r["is_dup"], r["dup_of"]) for r in out.collect()}
-
-    # brute-force oracle over the full frame
-    fps = {
-        r["doc_id"]: r["fp"]
-        for r in docs.select("doc_id", doc_fingerprint("text").alias("fp")).collect()
-    }
-    old_ids = {i for i in fps if i % 5 != 0}
-    new_ids = sorted(i for i in fps if i % 5 == 0)
-    by_fp: dict = {}
-    for i in old_ids:
-        by_fp.setdefault(fps[i], set()).add(i)
-    seen_batch: dict = {}
-    expected = {}
-    for i in new_ids:
-        fp = fps[i]
-        corpus = sorted(by_fp.get(fp, ()))
-        in_batch_before = fp in seen_batch
-        expected[i] = (
-            bool(corpus) or in_batch_before,
-            corpus[0] if corpus else None,
-        )
-        seen_batch.setdefault(fp, i)
-    assert got == expected
-    assert out._mtp_probe_paths  # bucket-pruned read happened
-    for c in out._mtp_cached:
-        c.unpersist()
-
-
-def test_incremental_exact_dedup_append_self_not_dup(spark, docs, tmp_path):
-    """After appending the batch to the index, re-probing it must not
-    flag docs as dups of THEMSELVES (unique-content docs stay clean);
-    genuine corpus dups keep flagging."""
-    from multi_table_plugins_spark.operators.incremental import (
-        build_fingerprint_index,
-        incremental_exact_dedup,
-    )
-
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    idx = str(tmp_path / "fpidx")
-    build_fingerprint_index(old, idx, n_fp_buckets=32)
-    before = {
-        r["doc_id"]: r["is_dup"]
-        for r in incremental_exact_dedup(spark, new, idx).collect()
-    }
-    build_fingerprint_index(new, idx, n_fp_buckets=32, mode="append")
-    after = {
-        r["doc_id"]: r["is_dup"]
-        for r in incremental_exact_dedup(spark, new, idx).collect()
-    }
-    # self-presence alone must not create new dups... but batch docs
-    # sharing a fingerprint WITH EACH OTHER are now mutual corpus dups
-    for i, dup in before.items():
-        if dup:
-            assert after[i], i
-    assert any(not d for d in after.values()), "unique docs must stay clean"
-
-
-def test_fingerprint_index_rejects_mismatched_params(spark, docs, tmp_path):
-    from multi_table_plugins_spark.operators.incremental import (
-        build_fingerprint_index,
-    )
-
-    idx = str(tmp_path / "fpidx")
-    build_fingerprint_index(docs, idx, n_fp_buckets=32)
-    with pytest.raises(ValueError, match="was built with"):
-        build_fingerprint_index(docs, idx, n_fp_buckets=16, mode="append")

@@ -20,7 +20,6 @@ from pyspark.sql.types import (
 )
 
 from multi_table_plugins_spark.lakehouse import LakeTable, refresh_rollup
-from multi_table_plugins_spark.lakehouse.rollup import rollup_read
 
 SCHEMA = StructType(
     [
@@ -61,7 +60,7 @@ def _recompute(t):
 def _view_state(spark, view_path):
     return {
         r["grp"]: (r["sum_val"], r["row_count"])
-        for r in rollup_read(spark, view_path).collect()
+        for r in LakeTable(spark, view_path).read().collect()
     }
 
 
@@ -179,7 +178,7 @@ def test_double_sums_supported(spark, tmp_path):
 def _view_state_x(spark, view_path):
     return {
         r["grp"]: (r["sum_x"], r["row_count"])
-        for r in rollup_read(spark, view_path).collect()
+        for r in LakeTable(spark, view_path).read().collect()
     }
 
 
@@ -282,7 +281,7 @@ def test_group_and_sum_by_source_key_column(spark, tmp_path):
     )
     got = {
         r["doc_id"]: (r["sum_val"], r["row_count"])
-        for r in rollup_read(spark, view_p).collect()
+        for r in LakeTable(spark, view_p).read().collect()
     }
     want = {
         r["doc_id"]: (r["s"], r["c"])

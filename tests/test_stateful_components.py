@@ -1,14 +1,7 @@
-import os
-
-from pyspark.sql import functions as F
-
 from multi_table_plugins_spark.operators.components import (
     connected_components,
     dedup_keep_canonical,
 )
-from multi_table_plugins_spark.schemas import CHANGE_FEED_SCHEMA
-from multi_table_plugins_spark.streaming.stateful import track_key_versions
-from tests.test_streaming_rollup import _write_feed_file
 
 
 def test_connected_components_clusters(spark):
@@ -28,52 +21,6 @@ def test_dedup_keep_canonical(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
     kept = {r["doc_id"] for r in dedup_keep_canonical(df, pairs).collect()}
     assert kept == {1, 4, 5, 7, 8, 9}
-
-
-def test_stateful_key_version_tracker(spark, tmp_path):
-    feed = str(tmp_path / "feed")
-    os.makedirs(feed)
-    _write_feed_file(
-        os.path.join(feed, "f0.parquet"),
-        [(1, "t0", "I", "a", 1), (2, "t0", "U", "a", 2), (3, "t0", "I", "b", 3)],
-    )
-    stream = (
-        spark.readStream.schema(CHANGE_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = (
-        track_key_versions(stream, idle_timeout_ms=None)
-        .writeStream.format("memory")
-        .queryName("keytracker")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = {
-            (r["table_name"], r["doc_id"]): (r["versions_seen"], r["last_lsn"], r["last_op"])
-            for r in spark.sql("select * from keytracker").collect()
-        }
-        assert first[("t0", "a")] == (2, 2, "U")
-        assert first[("t0", "b")] == (1, 3, "I")
-        # second batch: state must ACCUMULATE across micro-batches
-        _write_feed_file(
-            os.path.join(feed, "f1.parquet"),
-            [(4, "t0", "D", "a", 4), (5, "t1", "I", "c", 5)],
-        )
-        q.processAllAvailable()
-        rows = spark.sql("select * from keytracker").collect()
-        latest = {}
-        for r in rows:  # update mode appends; last emission wins
-            latest[(r["table_name"], r["doc_id"])] = (
-                r["versions_seen"], r["last_lsn"], r["last_op"]
-            )
-        assert latest[("t0", "a")] == (3, 4, "D")  # 2 from batch 1 + 1 new
-        assert latest[("t1", "c")] == (1, 5, "I")
-    finally:
-        q.stop()
 
 
 def test_commit_delta_retries_on_conflict(spark, tmp_table_dir):

@@ -1,14 +1,5 @@
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from multi_table_plugins_spark.functions.tokens import (
-    bpe_token_estimate,
-    clip_vocab,
-    dedupe_consecutive,
-    distinct_token_count,
-    recount_tokens,
-)
 from multi_table_plugins_spark.lakehouse import LakeTable
 from multi_table_plugins_spark.schemas import TARGET_SCHEMA
 from tests.test_lakehouse import _changes, _state
@@ -40,38 +31,6 @@ def test_vacuum_tombstones(spark, tmp_table_dir):
     assert r["vacuumed"] == 1
     assert t._scan(include_tombstones=True).count() == 1
     assert _state(t) == {"b": [2]}
-
-
-def test_token_expressions(spark):
-    df = spark.createDataFrame(
-        [([1, 1, 2, 2, 2, 3, 1],), (None,), ([7],)],
-        "tokens array<int>",
-    )
-    out = df.select(
-        recount_tokens("tokens").alias("n"),
-        distinct_token_count("tokens").alias("d"),
-        clip_vocab("tokens", vocab=3, unk=0).alias("clipped"),
-        dedupe_consecutive("tokens").alias("deduped"),
-    ).collect()
-    assert out[0]["n"] == 7
-    assert out[0]["d"] == 3
-    assert out[0]["clipped"] == [1, 1, 2, 2, 2, 0, 1]
-    assert out[0]["deduped"] == [1, 2, 3, 1]
-    assert out[1]["n"] is None and out[1]["deduped"] is None
-    assert out[2]["deduped"] == [7]
-
-
-def test_dedupe_consecutive_is_arrow_vectorized(spark):
-    df = spark.createDataFrame([([1, 1, 2],)], "tokens array<int>")
-    plan = df.select(dedupe_consecutive("tokens"))._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # pandas UDF, not row-at-a-time Python
-
-
-def test_bpe_token_estimate(spark):
-    df = spark.createDataFrame([("hello world foo",), ("",)], "text string")
-    got = [r[0] for r in df.select(bpe_token_estimate("text")).collect()]
-    # 0.4*3 + 0.6*(15/4) = 3.45 → 3 ; empty → 0
-    assert got == [3, 0]
 
 
 def test_expire_snapshots(spark, tmp_table_dir):

@@ -191,6 +191,42 @@ def test_publish_resumes_after_partial_crash(spark, tmp_path):
     assert not os.path.exists(_marker_path(wh, "wap-w-1"))
 
 
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_publish_resume_skips_a_vanished_table(spark, tmp_path, backend):
+    """A marker table whose directory is gone since the crash is skipped
+    with one ``degraded`` record; the rest of the batch still publishes
+    and the marker is consumed, so the branch is not wedged."""
+    from multi_table_plugins_spark.streaming.lineage import LineageLog
+    from multi_table_plugins_spark.streaming.wap import _marker_path
+
+    io = get_fileio(backend)
+    wh = str(tmp_path / "wh")
+    tables = ("ta", "tb")
+    apply_cdc_batch(spark, _feed(spark, 1, 8, tables), wh, epoch=0,
+                    app_id="w", n_buckets=2, io=io)
+    stage_cdc_batch(spark, _feed(spark, 100, 8, tables, op="U"), wh,
+                    epoch=1, app_id="w", n_buckets=2, io=io)
+    # the crash shape above: ta fast-forwarded, no snapshot; then tb goes
+    LakeTable(spark, os.path.join(wh, "ta"), io=io).fast_forward("wap-w-1")
+    io.remove_tree(os.path.join(wh, "tb"))
+
+    pub = publish_staged_batch(spark, wh, "wap-w-1", app_id="w", epoch=1, io=io)
+    assert pub["tables"] == {} and pub["snapshot_seq"] is not None
+    snap = latest_snapshot(io, wh)
+    ta_head = LakeTable(spark, os.path.join(wh, "ta"), io=io).manifest()["version"]
+    assert snap["epoch"] == 1 and snap["tables"]["ta"] == ta_head
+    degraded = [r for r in LineageLog(wh).read() if r.get("kind") == "degraded"]
+    assert [(r["site"], r["branch"], r["table"]) for r in degraded] == [
+        ("wap_publish", "wap-w-1", "tb")
+    ]
+    assert not io.exists(_marker_path(wh, "wap-w-1"))
+
+    again = publish_staged_batch(spark, wh, "wap-w-1", app_id="w", epoch=1, io=io)
+    assert again == {"branch": "wap-w-1", "tables": {}, "snapshot_seq": None}
+    assert latest_snapshot(io, wh)["seq"] == snap["seq"]
+    assert len([r for r in LineageLog(wh).read() if r.get("kind") == "degraded"]) == 1
+
+
 def test_publish_resumes_after_crash_past_last_table(spark, tmp_path):
     """Crash AFTER the last fast-forward but BEFORE the snapshot: every
     branch is gone, yet the rerun must still publish the batch snapshot
