@@ -115,9 +115,9 @@ def _spark(cpus_env: str = "SPARK_GRAFT_CPUS"):
 
 
 def _tables_of(warehouse: str, io, only: "list[str]") -> "list[str]":
-    from multi_table_plugins_spark.streaming.cdf_source import _discover_tables
+    from multi_table_plugins_spark.lakehouse.table import discover_tables
 
-    names = _discover_tables(io, warehouse, set(only), set())
+    names = discover_tables(io, warehouse, set(only), set())
     if only:
         missing = sorted(set(only) - set(names))
         if missing:

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import os
 import re
-import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
@@ -54,7 +53,6 @@ from .fileio import FileIO, get_fileio
 from .table import (
     DATA_DIR,
     DELTA_WRITE_OPTS,
-    CommitConflict,
     LakeTable,
     _STATS_V,
     _footer_meta,
@@ -196,35 +194,10 @@ def merge_many(
         df, viol_obs = lt._enforce_constraints(
             spark.read.schema(file_schema).parquet(*files), on_violation
         )
-        for attempt in range(3):
-            nb = lt.n_buckets
-            bucketed2 = df.withColumn(_BUCKET_COL, lt._bucket_expr(nb))
-            new_entries = lt._write_data_files(
-                bucketed2, lt.manifest()["version"] + 1, "delta"
-            )
-            t0 = time.time()
-            try:
-                m = lt.commit_delta(
-                    new_entries,
-                    payload_schema,
-                    app_id,
-                    epoch,
-                    expected_n_buckets=nb,
-                )
-            except CommitConflict:
-                lt._discard_unreferenced(new_entries)
-                lt._manifest_cache_version = -1
-                if attempt == 2:
-                    raise
-                continue
-            break
-        m["commit_ms"] = round((time.time() - t0) * 1000, 1)
-        if m.get("skipped"):
-            lt._discard_unreferenced(new_entries)
-        else:
-            m["rows_applied"] = sum(
-                e["rows"] for es in new_entries.values() for e in es
-            )
+        m = lt.recompute_on_conflict(
+            lambda: lt.append_rows(df, payload_schema, app_id, epoch)
+        )
+        if not m.get("skipped"):
             n_viol = _violations(viol_obs)
             if n_viol:
                 m["constraint_violations_dropped"] = n_viol
@@ -295,7 +268,6 @@ def merge_many(
                     entry["stats"] = stats
                     entry["stats_v"] = _STATS_V
                 entries.setdefault(bucket, []).append(entry)
-        t0 = time.time()
         # expected_n_buckets: these entries were hashed with the bucket
         # count read at planning time — a concurrent rebucket() must
         # conflict here, not silently file rows under wrong bucket ids
@@ -306,7 +278,6 @@ def merge_many(
             epoch,
             expected_n_buckets=n_buckets,
         )
-        m["commit_ms"] = round((time.time() - t0) * 1000, 1)
         if m.get("skipped"):
             # epoch already committed (crash replay) — discard placed files
             io.remove_tree(os.path.join(tpath, dest_rel))

@@ -157,16 +157,14 @@ def refresh_rollup(
 
     from pyspark.sql import Observation
 
-    from .table import CommitConflict
-
     # The refresh is read-modify-write over the VIEW (deltas apply on
     # top of its current rows), so the merge pins the exact view
     # version that state was read at: a concurrent refresher landing in
-    # between conflicts and the WHOLE refresh recomputes against the
-    # new state — two racing refreshers (duplicate scheduler fires, a
-    # loop plus a one-shot) can therefore never double-apply a change
-    # range.
-    for attempt in range(5):
+    # between conflicts and the recompute loop re-runs the WHOLE refresh
+    # against the new state — two racing refreshers (duplicate scheduler
+    # fires, a loop plus a one-shot) can therefore never double-apply a
+    # change range.
+    def attempt() -> dict:
         v_from = view.last_committed_epoch(app_id) or 0
         if v_from >= v_to:
             return {
@@ -190,81 +188,74 @@ def refresh_rollup(
             *[F.sum(f"d_sum_{c}").alias(f"d_sum_{c}") for c in sum_cols],
             F.sum("d_cnt").alias("d_cnt"),
         ).persist()
-
-        # bounded read-modify-write: current view rows of ONLY the
-        # buckets the touched groups hash into (tombstoned groups
-        # count as absent)
-        target = view._internal_schema(view.schema())
-        cur = view._current_rows_for(deltas, target)
-        if cur is not None:
-            live_cur = F.coalesce(F.col(DELETED_COL), F.lit(False)) == False  # noqa: E712
-            cur = cur.select(
-                *[F.col(g).alias(f"_cur_{g}") for g in group_cols],
-                *[
-                    F.when(live_cur, F.col(f"sum_{c}")).alias(f"c_sum_{c}")
-                    for c in sum_cols
-                ],
-                F.when(live_cur, F.col(ROW_COUNT_COL)).alias("c_cnt"),
-            )
-            # null-SAFE equality: SQL GROUP BY collects NULL group
-            # values into one group, so the join back must match them
-            # too — a plain equality join would never match the stored
-            # NULL-group row and silently reset its aggregates
-            cond = None
-            for g in group_cols:
-                c = deltas[g].eqNullSafe(cur[f"_cur_{g}"])
-                cond = c if cond is None else cond & c
-            j = deltas.join(cur, cond, "left").drop(
-                *[f"_cur_{g}" for g in group_cols]
-            )
-        else:
-            j = deltas
-            for c in sum_cols:
-                j = j.withColumn(
-                    f"c_sum_{c}", F.lit(None).cast(sum_types[c])
-                )
-            j = j.withColumn("c_cnt", F.lit(None).cast("long"))
-
-        new_cnt = F.coalesce(F.col("c_cnt"), F.lit(0)) + F.col("d_cnt")
-        out_cols = [F.col(g) for g in group_cols]
-        for c in sum_cols:
-            out_cols.append(
-                (
-                    F.coalesce(
-                        F.col(f"c_sum_{c}"), F.lit(0).cast(sum_types[c])
-                    )
-                    + F.col(f"d_sum_{c}")
-                ).alias(f"sum_{c}")
-            )
-        out_cols.append(new_cnt.alias(ROW_COUNT_COL))
-        out_cols.append(
-            F.when(new_cnt <= 0, F.lit("D")).otherwise(F.lit("U")).alias("op")
-        )
-        # one refresh writes each group at most once, so a constant
-        # per-refresh lsn (the source version) is strictly monotone
-        # across refreshes — exactly what LWW needs
-        out_cols.append(F.lit(int(v_to)).cast("long").alias("lsn"))
-        batch = j.select(*out_cols)
-
-        obs = Observation()
-        batch = batch.observe(obs, F.count(F.lit(1)).alias("groups"))
         try:
-            try:
-                res = view.merge_into(
-                    batch,
-                    app_id=app_id,
-                    epoch=v_to,
-                    require_parent_version=view_v,
+            # bounded read-modify-write: current view rows of ONLY the
+            # buckets the touched groups hash into (tombstoned groups
+            # count as absent)
+            target = view._internal_schema(view.schema())
+            cur = view._current_rows_for(deltas, target)
+            if cur is not None:
+                live_cur = F.coalesce(F.col(DELETED_COL), F.lit(False)) == False  # noqa: E712
+                cur = cur.select(
+                    *[F.col(g).alias(f"_cur_{g}") for g in group_cols],
+                    *[
+                        F.when(live_cur, F.col(f"sum_{c}")).alias(f"c_sum_{c}")
+                        for c in sum_cols
+                    ],
+                    F.when(live_cur, F.col(ROW_COUNT_COL)).alias("c_cnt"),
                 )
-            except CommitConflict:
-                if attempt == 4:
-                    raise
-                continue  # recompute against the winner's view state
+                # null-SAFE equality: SQL GROUP BY collects NULL group
+                # values into one group, so the join back must match them
+                # too — a plain equality join would never match the stored
+                # NULL-group row and silently reset its aggregates
+                cond = None
+                for g in group_cols:
+                    c = deltas[g].eqNullSafe(cur[f"_cur_{g}"])
+                    cond = c if cond is None else cond & c
+                j = deltas.join(cur, cond, "left").drop(
+                    *[f"_cur_{g}" for g in group_cols]
+                )
+            else:
+                j = deltas
+                for c in sum_cols:
+                    j = j.withColumn(
+                        f"c_sum_{c}", F.lit(None).cast(sum_types[c])
+                    )
+                j = j.withColumn("c_cnt", F.lit(None).cast("long"))
+
+            new_cnt = F.coalesce(F.col("c_cnt"), F.lit(0)) + F.col("d_cnt")
+            out_cols = [F.col(g) for g in group_cols]
+            for c in sum_cols:
+                out_cols.append(
+                    (
+                        F.coalesce(
+                            F.col(f"c_sum_{c}"), F.lit(0).cast(sum_types[c])
+                        )
+                        + F.col(f"d_sum_{c}")
+                    ).alias(f"sum_{c}")
+                )
+            out_cols.append(new_cnt.alias(ROW_COUNT_COL))
+            out_cols.append(
+                F.when(new_cnt <= 0, F.lit("D")).otherwise(F.lit("U")).alias("op")
+            )
+            # one refresh writes each group at most once, so a constant
+            # per-refresh lsn (the source version) is strictly monotone
+            # across refreshes — exactly what LWW needs
+            out_cols.append(F.lit(int(v_to)).cast("long").alias("lsn"))
+            batch = j.select(*out_cols)
+
+            obs = Observation()
+            batch = batch.observe(obs, F.count(F.lit(1)).alias("groups"))
+            res = view.merge_into(
+                batch,
+                app_id=app_id,
+                epoch=v_to,
+                require_parent_version=view_v,
+            )
             if res.get("skipped"):
-                # a concurrent refresher beat us to this source
-                # version; no action ran on the observed batch, so
-                # obs.get would block forever — return the no-op
-                # without touching it
+                # a concurrent refresher beat us to this source version; no
+                # action ran on the observed batch, so obs.get would block
+                # forever — return the no-op without touching it
                 return {
                     "refreshed": False,
                     "v_from": v_from,
@@ -281,3 +272,5 @@ def refresh_rollup(
             }
         finally:
             deltas.unpersist()
+
+    return view.recompute_on_conflict(attempt)

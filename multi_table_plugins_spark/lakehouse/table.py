@@ -44,6 +44,7 @@ exactly what this layer adds.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -149,6 +150,14 @@ class ConstraintViolation(RuntimeError):
 
 class CommitConflict(RuntimeError):
     """Another writer published this manifest version first."""
+
+
+#: budget of the re-apply loop (:meth:`LakeTable._commit_metadata`): a
+#: lost version race re-applies the same edit to the winner's manifest
+COMMIT_ATTEMPTS = 10
+#: budget of the recompute loop (:meth:`LakeTable.recompute_on_conflict`):
+#: a lost version race re-reads the table and rewrites the data files
+RECOMPUTE_ATTEMPTS = 5
 
 
 def _violations(obs: "Observation | None") -> int:
@@ -1240,8 +1249,10 @@ class LakeTable:
                 self.io.publish_atomic(
                     os.path.join(self._mdir, f"commit-{v:08d}.json"), side
                 )
-            except (FileNotFoundError, FileExistsError, OSError):
-                pass  # sidecar optional — readers fall back to the diff
+            except (FileNotFoundError, FileExistsError):
+                pass  # legacy branch without one / resumed fast-forward
+            except OSError as e:
+                self._sidecar_degraded(v, e)
             published.append(v)
         self._manifest_cache_version = -1
         self.delete_branch(name)
@@ -1274,7 +1285,8 @@ class LakeTable:
         events. The sidecar is an optimization, never the commit point:
         only the CAS winner writes one, and a missing sidecar (legacy
         warehouse, or a crash between manifest publish and sidecar
-        write) falls back to the manifest diff.
+        write) falls back to the manifest diff. A sidecar that fails to
+        write is recorded (:meth:`_sidecar_degraded`), not raised.
         """
         v = manifest["version"]
         final = os.path.join(self._mdir, f"manifest-{v:08d}.json")
@@ -1299,8 +1311,29 @@ class LakeTable:
                     }
                 ),
             )
-        except (FileExistsError, OSError):
-            pass  # readers fall back to the manifest diff for this version
+        except OSError as e:
+            self._sidecar_degraded(v, e)
+
+    def _sidecar_degraded(self, version: int, e: OSError) -> None:
+        """A commit landed without its sidecar: readers fall back to the
+        manifest diff for ``version``, so the commit stands, but the
+        loss is logged and recorded as one ``degraded`` lineage record
+        (``site: commit_sidecar``) in the warehouse holding the table."""
+        from ..streaming.lineage import LineageLog
+
+        logging.getLogger(__name__).warning(
+            "commit sidecar of v%s at %s not written", version, self.path,
+            exc_info=True,
+        )
+        LineageLog(os.path.dirname(self.path)).emit(
+            {
+                "kind": "degraded",
+                "site": "commit_sidecar",
+                "table": os.path.basename(self.path),
+                "version": version,
+                "error": f"{type(e).__name__}: {e}",
+            }
+        )
 
     def _load_commit_log(self, version: int) -> "dict | None":
         """The ``commit-<v>.json`` sidecar for ``version``, or None if
@@ -1312,6 +1345,50 @@ class LakeTable:
             return json.loads(self.io.read_text(p))
         except (FileNotFoundError, ValueError):
             return None
+
+    def added_delta_files(
+        self, v_from: int, v_to: int
+    ) -> "tuple[list[tuple[int, str, dict]], set[int]]":
+        """Every delta file the commits in ``(v_from, v_to]`` added, as
+        ``(version, bucket, entry)``, plus the bucket counts those
+        commits filed them under — the one per-version walk behind
+        :meth:`table_changes` and the ``lake_cdf`` stream.
+
+        Each version's ``commit-<v>.json`` sidecar lists exactly the
+        entries that commit added: O(new files) IO per version, and a
+        compaction/vacuum/schema commit's EMPTY sidecar keeps its
+        rewritten (merged) delta files out of the feed. Versions without
+        a sidecar (legacy warehouse, crash window) fall back to diffing
+        that version's full manifest against its parent's."""
+        added: list[tuple[int, str, dict]] = []
+        layouts: set[int] = set()
+        prev_m: "dict | None" = None
+        for v in range(v_from + 1, v_to + 1):
+            c = self._load_commit_log(v)
+            if c is not None:
+                for bucket, es in c.get("added_delta", {}).items():
+                    added.extend((v, bucket, e) for e in es)
+                if "n_buckets" in c:  # legacy sidecars predate the stamp
+                    layouts.add(c["n_buckets"])
+                prev_m = None
+                continue
+            if prev_m is None or prev_m["version"] != v - 1:
+                prev_m = self.manifest(v - 1)
+            prev_paths = {
+                e["path"]
+                for b in prev_m["buckets"].values()
+                for e in b.get("delta", [])
+            }
+            m_v = self.manifest(v)
+            for bucket, b in m_v["buckets"].items():
+                added.extend(
+                    (v, bucket, e)
+                    for e in b.get("delta", [])
+                    if e["path"] not in prev_paths
+                )
+            layouts.add(m_v["n_buckets"])
+            prev_m = m_v
+        return added, layouts
 
     # ------------------------------------------------------------------
     # properties
@@ -1693,48 +1770,15 @@ class LakeTable:
             for f in target.fields
             if f.name not in keys and f.name not in (LSN_COL, DELETED_COL)
         ]
-        # per-version added-delta discovery: the commit-<v>.json sidecar
-        # lists exactly the entries commit v added — O(new files) IO per
-        # version, and a compaction/vacuum commit's EMPTY sidecar keeps
-        # its rewritten (merged) delta files out of the feed. Versions
-        # without a sidecar (legacy warehouse, crash window) fall back
-        # to diffing that version's full manifest against its parent.
-        added: list[dict] = []
-        touched: set[str] = set()
-        layout_changed = False  # any rebucket() inside the range?
         m_from = self.manifest(v_from)
-        prev_m: "dict | None" = None
-        for v in range(v_from + 1, v_to + 1):
-            c = self._load_commit_log(v)
-            if c is not None:
-                for bucket, es in c.get("added_delta", {}).items():
-                    if es:
-                        added.extend(es)
-                        touched.add(bucket)
-                if c.get("n_buckets", m_from["n_buckets"]) != m_from["n_buckets"]:
-                    layout_changed = True
-                prev_m = None
-                continue
-            if prev_m is None or prev_m["version"] != v - 1:
-                prev_m = self.manifest(v - 1)
-            prev_paths = {
-                e["path"]
-                for b in prev_m["buckets"].values()
-                for e in b.get("delta", [])
-            }
-            m_v = self.manifest(v)
-            for bucket, b in m_v["buckets"].items():
-                for e in b.get("delta", []):
-                    if e["path"] not in prev_paths:
-                        added.append(e)
-                        touched.add(bucket)
-            if m_v["n_buckets"] != m_from["n_buckets"]:
-                layout_changed = True
-            prev_m = m_v
-        if layout_changed:
-            # bucket ids collected above are relative to post-rebucket
-            # layouts and don't translate to v_from's — read the whole
-            # old snapshot (conservative: correctness over pruning)
+        changed, layouts = self.added_delta_files(v_from, v_to)
+        added = [e for _, _, e in changed]
+        touched = {bucket for _, bucket, _ in changed}
+        if layouts - {m_from["n_buckets"]}:
+            # a rebucket() inside the range: bucket ids collected above
+            # are relative to post-rebucket layouts and don't translate
+            # to v_from's — read the whole old snapshot (conservative:
+            # correctness over pruning)
             touched = set(m_from["buckets"])
 
         out_fields = StructType(
@@ -1756,7 +1800,7 @@ class LakeTable:
             empty._mtp_cdf_info = {
                 "delta_files_read": 0,
                 "buckets_read": 0,
-                "buckets_total": len(self.manifest(v_from)["buckets"]),
+                "buckets_total": len(m_from["buckets"]),
             }
             return empty
 
@@ -2435,8 +2479,6 @@ class LakeTable:
         file_schema: StructType,
         app_id: str,
         epoch: int | None,
-        stats: dict | None = None,
-        compact: bool | None = None,
         require_parent_version: int | None = None,
         expected_n_buckets: int | None = None,
         op_tag: str = "append",
@@ -2448,8 +2490,9 @@ class LakeTable:
         hands each table its file entries here. Handles the exactly-once
         ledger, schema registration (``file_schema`` = the files' actual
         payload schema) + evolution of the current schema, and threshold
-        compaction. Returns metrics; ``skipped=True`` if the epoch was
-        already committed (caller should discard the files).
+        compaction. Returns metrics (``commit_ms`` included);
+        ``skipped=True`` if the epoch was already committed (caller
+        should discard the files).
 
         ``require_parent_version`` — commit ONLY on top of exactly that
         table version; any concurrent commit in between raises
@@ -2464,23 +2507,26 @@ class LakeTable:
         wrong bucket ids, so the commit conflicts instead (callers
         re-bucket the batch and retry).
         """
+        t0 = time.time()
         # Optimistic concurrency: delta commits only APPEND file entries,
-        # so on a version race we reload the winner's manifest and re-apply
-        # our mutation — the data files are already on disk and unchanged
-        # (Iceberg's retryable-commit semantics for fast appends).
-        for attempt in range(10):
+        # so the re-apply loop reloads the winner's manifest and re-runs
+        # this edit — the data files are already on disk and unchanged
+        # (Iceberg's retryable-commit semantics for fast appends). The
+        # pin and layout checks raise from inside the edit, so those
+        # conflicts are never re-applied.
+        skipped = False
+        added_by_bucket: dict[str, list[dict]] = {}
+
+        def mutate(m: dict) -> bool:
+            nonlocal skipped
             if epoch is not None:
+                # the ledger of the newest listed version, not of the
+                # copy: an epoch committed since the copy was taken
+                # skips here instead of after a doomed publish
                 last = self.last_committed_epoch(app_id)
-                if last is not None and epoch <= last:
-                    return {
-                        "skipped": True,
-                        "snapshot_id": self.snapshot_id(),
-                        # current version: with sequential epochs (one
-                        # writer per app), this already CONTAINS the
-                        # skipped batch — snapshot publishers pin it
-                        "version": self.manifest()["version"],
-                    }
-            m = json.loads(json.dumps(self.manifest()))
+                skipped = last is not None and epoch <= last
+                if skipped:
+                    return False
             self._check_not_resurrected(m, file_schema)
             if (
                 require_parent_version is not None
@@ -2503,10 +2549,10 @@ class LakeTable:
             cur = schema_from_json(m["schemas"][str(m["current_schema_version"])])
             merged = merge_schemas(cur, file_schema)
             if merged.json() != cur.json():
-                sv = self._ensure_schema_version(m, merged)
-                m["current_schema_version"] = sv
-            m = json.loads(json.dumps(m))  # isolate per-attempt entry copies
-            added_by_bucket: dict[str, list[dict]] = {}
+                m["current_schema_version"] = self._ensure_schema_version(
+                    m, merged
+                )
+            added_by_bucket.clear()
             for bucket, es in entries_by_bucket.items():
                 entry_copies = [dict(e, sv=file_sv) for e in es]
                 b = m["buckets"].setdefault(bucket, {"base": [], "delta": []})
@@ -2519,24 +2565,26 @@ class LakeTable:
                 len(b.get("base", [])) + len(b.get("delta", []))
                 for b in m["buckets"].values()
             )
-            self._advance(m, op_tag)
-            try:
-                self._publish(m, added=added_by_bucket)
-                break
-            except CommitConflict:
-                self._manifest_cache_version = -1  # force reload
-                continue
-        else:
-            raise CommitConflict(
-                f"gave up after 10 commit attempts at {self.path}"
-            )
+            return True
+
+        m = self._commit_metadata(op_tag, mutate, added=added_by_bucket)
+        if skipped:
+            cur_m = self.manifest()
+            return {
+                "skipped": True,
+                "snapshot_id": cur_m["snapshot_id"],
+                # current version: with sequential epochs (one writer
+                # per app), this already CONTAINS the skipped batch —
+                # snapshot publishers pin it
+                "version": cur_m["version"],
+                "commit_ms": round((time.time() - t0) * 1000, 1),
+            }
         threshold = m["compact_threshold"]
-        if compact is None:
-            compact = m["mode"] == "cow"
+        cow = m["mode"] == "cow"
         to_compact = [
             b
             for b, v in m["buckets"].items()
-            if v.get("delta") and (compact or len(v["delta"]) >= threshold)
+            if v.get("delta") and (cow or len(v["delta"]) >= threshold)
         ]
         # the data commit above is already DURABLE (ledger advanced) —
         # losing a version race during the post-commit maintenance ladder
@@ -2572,7 +2620,7 @@ class LakeTable:
             # but snapshot publishers must pin the batch's own commit)
             "version": m["version"],
             "schema_version": self.manifest()["current_schema_version"],
-            **(stats or {}),
+            "commit_ms": round((time.time() - t0) * 1000, 1),
         }
 
     def evolve_schema_for(self, incoming_payload: StructType) -> int:
@@ -2819,25 +2867,96 @@ class LakeTable:
 
         self._commit_metadata("drop-constraint", mutate)
 
-    def _commit_metadata(self, op: str, mutate) -> dict:
-        """Metadata-only commit with optimistic retry. Each of up to 10
-        attempts deep-copies the current manifest and lets ``mutate``
-        edit it in place; ``mutate`` returns False when the manifest
-        already holds the change (nothing is published). Otherwise the
-        copy is advanced and published as the next version, and a lost
-        version race (CommitConflict) reloads the winner's manifest for
-        the next attempt. Returns the manifest the table is now at."""
-        for _ in range(10):
+    def _commit_metadata(
+        self, op: str, mutate, added: "dict[str, list[dict]] | None" = None
+    ) -> dict:
+        """The re-apply loop: a commit that writes no data file (schema,
+        constraint and sort-order edits, and :meth:`commit_delta`'s
+        append of files already on disk). Each of up to
+        ``COMMIT_ATTEMPTS`` attempts deep-copies the current manifest
+        and lets ``mutate`` edit it in place; ``mutate`` returns False
+        when the manifest already holds the change (nothing is
+        published). Otherwise the copy is advanced and published as the
+        next version with ``added`` as its sidecar's entries (``mutate``
+        refills that dict per attempt), and a lost version race
+        (CommitConflict) reloads the winner's manifest for the next
+        attempt. A CommitConflict raised by ``mutate`` itself propagates
+        unretried. Returns the manifest the table is now at."""
+        for _ in range(COMMIT_ATTEMPTS):
             m = json.loads(json.dumps(self.manifest()))
             if not mutate(m):
                 return m
             self._advance(m, op)
             try:
-                self._publish(m)
+                self._publish(m, added=added)
                 return m
             except CommitConflict:
                 self._manifest_cache_version = -1  # force reload
-        raise CommitConflict(f"gave up after 10 {op} attempts at {self.path}")
+        raise CommitConflict(
+            f"gave up after {COMMIT_ATTEMPTS} {op} attempts at {self.path}"
+        )
+
+    def recompute_on_conflict(self, attempt):
+        """The recompute loop, for writers whose data files bake in the
+        state they read (patch merge, DML, a rollup refresh) or the
+        bucket layout they hashed with (row merges): re-applying such
+        files on top of another writer's commit would be wrong, so a
+        lost race re-runs ``attempt()`` whole — re-read, re-resolve,
+        rewrite — up to ``RECOMPUTE_ATTEMPTS`` times; the last
+        CommitConflict propagates (a loud refusal, never a silent
+        overwrite). Returns ``attempt()``'s result."""
+        for n in range(RECOMPUTE_ATTEMPTS):
+            try:
+                return attempt()
+            except CommitConflict:
+                if n == RECOMPUTE_ATTEMPTS - 1:
+                    raise
+                self._manifest_cache_version = -1  # force reload
+
+    def _write_and_commit(self, df: DataFrame, tag: str, commit, **write_opts):
+        """Write ``df`` (carrying ``_bucket``) as one run of data files
+        and return ``commit(entries)``. The run is deleted when the
+        commit loses (the CommitConflict propagates) or reports
+        ``skipped``: readers only see manifest-listed files, so an
+        uncommitted run is garbage either way."""
+        entries = self._write_data_files(
+            df, self.manifest()["version"] + 1, tag, **write_opts
+        )
+        try:
+            result = commit(entries)
+        except CommitConflict:
+            self._discard_unreferenced(entries)
+            raise
+        if result.get("skipped"):
+            self._discard_unreferenced(entries)
+        return result
+
+    def append_rows(
+        self,
+        df: DataFrame,
+        file_schema: StructType,
+        app_id: str,
+        epoch: int | None,
+        **commit_kw,
+    ) -> dict:
+        """Bucket ``df`` (internal shape: payload + ``_lsn`` +
+        ``_deleted``) with the table's layout, write it as one delta run
+        and commit it (:meth:`commit_delta`). The commit conflicts if a
+        :meth:`rebucket` changes the layout first — run it inside
+        :meth:`recompute_on_conflict` to re-bucket and retry."""
+        nb = self.n_buckets
+        return self._write_and_commit(
+            df.withColumn(_BUCKET_COL, self._bucket_expr(nb)),
+            "delta",
+            lambda entries: self.commit_delta(
+                entries,
+                file_schema,
+                app_id,
+                epoch,
+                expected_n_buckets=nb,
+                **commit_kw,
+            ),
+        )
 
     def _advance(self, m: dict, op: str = "append") -> None:
         m["parent_snapshot_id"] = m["snapshot_id"]
@@ -2958,7 +3077,6 @@ class LakeTable:
         epoch: int | None = None,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        compact: bool | None = None,
         update_mode: str = "row",
         on_violation: str = "fail",
         require_parent_version: int | None = None,
@@ -3033,22 +3151,17 @@ class LakeTable:
         # table state read by _patch_resolve, so the commit carries
         # require_parent_version — if ANY other writer commits between
         # the state read and the publish, the commit conflicts and the
-        # whole read-resolve-write cycle retries against the new state
-        # (bounded attempts, then a loud CommitConflict — never silent
-        # column loss). Row mode is a plain append, retried only if a
-        # concurrent rebucket() changed the layout under the batch —
-        # UNLESS the caller pinned ``require_parent_version`` (its batch
-        # was derived from that exact state, e.g. a rollup refresh):
-        # then a conflict propagates immediately so the CALLER can
-        # recompute, because re-applying the same stale batch is
-        # exactly the bug the pin exists to prevent.
-        if update_mode == "patch":
-            attempts = 5
-        elif require_parent_version is not None:
-            attempts = 1
-        else:
-            attempts = 3
-        for attempt in range(attempts):
+        # recompute loop re-runs the whole read-resolve-write cycle
+        # against the new state (bounded, then a loud CommitConflict —
+        # never silent column loss). Row mode is a plain append,
+        # recomputed only if a concurrent rebucket() changed the layout
+        # under the batch — UNLESS the caller pinned
+        # ``require_parent_version`` (its batch was derived from that
+        # exact state, e.g. a rollup refresh): then a conflict
+        # propagates immediately so the CALLER can recompute, because
+        # re-applying the same stale batch is exactly the bug the pin
+        # exists to prevent.
+        def attempt() -> dict:
             parent_v = (
                 self.manifest()["version"]
                 if update_mode == "patch"
@@ -3074,60 +3187,36 @@ class LakeTable:
             deduped, viol_obs = self._enforce_constraints(deduped, on_violation)
             # Observation piggybacks row/delete counts on the write job
             # itself — no second pass over the batch for metrics.
-            nb = self.n_buckets
             obs = Observation()
-            bucketed = deduped.observe(
+            counted = deduped.observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
                 F.sum(F.col(DELETED_COL).cast("int")).alias("deletes"),
-            ).withColumn(_BUCKET_COL, self._bucket_expr(nb))
-
-            new_entries = self._write_data_files(
-                bucketed, self.manifest()["version"] + 1, "delta"
             )
-
-            got = obs.get
-            rows = got.get("rows", 0)
-            n_del_row = got.get("deletes", 0) or 0
-            n_viol = _violations(viol_obs)
-
-            # Publish through commit_delta: delta commits are append-only,
-            # so its reload-and-retry loop makes a concurrent compaction/
-            # vacuum (CommitConflict) a retried commit instead of a
-            # dropped batch (unless require_parent_version pins the
-            # parent — see above).
-            try:
-                result = self.commit_delta(
-                    new_entries,
-                    cur_schema,  # the schema the files were CONFORMED to
-                    app_id,
-                    epoch,
-                    stats={
-                        "rows_applied": rows,
-                        "deletes": n_del_row,
-                        **(
-                            {"constraint_violations_dropped": n_viol}
-                            if n_viol
-                            else {}
-                        ),
-                    },
-                    compact=compact,
-                    require_parent_version=parent_v,
-                    expected_n_buckets=nb,
-                    op_tag=op_tag
-                    or ("patch-merge" if update_mode == "patch" else "append"),
-                )
-            except CommitConflict:
-                self._discard_unreferenced(new_entries)
-                self._manifest_cache_version = -1  # reload next read
-                if attempt == attempts - 1:
-                    raise
-                continue
-            if result.get("skipped"):
-                # epoch raced to committed while we were writing — discard
-                # the unreferenced files (readers only see manifest entries)
-                self._discard_unreferenced(new_entries)
+            # commit_delta's re-apply loop makes a concurrent compaction/
+            # vacuum a re-applied commit instead of a dropped batch
+            # (unless require_parent_version pins the parent — see above)
+            result = self.append_rows(
+                counted,
+                cur_schema,  # the schema the files were CONFORMED to
+                app_id,
+                epoch,
+                require_parent_version=parent_v,
+                op_tag=op_tag
+                or ("patch-merge" if update_mode == "patch" else "append"),
+            )
+            if not result.get("skipped"):
+                got = obs.get
+                result["rows_applied"] = got.get("rows", 0)
+                result["deletes"] = got.get("deletes", 0) or 0
+                n_viol = _violations(viol_obs)
+                if n_viol:
+                    result["constraint_violations_dropped"] = n_viol
             return result
+
+        if update_mode == "row" and require_parent_version is not None:
+            return attempt()
+        return self.recompute_on_conflict(attempt)
 
     def _discard_unreferenced(self, entries: dict[str, list[dict]]) -> None:
         """Delete data files that were written but never committed (their
@@ -3146,7 +3235,6 @@ class LakeTable:
         build_events,
         op: str,
         app_id: str,
-        attempts: int = 5,
     ) -> dict:
         """Shared engine for :meth:`delete_where` / :meth:`update_where`.
 
@@ -3169,7 +3257,8 @@ class LakeTable:
         predicate delete legitimately resurrects the row, which is the
         CDC-correct reading of out-of-band DML.
         """
-        for attempt in range(attempts):
+
+        def attempt() -> dict:
             v = self.manifest()["version"]
             matched = (
                 self._scan(version=v, where=where)
@@ -3195,26 +3284,22 @@ class LakeTable:
                         "scan": scan_info,
                     }
                 events = build_events(matched, int(mx) + 1)
-                try:
-                    result = self.merge_into(
-                        events,
-                        app_id=app_id,
-                        epoch=None,
-                        lsn_col="lsn",
-                        op_col="op",
-                        require_parent_version=v,
-                        op_tag=f"{op}-where",
-                    )
-                except CommitConflict:
-                    self._manifest_cache_version = -1
-                    if attempt == attempts - 1:
-                        raise
-                    continue
+                result = self.merge_into(
+                    events,
+                    app_id=app_id,
+                    epoch=None,
+                    lsn_col="lsn",
+                    op_col="op",
+                    require_parent_version=v,
+                    op_tag=f"{op}-where",
+                )
                 result["op"] = op
                 result["scan"] = scan_info
                 return result
             finally:
                 matched.unpersist()
+
+        return self.recompute_on_conflict(attempt)
 
     def delete_where(
         self, where: "list[tuple]", app_id: str = "dml"
@@ -3514,42 +3599,58 @@ class LakeTable:
             for e in b.get(part, [])
         ]
         df = self._read_files(entries, target)
-        if df is None:
-            new_entries: dict[str, list[dict]] = {}
-        else:
-            resolved = self._lww_resolve(df, target).withColumn(
-                _BUCKET_COL, self._bucket_expr(n_buckets)
+
+        def commit(new_entries: "dict[str, list[dict]]") -> dict:
+            m["n_buckets"] = n_buckets
+            m["buckets"] = {
+                b: {"base": es, "delta": []} for b, es in new_entries.items()
+            }
+            m["stats"]["total_files"] = sum(
+                len(es) for es in new_entries.values()
             )
-            new_entries = self._write_data_files(
-                resolved,
-                m["version"] + 1,
-                "base",
-                cluster_files=n_buckets * 4 if cluster else 0,
-                n_partitions=n_buckets,
-            )
-        m["n_buckets"] = n_buckets
-        m["buckets"] = {
-            b: {"base": es, "delta": []} for b, es in new_entries.items()
-        }
-        m["stats"]["total_files"] = sum(
-            len(es) for es in new_entries.values()
-        )
-        self._advance(m, "rebucket")
-        try:
+            self._advance(m, "rebucket")
             self._publish(m)
-        except CommitConflict:
-            # losing the version race after an O(table) rewrite must not
-            # leak a table-sized copy per attempt — reclaim, then let the
-            # caller rerun against the winner's state
-            self._discard_unreferenced(new_entries)
-            self._manifest_cache_version = -1
-            raise
-        return {
-            "rebucketed": True,
-            "n_buckets": n_buckets,
-            "files_written": sum(len(es) for es in new_entries.values()),
-        }
+            return {
+                "rebucketed": True,
+                "n_buckets": n_buckets,
+                "files_written": sum(len(es) for es in new_entries.values()),
+            }
+
+        if df is None:
+            return commit({})
+        # losing the version race after an O(table) rewrite must not
+        # leak a table-sized copy per attempt: the run is reclaimed and
+        # the caller reruns against the winner's state
+        return self._write_and_commit(
+            self._lww_resolve(df, target).withColumn(
+                _BUCKET_COL, self._bucket_expr(n_buckets)
+            ),
+            "base",
+            commit,
+            cluster_files=n_buckets * 4 if cluster else 0,
+            n_partitions=n_buckets,
+        )
 
     # convenience for tests / entry
     def count(self) -> int:
         return self.read().count()
+
+
+def discover_tables(
+    io: FileIO, warehouse: str, allow: "set[str]", block: "set[str]"
+) -> "list[str]":
+    """The tables of a warehouse, sorted, with allow/block lists — the
+    reference's S1/S2 source semantics (MultiTableDBSource.java:61-66,
+    table-name allow/block filters): every subdirectory holding at least
+    one manifest is a table (``LakeTable.exists``)."""
+    out = []
+    for name in sorted(io.listdir(warehouse)):
+        if name.startswith(("_", ".")):
+            continue  # _lineage / _errors / _staging / hidden
+        if allow and name not in allow:
+            continue
+        if name in block:
+            continue
+        if LakeTable.exists(os.path.join(warehouse, name), io=io):
+            out.append(name)
+    return out

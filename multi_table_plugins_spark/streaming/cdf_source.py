@@ -19,19 +19,25 @@ uses :meth:`LakeTable.table_changes` for net semantics) with columns
 
 Design, and why it scales:
 
+  * **The manifest log is read through LakeTable.** The driver side
+    opens a metadata-only ``LakeTable(None, path, io=io)`` — its
+    manifest methods never touch Spark, so they run inside the stream
+    reader's Python worker — and gets the log's format, the torn-read
+    retry on a manifest and the per-version walk from the one place
+    that writes them.
   * **Offsets are table versions** — ``latestOffset`` is one manifest
-    read; the checkpoint stores ``{"version": N}`` so a restarted
+    listing; the checkpoint stores ``{"version": N}`` so a restarted
     stream resumes exactly where it stopped (the lakehouse's own
     commit log is the replayable source, like Delta CDF / Iceberg
     incremental reads).
   * **A micro-batch's partitions are the delta FILES added in the
-    version range** (each commit's ``commit-<v>.json`` sidecar — the
-    same walk as ``LakeTable.table_changes``, O(new files) driver IO
-    per version with a manifest-diff fallback for legacy versions):
-    work is O(new changes), never O(table); compaction/vacuum/schema
-    commits record empty sidecars and produce empty batches — even
-    minor compaction, which physically writes new merged delta files,
-    re-emits nothing.
+    version range** (``LakeTable.added_delta_files``, the walk
+    ``table_changes`` uses: each commit's sidecar, O(new files) driver
+    IO per version, with a manifest-diff fallback for versions without
+    one): work is O(new changes), never O(table); compaction/vacuum/
+    schema commits record empty sidecars and produce empty batches —
+    even minor compaction, which physically writes new merged delta
+    files, re-emits nothing.
   * **Executors read parquet with pyarrow and emit Arrow record
     batches** — the Python Data Source's fast path; no per-row Python.
     Old-schema files are conformed to the stream's start schema
@@ -46,7 +52,6 @@ counterpart to its streaming CDC-*in* pipeline.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -58,30 +63,15 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..lakehouse.fileio import get_fileio
+from ..lakehouse.table import LakeTable, discover_tables
 from ..schemas import DELETED_COL, LSN_COL
-
-MANIFEST_DIR = "_manifests"
 
 CHANGE_OP_COL = "_change_op"
 COMMIT_VERSION_COL = "_commit_version"
 
 
-def _load_manifest(io, table_path: str, version: int) -> dict:
-    p = os.path.join(
-        table_path, MANIFEST_DIR, f"manifest-{version:08d}.json"
-    )
-    return json.loads(io.read_text(p))
-
-
-def _current_version(io, table_path: str) -> int:
-    d = os.path.join(table_path, MANIFEST_DIR)
-    best = -1
-    for name in io.listdir(d):
-        if name.startswith("manifest-") and name.endswith(".json"):
-            best = max(best, int(name[len("manifest-") : -len(".json")]))
-    if best < 0:
-        raise FileNotFoundError(f"no manifests under {d}")
-    return best
+def _head_version(io, table_path: str) -> int:
+    return LakeTable(None, table_path, io=io).versions()[-1]
 
 
 def _parse_start_ts(raw: str) -> float:
@@ -103,17 +93,13 @@ def _start_version_for_ts(io, table_path: str, ts: float) -> int:
     O(retained versions) metadata walk as ``version_as_of``. If the
     earliest retained manifest is already >= ``ts``, the whole retained
     history streams (start = earliest - 1)."""
-    d = os.path.join(table_path, MANIFEST_DIR)
-    vs = sorted(
-        int(n[len("manifest-") : -len(".json")])
-        for n in io.listdir(d)
-        if n.startswith("manifest-") and n.endswith(".json")
-    )
+    lt = LakeTable(None, table_path, io=io)
+    vs = lt.versions()
     if not vs:
-        raise FileNotFoundError(f"no manifests under {d}")
+        raise FileNotFoundError(f"no manifest under {table_path}")
     start = vs[0] - 1
     for v in vs:
-        if float(_load_manifest(io, table_path, v).get("ts") or 0.0) < ts:
+        if float(lt.manifest(v).get("ts") or 0.0) < ts:
             start = v
         else:
             # stop at the first commit stamped >= ts. This is the
@@ -128,70 +114,6 @@ def _start_version_for_ts(io, table_path: str, ts: float) -> int:
             # stamped >= target that sort before it.
             break
     return start
-
-
-def _load_commit_log(io, table_path: str, version: int) -> "dict | None":
-    p = os.path.join(
-        table_path, MANIFEST_DIR, f"commit-{version:08d}.json"
-    )
-    try:
-        return json.loads(io.read_text(p))
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def _added_delta_files(
-    io, table_path: str, v_from: int, v_to: int
-) -> "list[tuple[str, int, int, int, int]]":
-    """(relative path, schema version, commit version, rows, row
-    groups) of every delta file added by commits in ``(v_from, v_to]``
-    — the identical per-version walk as LakeTable.table_changes: each
-    version's ``commit-<v>.json`` sidecar (O(new files) driver IO, and
-    empty for compaction/vacuum/schema commits so their rewritten delta
-    files are never re-emitted as changes); versions without a sidecar
-    (legacy warehouse, crash window) fall back to diffing the full
-    cumulative manifest against the parent version's. rows/rgs are 0
-    for legacy entries that predate the metadata."""
-
-    def _rec(e: dict, v: int):
-        return (
-            e["path"],
-            int(e["sv"]),
-            v,
-            int(e.get("rows") or 0),
-            int(e.get("rgs") or 0),
-        )
-
-    out = []
-    prev: "tuple[int, set[str]] | None" = None  # (version, delta paths)
-    for v in range(v_from + 1, v_to + 1):
-        c = _load_commit_log(io, table_path, v)
-        if c is not None:
-            for es in c.get("added_delta", {}).values():
-                for e in es:
-                    out.append(_rec(e, v))
-            prev = None
-            continue
-        if prev is None or prev[0] != v - 1:
-            m_prev = _load_manifest(io, table_path, v - 1)
-            prev = (
-                v - 1,
-                {
-                    e["path"]
-                    for b in m_prev["buckets"].values()
-                    for e in b.get("delta", [])
-                },
-            )
-        m = _load_manifest(io, table_path, v)
-        paths = {}
-        for b in m["buckets"].values():
-            for e in b.get("delta", []):
-                paths[e["path"]] = e
-        for p, e in paths.items():
-            if p not in prev[1]:
-                out.append(_rec(e, v))
-        prev = (v, set(paths))
-    return out
 
 
 #: a delta file beyond this many rows is split into one stream
@@ -229,27 +151,6 @@ def _partitions_for(
                     file_path=full, commit_version=cv, table_name=table_name
                 )
             )
-    return out
-
-
-def _discover_tables(
-    io, warehouse: str, allow: "set[str]", block: "set[str]"
-) -> "list[str]":
-    """Warehouse table discovery with allow/block lists — the
-    reference's S1/S2 source semantics (MultiTableDBSource.java:61-66,
-    table-name allow/block filters) applied to CDC-out: every
-    subdirectory holding a manifest log is a table."""
-    out = []
-    for name in sorted(io.listdir(warehouse)):
-        if name.startswith(("_", ".")):
-            continue  # _lineage / _errors / _staging / hidden
-        if not io.isdir(os.path.join(warehouse, name, MANIFEST_DIR)):
-            continue
-        if allow and name not in allow:
-            continue
-        if name in block:
-            continue
-        out.append(name)
     return out
 
 
@@ -292,19 +193,42 @@ class LakeCDFStreamReader(DataSourceStreamReader):
                 self._io, self._path, _parse_start_ts(start_ts)
             )
         else:
-            self._start = _current_version(self._io, self._path)
+            self._start = _head_version(self._io, self._path)
 
     def initialOffset(self) -> dict:
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        return {"version": _current_version(self._io, self._path)}
+        return {"version": _head_version(self._io, self._path)}
 
     def partitions(self, start: dict, end: dict):
-        files = _added_delta_files(
-            self._io, self._path, start["version"], end["version"]
+        return self._partitions_of(
+            self._path, start["version"], end["version"]
         )
-        return _partitions_for(self._path, files)
+
+    def _partitions_of(
+        self,
+        table_path: str,
+        v_from: int,
+        v_to: int,
+        table_name: "str | None" = None,
+    ) -> "list[CDFPartition]":
+        """Partitions over the delta files commits in ``(v_from, v_to]``
+        added; rows/rgs are 0 for legacy entries that predate them."""
+        added, _ = LakeTable(None, table_path, io=self._io).added_delta_files(
+            v_from, v_to
+        )
+        files = [
+            (
+                e["path"],
+                int(e["sv"]),
+                v,
+                int(e.get("rows") or 0),
+                int(e.get("rgs") or 0),
+            )
+            for v, _, e in added
+        ]
+        return _partitions_for(table_path, files, table_name=table_name)
 
     def read(self, partition: CDFPartition):
         """Executor-side: one pyarrow parquet read, conformed to the
@@ -394,14 +318,14 @@ class WarehouseCDFStreamReader(LakeCDFStreamReader):
         )
 
     def _tables(self) -> "list[str]":
-        return _discover_tables(self._io, self._wh, self._allow, self._block)
+        return discover_tables(self._io, self._wh, self._allow, self._block)
 
     def _tpath(self, t: str) -> str:
         return os.path.join(self._wh, t)
 
     def _versions_now(self) -> dict:
         return {
-            t: _current_version(self._io, self._tpath(t))
+            t: _head_version(self._io, self._tpath(t))
             for t in self._tables()
         }
 
@@ -432,11 +356,7 @@ class WarehouseCDFStreamReader(LakeCDFStreamReader):
             if v_to <= v_from:
                 continue
             out.extend(
-                _partitions_for(
-                    self._tpath(t),
-                    _added_delta_files(self._io, self._tpath(t), v_from, v_to),
-                    table_name=t,
-                )
+                self._partitions_of(self._tpath(t), v_from, v_to, table_name=t)
             )
         return out
 
@@ -454,10 +374,7 @@ class LakeCDFDataSource(DataSource):
         return "lake_cdf"
 
     def _user_schema_of(self, io, path: str) -> StructType:
-        m = _load_manifest(io, path, _current_version(io, path))
-        return StructType.fromJson(
-            json.loads(m["schemas"][str(m["current_schema_version"])])
-        )
+        return LakeTable(None, path, io=io).schema()
 
     def schema(self) -> StructType:
         from ..schemas import merge_schemas
@@ -479,7 +396,7 @@ class LakeCDFDataSource(DataSource):
             _check_reserved(self.options["path"], user)
             out = StructType(user.fields[:])
         else:
-            tables = _discover_tables(
+            tables = discover_tables(
                 io,
                 wh,
                 _split_opt(self.options, "tables"),
@@ -542,8 +459,6 @@ def replicate_table(
     stream checkpoint; replicating multiple sources into one
     destination requires distinct ``app_id``s."""
     from pyspark.sql import functions as F
-
-    from ..lakehouse import LakeTable
 
     spark.dataSource.register(LakeCDFDataSource)
     io = get_fileio(fileio)

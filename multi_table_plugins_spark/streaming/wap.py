@@ -52,9 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..lakehouse.fileio import FileIO, get_fileio
 from ..lakehouse.snapshots import publish_snapshot
-from ..lakehouse.table import LakeTable
+from ..lakehouse.table import LakeTable, discover_tables
 from .cdc_pipeline import apply_cdc_batch
-from .cdf_source import _discover_tables
 from .lineage import LineageLog
 
 
@@ -141,7 +140,7 @@ def staged_tables(
     """{table: branch info} for every table that has ``branch``."""
     io = get_fileio(io)
     out: dict[str, dict] = {}
-    for t in _discover_tables(io, warehouse, set(), set()):
+    for t in discover_tables(io, warehouse, set(), set()):
         lt = LakeTable(None, os.path.join(warehouse, t), io=io)
         info = lt.branches().get(branch)
         if info is not None:

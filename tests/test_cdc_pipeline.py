@@ -5,6 +5,7 @@ error modes, and mid-stream schema evolution."""
 import glob
 import os
 import time
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,7 @@ from pyspark.sql.types import (
 from multi_table_plugins_spark.feed import FeedSpec, generate_feed, expected_final_state
 from multi_table_plugins_spark.lakehouse import LakeTable, latest_snapshot
 from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+from multi_table_plugins_spark.lakehouse.multi_merge import is_safe_table_name
 from multi_table_plugins_spark.schemas import CHANGE_FEED_SCHEMA
 from multi_table_plugins_spark.streaming import (
     apply_cdc_batch,
@@ -357,3 +359,31 @@ def test_fallback_checks_constraints_per_live_event(
         "c1",
     ]
     assert latest_snapshot(get_fileio(None), wh)["epoch"] == 1
+
+
+def test_reserved_names_rejected():
+    # '_batch' collides with merge_many's stats key; '_errors'/'_lineage'/
+    # '_staging' collide with engine directories
+    for bad in ("_batch", "_errors", "_lineage", "_staging", ".hidden"):
+        assert not is_safe_table_name(bad), bad
+    assert is_safe_table_name("a_b")  # interior underscores stay legal
+
+
+def test_isolated_path_rejects_traversal(spark, tmp_path, fail_next_merge_many):
+    t0 = datetime(2026, 1, 1)
+    rows = [
+        (1, "good_t", "I", "a", [1], 1, "web", t0),
+        (2, "../evil2", "I", "b", [2], 1, "web", t0),
+    ]
+    df = spark.createDataFrame(rows, CHANGE_FEED_SCHEMA)
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    before = set(os.listdir(str(tmp_path)))
+    # force the per-table fallback: the one-job apply fails once
+    fail_next_merge_many()
+    apply_cdc_batch(
+        spark, df, wh, epoch=0, app_id="sec2", error_mode="error-port",
+    )
+    assert LakeTable.exists(os.path.join(wh, "good_t"))
+    assert set(os.listdir(str(tmp_path))) == before
+    assert not any("evil" in n for n in os.listdir(wh))

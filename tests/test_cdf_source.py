@@ -533,3 +533,70 @@ def test_cdf_stream_starting_timestamp(spark, tmp_path):
             .start()
             .awaitTermination(60)
         )
+
+
+def test_stream_metadata_reads_retry_a_torn_manifest(spark, tmp_path):
+    """A manifest read while its body is still being written (the
+    generic backend's linkless fallback publishes by exclusive create,
+    then write) is retried, not parsed as corrupt: the stream's start
+    offset and its schema resolution both see the finished body."""
+    import threading
+
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.streaming.cdf_source import (
+        _start_version_for_ts,
+    )
+
+    p = str(tmp_path / "t")
+    t = LakeTable.create(spark, p, SCHEMA, key="doc_id", n_buckets=2)
+    _apply(spark, t, [(1, "I", 1, [1], "a")], 0)
+    _apply(spark, t, [(2, "I", 2, [2], "b")], 1)
+    v = t.manifest()["version"]
+    latest = os.path.join(p, "_manifests", f"manifest-{v:08d}.json")
+    with open(latest) as f:
+        body = f.read()
+
+    def torn() -> threading.Thread:
+        open(latest, "w").close()  # created, body not written yet
+
+        def fill():
+            time.sleep(0.05)
+            with open(latest, "w") as f:
+                f.write(body)
+
+        th = threading.Thread(target=fill)
+        th.start()
+        return th
+
+    th = torn()
+    try:
+        start = _start_version_for_ts(get_fileio(None), p, time.time() + 3600)
+    finally:
+        th.join()
+    assert start == v  # every version predates the instant
+
+    th = torn()
+    try:
+        schema = LakeCDFDataSource({"path": p}).schema()
+    finally:
+        th.join()
+    assert schema.fieldNames() == [
+        "doc_id", "tokens", "source", "_change_op", "_lsn", "_commit_version",
+    ]
+
+
+def test_discover_tables_skips_a_table_with_no_manifest_yet(tmp_path):
+    """A directory whose ``_manifests/`` holds no manifest yet (a create
+    caught mid-way) is not a table: discovery skips it rather than
+    handing the stream a table it cannot read."""
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.lakehouse.table import discover_tables
+
+    wh = str(tmp_path / "wh")
+    for t in ("a", "b", "c"):
+        LakeTable.create(None, os.path.join(wh, t), SCHEMA)
+    os.makedirs(os.path.join(wh, "half", "_manifests"))
+    os.makedirs(os.path.join(wh, "_lineage"))
+    io = get_fileio(None)
+    assert discover_tables(io, wh, set(), set()) == ["a", "b", "c"]
+    assert discover_tables(io, wh, {"a", "c", "half"}, {"c"}) == ["a"]

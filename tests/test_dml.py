@@ -30,6 +30,7 @@ from multi_table_plugins_spark.lakehouse.table import (
     CommitConflict,
     ConstraintViolation,
 )
+from tests.test_lakehouse import unreferenced_data_files
 
 SCHEMA = StructType(
     [
@@ -258,6 +259,8 @@ def test_dml_raises_after_persistent_conflicts(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(t, "_write_data_files", always_conflict)
     with pytest.raises(CommitConflict):
         t.delete_where([("source", "=", "web")])
+    # every losing attempt's delta run was discarded
+    assert unreferenced_data_files(t) == set()
 
 
 def test_dml_brute_force_equivalence_compound_key(spark, tmp_path):

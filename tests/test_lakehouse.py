@@ -31,6 +31,26 @@ CH = StructType(
 )
 
 
+def unreferenced_data_files(t, versions=None) -> "set[str]":
+    """Parquet files under ``t``'s data directory (relative to the
+    table root) that no manifest of ``versions`` lists (default: the
+    current one)."""
+    listed = {
+        e["path"]
+        for v in (versions if versions is not None else [None])
+        for b in t.manifest(v)["buckets"].values()
+        for part in ("base", "delta")
+        for e in b.get(part, [])
+    }
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), t.path)
+        for d, _, fs in os.walk(os.path.join(t.path, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    return on_disk - listed
+
+
 def _changes(spark, rows):
     return spark.createDataFrame(
         [(l, o, k, t, len(t) if t is not None else None, "web") for l, o, k, t in rows],
@@ -195,3 +215,26 @@ def test_bucket_pruning_only_rewrites_touched_buckets(spark, tmp_table_dir):
         if b != touched:
             assert after[b] == files  # untouched buckets not rewritten
     assert after[touched] != base_files[touched]
+
+
+def test_crash_between_write_and_publish_does_not_poison(spark, tmp_table_dir, monkeypatch):
+    """Simulate a crash after data files are written but before the
+    manifest publishes: the replayed epoch must succeed, not die on a
+    'path already exists' collision."""
+    t = LakeTable.create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2)
+    orig_publish = t._publish
+    calls = {"n": 0}
+
+    def crashing_publish(m, added=None):
+        if calls["n"] == 0:
+            calls["n"] += 1
+            raise RuntimeError("simulated crash before manifest publish")
+        return orig_publish(m, added=added)
+
+    monkeypatch.setattr(t, "_publish", crashing_publish)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.merge_into(_changes(spark, [(1, "I", "a", [1])]), app_id="c", epoch=0)
+    # replay of the same epoch succeeds (fresh uuid-suffixed data dir)
+    r = t.merge_into(_changes(spark, [(1, "I", "a", [1])]), app_id="c", epoch=0)
+    assert r["skipped"] is False
+    assert _state(t) == {"a": [1]}

@@ -235,3 +235,95 @@ def test_fast_path_handles_rebucketed_table(spark, tmp_path):
     assert t1.lookup(50).count() == 1
     snap = latest_snapshot(get_fileio(None), wh)
     assert snap["epoch"] == 1  # snapshot still advances past the batch
+
+
+def test_slow_lane_rebuckets_after_concurrent_rebucket(
+    spark, tmp_path, monkeypatch
+):
+    """merge_many's slow lane (here: a table with a CHECK constraint)
+    hashes its rows with the layout it read; a rebucket() landing
+    before its commit makes the commit conflict, and the recompute loop
+    re-buckets with the new layout and commits. The losing run's files
+    are discarded."""
+    import os
+
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+    from tests.test_lakehouse import unreferenced_data_files
+
+    feed_schema = StructType(
+        [StructField("table_name", StringType(), False), *CH.fields]
+    )
+
+    def feed(rows):
+        return spark.createDataFrame(rows, feed_schema)
+
+    wh = str(tmp_path / "wh")
+    merge_many(
+        spark,
+        feed([("t0", i, "I", i, [i], "s") for i in range(10)]),
+        wh,
+        app_id="sl",
+        epoch=0,
+        n_buckets=4,
+    )
+    p = os.path.join(wh, "t0")
+    LakeTable(spark, p).add_constraint("nonneg", "doc_id >= 0")
+    fired = {"n": 0}
+    orig = LakeTable._write_data_files
+
+    def hooked(self, df, version, tag, **kw):
+        if fired["n"] == 0:
+            fired["n"] += 1
+            LakeTable(spark, p).rebucket(8)  # layout changes mid-merge
+        return orig(self, df, version, tag, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", hooked)
+    res = merge_many(
+        spark,
+        feed([("t0", 1000, "I", 50, [5], "late")]),
+        wh,
+        app_id="sl",
+        epoch=1,
+        n_buckets=4,
+    )
+    monkeypatch.undo()
+    assert fired["n"] == 1
+    assert res["t0"]["skipped"] is False and res["t0"]["rows_applied"] == 1
+    t = LakeTable(spark, p)
+    assert t.n_buckets == 8
+    assert all(int(b) < 8 for b in t.manifest()["buckets"])
+    assert t.lookup(50).count() == 1  # filed under its NEW bucket
+    state = _state(t)
+    assert len(state) == 11 and state[50] == ([5], "late")
+    assert unreferenced_data_files(t, versions=t.versions()) == set()
+
+
+def test_n_buckets_mismatch_refused(spark, tmp_path):
+    import os
+    from datetime import datetime
+
+    from multi_table_plugins_spark.schemas import CHANGE_FEED_SCHEMA
+    from multi_table_plugins_spark.streaming import apply_cdc_batch
+    from tests.test_lakehouse import _state
+
+    t0 = datetime(2026, 1, 1)
+    rows = [(1, "t0", "I", "a", [1], 1, "web", t0)]
+    df = spark.createDataFrame(rows, CHANGE_FEED_SCHEMA)
+    wh = str(tmp_path / "wh")
+    apply_cdc_batch(spark, df, wh, epoch=0, app_id="nb", n_buckets=4)
+    # second batch with a different bucket layout: the table must refuse
+    # (skip mode: failure isolated, no corruption) rather than mis-file data
+    rows2 = [(2, "t0", "U", "a", [2], 1, "web", t0)]
+    df2 = spark.createDataFrame(rows2, CHANGE_FEED_SCHEMA)
+    r = apply_cdc_batch(
+        spark, df2, wh, epoch=1, app_id="nb", n_buckets=8, error_mode="skip"
+    )
+    # the fast path refuses the mismatched layout; the isolated fallback
+    # applies via merge_into, which buckets with the TABLE's own layout —
+    # correct data, no mis-filed buckets
+    assert r["failed"] == []
+    lt = LakeTable(spark, os.path.join(wh, "t0"))
+    assert _state(lt) == {"a": [2]}
+    assert lt.n_buckets == 4  # layout unchanged
+    # every registered bucket id respects the table's layout
+    assert all(int(b) < 4 for b in lt.manifest()["buckets"])

@@ -38,6 +38,7 @@ from multi_table_plugins_spark.lakehouse.table import (
     CommitConflict,
     _prune_value,
 )
+from tests.test_lakehouse import unreferenced_data_files
 from multi_table_plugins_spark.streaming import LakeCDFDataSource
 
 SCHEMA = StructType(
@@ -463,6 +464,8 @@ def test_patch_merge_raises_after_persistent_conflicts(
             update_mode="patch",
         )
     assert fired["n"] == 5  # bounded attempts, loud refusal
+    # every losing attempt's delta run was discarded
+    assert unreferenced_data_files(t) == set()
     # table reflects the LAST concurrent write — nothing lost, nothing
     # half-applied
     row = t.read().collect()[0]

@@ -8,6 +8,8 @@ structurally reading only the range's added delta files plus the
 touched buckets of the v0 snapshot (asserted via ``_mtp_cdf_info``).
 """
 
+import os
+
 import pytest
 from pyspark.sql.types import (
     ArrayType,
@@ -19,6 +21,7 @@ from pyspark.sql.types import (
 )
 
 from multi_table_plugins_spark.lakehouse import LakeTable
+from multi_table_plugins_spark.streaming.lineage import LineageLog
 
 SCHEMA = StructType(
     [
@@ -197,3 +200,68 @@ def test_cdf_from_version_zero_is_all_inserts(table):
     got = _got_diff(table.table_changes(0))
     assert len(got) == 60
     assert all(v[0] == "insert" for v in got.values())
+
+
+# ---------------------------------------------------------------------------
+# a commit whose sidecar fails to write lands, is recorded, and the feed
+# falls back to the manifest diff
+# ---------------------------------------------------------------------------
+
+_RANGE = (
+    [(1000 + k, "U", k, [99, k], "s2") for k in range(3)]
+    + [(2000, "D", 10, None, None)]
+    + [(3000, "I", 100, [1], "s")]
+)
+
+
+def _fail_sidecars(monkeypatch, io):
+    real = io.publish_atomic
+
+    def publish(path, data):
+        if os.path.basename(path).startswith("commit-"):
+            raise OSError("injected sidecar write failure")
+        return real(path, data)
+
+    monkeypatch.setattr(io, "publish_atomic", publish)
+
+
+def _assert_recorded_and_diffed(table, v0, v1):
+    recs = [
+        r
+        for r in LineageLog(os.path.dirname(table.path)).read()
+        if r["kind"] == "degraded"
+    ]
+    assert len(recs) == 1, recs
+    assert recs[0]["site"] == "commit_sidecar"
+    assert recs[0]["table"] == os.path.basename(table.path)
+    assert recs[0]["version"] == v1
+    assert "injected sidecar write failure" in recs[0]["error"]
+    assert table._load_commit_log(v1) is None  # the diff fallback serves v1
+    got = _got_diff(table.table_changes(v0, v1))
+    exp = _expected_diff(table, v0, v1)
+    assert {k: v[0] for k, v in got.items()} == {k: v[0] for k, v in exp.items()}
+    for k, (_ct, payload, _lsn) in exp.items():
+        assert got[k][1] == payload, k
+
+
+def test_commit_sidecar_failure_is_recorded(spark, table, monkeypatch):
+    v0 = table.manifest()["version"]
+    _fail_sidecars(monkeypatch, table.io)
+    _apply(spark, table, _RANGE, 1)
+    monkeypatch.undo()
+    v1 = table.manifest()["version"]
+    assert v1 == v0 + 1  # the commit landed
+    assert table.last_committed_epoch("cdf") == 1
+    _assert_recorded_and_diffed(table, v0, v1)
+
+
+def test_fast_forward_sidecar_failure_is_recorded(spark, table, monkeypatch):
+    v0 = table.manifest()["version"]
+    table.create_branch("wap")
+    _apply(spark, table.branch_of("wap"), _RANGE, 1)
+    _fail_sidecars(monkeypatch, table.io)
+    out = table.fast_forward("wap")
+    monkeypatch.undo()
+    v1 = table.manifest()["version"]
+    assert out["published_versions"] == [v1] and v1 == v0 + 1
+    _assert_recorded_and_diffed(table, v0, v1)

@@ -106,3 +106,15 @@ def test_timestamp_time_travel(spark, tmp_table_dir):
         t.read(as_of=0.0)
     with pytest.raises(ValueError):
         t.read(version=1, as_of=ts_v1)
+
+
+def test_vacuum_updates_total_files(spark, tmp_table_dir):
+    t = LakeTable.create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2)
+    t.merge_into(_changes(spark, [(1, "I", "a", [1]), (2, "I", "b", [2])]), app_id="v", epoch=0)
+    t.merge_into(_changes(spark, [(5, "D", "a", None)]), app_id="v", epoch=1)
+    t.vacuum_tombstones(lsn_watermark=10)
+    m = t.manifest()
+    actual = sum(
+        len(b.get("base", [])) + len(b.get("delta", [])) for b in m["buckets"].values()
+    )
+    assert m["stats"]["total_files"] == actual
