@@ -16,14 +16,20 @@ write side:
      FileIO seam (hard links on local fs, copy/conditional-PUT on the
      generic/object-store backend — see fileio.py), read row counts
      from parquet footers (no job), and make one atomic ledger-checked
-     manifest commit per table.
+     manifest commit per table;
+  4. one job folds every due table (``table.compact_due``): the tables
+     whose delta stacks reached the compaction threshold are read,
+     LWW-resolved per (table, bucket, key) and written with one more
+     ``partitionBy(table, bucket)`` write, then placed and committed
+     per table the same way (``table.fold_tables``).
 
 Row/delete counts, the watermark and the max LSN ride the write job via
 ``Observation`` — zero extra passes.
 
 Crash safety: a crash after some tables committed and others not is
 healed on replay — committed tables' ledgers skip, uncommitted apply.
-Orphaned staging files are ignored by readers (only manifest-listed
+A crash between the commits and the fold leaves buckets over threshold,
+and the table's next commit folds them. Orphaned staging files are ignored by readers (only manifest-listed
 files are visible) — a vacuum can reclaim them.
 """
 
@@ -51,20 +57,16 @@ def is_safe_table_name(name: str) -> bool:
 from ..schemas import DELETED_COL, LSN_COL, payload_schema_of_changes
 from .fileio import FileIO, get_fileio
 from .table import (
+    _BUCKET_COL,
+    _TABLE_COL,
+    COMMIT_THREADS,
     DATA_DIR,
     DELTA_WRITE_OPTS,
     LakeTable,
-    _STATS_V,
-    _footer_meta,
+    _place_run,
     _violations,
+    compact_due,
 )
-
-_BUCKET_COL = "_bucket"
-_TABLE_COL = "_table"
-
-#: threads committing tables concurrently — inside one ``merge_many``
-#: call, and across the per-table calls of a fast-path fallback
-COMMIT_THREADS = 8
 
 
 def merge_many(
@@ -164,7 +166,7 @@ def merge_many(
     got = obs.get
 
     results: dict[str, dict] = {}
-
+    handles: dict[str, LakeTable] = {}
     unsafe: list[str] = []
 
     def _commit_table_slow(lt: LakeTable, table: str, tdir: str) -> None:
@@ -221,6 +223,7 @@ def merge_many(
             io=io,
             branch=branch,
         )
+        handles[table] = lt
         if lt.key_cols != key_cols:
             # same corruption class as a bucket-count mismatch: the
             # bucket hash is order-sensitive over the key tuple, so a
@@ -239,35 +242,11 @@ def merge_many(
             _commit_table_slow(lt, table, tdir)
             return
         dest_rel = f"{DATA_DIR}/e{epoch if epoch is not None else 'x'}-{uuid.uuid4().hex[:8]}"
-        entries: dict[str, list[dict]] = {}
-        total_rows = 0
-        for bdir in io.listdir(os.path.join(staging, tdir)):
-            if not bdir.startswith(f"{_BUCKET_COL}="):
-                continue
-            bucket = bdir.split("=", 1)[1]
-            io.makedirs(os.path.join(tpath, dest_rel, bdir))
-            for fn in io.listdir(os.path.join(staging, tdir, bdir)):
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, tdir, bdir, fn)
-                rel = os.path.join(dest_rel, bdir, fn)
-                dst = os.path.join(tpath, rel)
-                io.add_file(src, dst)
-                # same single footer read as the slow path: row count +
-                # key/_lsn min/max so fast-path files are file-skippable
-                rows, stats, rgs = _footer_meta(dst, key_cols + [LSN_COL], io)
-                total_rows += rows
-                entry = {
-                    "path": rel,
-                    "sv": 0,  # set by commit_delta
-                    "bytes": io.getsize(dst),
-                    "rows": rows,
-                    "rgs": rgs,
-                }
-                if stats:
-                    entry["stats"] = stats
-                    entry["stats_v"] = _STATS_V
-                entries.setdefault(bucket, []).append(entry)
+        # sv 0 is a placeholder: commit_delta tags the files' schema
+        entries = _place_run(
+            io, os.path.join(staging, tdir), tpath, dest_rel,
+            key_cols + [LSN_COL], 0,
+        )
         # expected_n_buckets: these entries were hashed with the bucket
         # count read at planning time — a concurrent rebucket() must
         # conflict here, not silently file rows under wrong bucket ids
@@ -281,8 +260,6 @@ def merge_many(
         if m.get("skipped"):
             # epoch already committed (crash replay) — discard placed files
             io.remove_tree(os.path.join(tpath, dest_rel))
-        else:
-            m["rows_applied"] = total_rows
         results[table] = m
 
     tdirs = sorted(
@@ -316,6 +293,16 @@ def merge_many(
         io.remove_tree(staging)
         # remove the shared staging parent when no other batch is mid-flight
         io.remove_dir_if_empty(os.path.dirname(staging))
+
+    # one job folds every table that the commits made due; a table
+    # whose fold fails is a failed table, as a failed commit is
+    folded = sorted(t for t, m in results.items() if not m.get("skipped"))
+    for t, r in zip(folded, compact_due([handles[t] for t in folded])):
+        if isinstance(r, Exception):
+            commit_failures[t] = r
+            del results[t]
+        else:
+            results[t].update(r)
 
     if commit_failures:
         # committed tables' ledgers make a retry a no-op for them; the

@@ -43,11 +43,13 @@ exactly what this layer adds.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
@@ -63,10 +65,16 @@ from ..schemas import (
 from .fileio import FileIO, get_fileio
 
 _BUCKET_COL = "_bucket"
+_TABLE_COL = "_table"
 _Z_COL = "__zvalue"
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 REFS_DIR = "_refs"
+
+#: threads placing and committing tables concurrently after one shared
+#: write (``merge_many``'s per-table commits, :func:`fold_tables`), and
+#: across the per-table calls of a fast-path fallback
+COMMIT_THREADS = 8
 
 #: write options for SHORT-LIVED delta files (folded by compaction):
 #: random token ids don't compress and the encode CPU is ~20% of apply
@@ -278,6 +286,64 @@ def _footer_meta(
         return _meta(path)
     with io.open_input(path) as f:
         return _meta(f)
+
+
+def _stat_cols(m: dict, base: bool) -> "list[str]":
+    """Columns whose min/max a new file's entry records: the key and
+    ``_lsn`` always; BASE files also the payload stats columns (one
+    row per key post-LWW, so payload bounds prune soundly there —
+    see _scan). Delta files skip those: payload pruning never
+    applies to a version stack, so the stats would be dead manifest
+    bytes."""
+    k = m["key"]
+    cols = ([k] if isinstance(k, str) else list(k)) + [LSN_COL]
+    return cols + (m.get("stats_columns") or []) if base else cols
+
+
+def _place_run(
+    io: FileIO,
+    src: str,
+    table_path: str,
+    rel: str,
+    stat_cols: "list[str]",
+    sv: int,
+) -> "dict[str, list[dict]]":
+    """Manifest entries ``{bucket: [entry]}`` for one run of
+    ``_bucket=N/*.parquet`` files at ``table_path/rel``. A run staged
+    elsewhere (``src``: a multi-table write's per-table directory) is
+    first placed file by file through the FileIO seam (hard link on the
+    local backend, copy on the object-store-shaped one); a run written
+    in place (``src`` is ``table_path/rel``) is only catalogued. One
+    footer read per file gives its row count and the min/max of
+    ``stat_cols``, so manifest-level file skipping stays free at read
+    time (the Iceberg data-skipping shape)."""
+    dst_root = os.path.join(table_path, rel)
+    placed = src != dst_root
+    entries: dict[str, list[dict]] = {}
+    for bdir in io.listdir(src):
+        if not bdir.startswith(f"{_BUCKET_COL}="):
+            continue
+        if placed:
+            io.makedirs(os.path.join(dst_root, bdir))
+        for fn in io.listdir(os.path.join(src, bdir)):
+            if not fn.endswith(".parquet"):
+                continue
+            dst = os.path.join(dst_root, bdir, fn)
+            if placed:
+                io.add_file(os.path.join(src, bdir, fn), dst)
+            rows, stats, rgs = _footer_meta(dst, stat_cols, io)
+            entry = {
+                "path": os.path.join(rel, bdir, fn),
+                "sv": sv,
+                "bytes": io.getsize(dst),
+                "rows": rows,
+                "rgs": rgs,
+            }
+            if stats:
+                entry["stats"] = stats
+                entry["stats_v"] = _STATS_V
+            entries.setdefault(bdir.split("=", 1)[1], []).append(entry)
+    return entries
 
 
 def _prune_value(v, dtype, session_tz_is_utc: bool):
@@ -906,15 +972,19 @@ class LakeTable:
 
     def manifest(self, version: int | None = None) -> dict:
         """Latest manifest, or a pinned historical ``version`` (time travel
-        — every commit's manifest is retained, like Iceberg snapshots)."""
+        — every commit's manifest is retained, like Iceberg snapshots).
+        A pinned version names its file, so it is read without listing
+        the log."""
+        if version is not None:
+            try:
+                return self._load_manifest(f"manifest-{version:08d}.json")
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"no version {version} at {self.path}"
+                ) from None
         names = self._manifest_files()
         if not names:
             raise FileNotFoundError(f"no manifest under {self.path}")
-        if version is not None:
-            name = f"manifest-{version:08d}.json"
-            if name not in names:
-                raise FileNotFoundError(f"no version {version} at {self.path}")
-            return self._load_manifest(name)
         latest = names[-1]
         v = int(latest[len("manifest-") : -len(".json")])
         if v == self._manifest_cache_version and self._manifest_cache:
@@ -1252,7 +1322,7 @@ class LakeTable:
             except (FileNotFoundError, FileExistsError):
                 pass  # legacy branch without one / resumed fast-forward
             except OSError as e:
-                self._sidecar_degraded(v, e)
+                self._degraded("commit_sidecar", v, e)
             published.append(v)
         self._manifest_cache_version = -1
         self.delete_branch(name)
@@ -1286,7 +1356,7 @@ class LakeTable:
         only the CAS winner writes one, and a missing sidecar (legacy
         warehouse, or a crash between manifest publish and sidecar
         write) falls back to the manifest diff. A sidecar that fails to
-        write is recorded (:meth:`_sidecar_degraded`), not raised.
+        write is recorded (:meth:`_degraded`), not raised.
         """
         v = manifest["version"]
         final = os.path.join(self._mdir, f"manifest-{v:08d}.json")
@@ -1312,23 +1382,25 @@ class LakeTable:
                 ),
             )
         except OSError as e:
-            self._sidecar_degraded(v, e)
+            self._degraded("commit_sidecar", v, e)
 
-    def _sidecar_degraded(self, version: int, e: OSError) -> None:
-        """A commit landed without its sidecar: readers fall back to the
-        manifest diff for ``version``, so the commit stands, but the
-        loss is logged and recorded as one ``degraded`` lineage record
-        (``site: commit_sidecar``) in the warehouse holding the table."""
+    def _degraded(self, site: str, version: int, e: Exception) -> None:
+        """A commit stands with something missing — a lost sidecar
+        (``site: commit_sidecar``; readers fall back to the manifest
+        diff for ``version``) or a lost post-commit fold (``site:
+        compaction``; the next commit folds the buckets again). Logged,
+        and recorded as one ``degraded`` lineage record in the warehouse
+        holding the table."""
         from ..streaming.lineage import LineageLog
 
         logging.getLogger(__name__).warning(
-            "commit sidecar of v%s at %s not written", version, self.path,
-            exc_info=True,
+            "%s of v%s at %s degraded", site, version, self.path,
+            exc_info=e,
         )
         LineageLog(os.path.dirname(self.path)).emit(
             {
                 "kind": "degraded",
-                "site": "commit_sidecar",
+                "site": site,
                 "table": os.path.basename(self.path),
                 "version": version,
                 "error": f"{type(e).__name__}: {e}",
@@ -1440,8 +1512,8 @@ class LakeTable:
     ) -> dict:
         """Persist a default sort order (Iceberg sort-order-spec
         analog): every compaction WITHOUT explicit cluster arguments —
-        including the threshold-triggered auto-compactions inside
-        ``commit_delta`` — then applies it, so a clustered/Z-ordered
+        including the threshold-triggered auto-compactions after a
+        merge (:func:`compact_due`) — then applies it, so a clustered/Z-ordered
         layout survives steady-state CDC instead of being silently
         flattened by the next automatic fold. ``cluster_by=None``
         clears the order (compactions go back to plain fold);
@@ -1675,8 +1747,11 @@ class LakeTable:
                 )
         return df
 
-    def _lww_resolve(self, df: DataFrame, target: StructType) -> DataFrame:
-        """One row per key (tuple): the row with the max ``_lsn``.
+    def _lww_resolve(
+        self, df: DataFrame, target: StructType, by: "tuple[str, ...]" = ()
+    ) -> DataFrame:
+        """One row per key (tuple): the row with the max ``_lsn``; with
+        ``by``, one row per (``by``, key), ``by`` columns leading.
 
         ``max_by`` hash-aggregates with map-side partial combine — one
         shuffle keyed on the merge key(s), no sort. LSNs are globally
@@ -1685,7 +1760,7 @@ class LakeTable:
         keys = self.key_cols
         others = [f.name for f in target.fields if f.name not in keys]
         agg = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(LSN_COL)).alias("_s")
-        return df.groupBy(*keys).agg(agg).select(*keys, "_s.*")
+        return df.groupBy(*by, *keys).agg(agg).select(*by, *keys, "_s.*")
 
     def read(
         self,
@@ -2316,40 +2391,14 @@ class LakeTable:
             w = w.options(**DELTA_WRITE_OPTS)
         w.mode("error").parquet(out)
         m = self.manifest()
-        sv = m["current_schema_version"]
-        entries: dict[str, list[dict]] = {}
-        for bdir in self.io.listdir(out):
-            if not bdir.startswith(f"{_BUCKET_COL}="):
-                continue
-            bucket = bdir.split("=", 1)[1]
-            for fn in self.io.listdir(os.path.join(out, bdir)):
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(out, bdir, fn)
-                # one footer read per file: row count for metrics +
-                # key-column min/max for manifest-level file skipping
-                # (read-time pruning is then pure driver-side interval
-                # math — the Iceberg data-skipping shape). BASE writes
-                # additionally record the table's payload stats columns
-                # (one row per key post-LWW, so payload bounds prune
-                # soundly there — see _scan); delta files skip them:
-                # payload pruning never applies to a version stack, so
-                # the stats would be dead manifest bytes
-                stat_cols = self.key_cols + [LSN_COL]
-                if tag != "delta":
-                    stat_cols += m.get("stats_columns") or []
-                rows, stats, rgs = _footer_meta(full, stat_cols, self.io)
-                entry = {
-                    "path": os.path.join(rel, bdir, fn),
-                    "sv": sv,
-                    "bytes": self.io.getsize(full),
-                    "rows": rows,
-                    "rgs": rgs,
-                }
-                if stats:
-                    entry["stats"] = stats
-                    entry["stats_v"] = _STATS_V
-                entries.setdefault(bucket, []).append(entry)
+        entries = _place_run(
+            self.io,
+            out,
+            self.path,
+            rel,
+            _stat_cols(m, base=tag != "delta"),
+            m["current_schema_version"],
+        )
         if tag == "delta" and m.get("bloom_filters") and entries:
             self._attach_blooms(out, entries)
         return entries
@@ -2488,9 +2537,10 @@ class LakeTable:
         Used by the multi-table fast path: the caller wrote one
         partitioned dataset for MANY tables in a single Spark job and
         hands each table its file entries here. Handles the exactly-once
-        ledger, schema registration (``file_schema`` = the files' actual
-        payload schema) + evolution of the current schema, and threshold
-        compaction. Returns metrics (``commit_ms`` included);
+        ledger and schema registration (``file_schema`` = the files'
+        actual payload schema) + evolution of the current schema;
+        threshold compaction is the caller's next step
+        (:func:`compact_due`). Returns metrics (``commit_ms`` included);
         ``skipped=True`` if the epoch was already committed (caller
         should discard the files).
 
@@ -2579,31 +2629,6 @@ class LakeTable:
                 "version": cur_m["version"],
                 "commit_ms": round((time.time() - t0) * 1000, 1),
             }
-        threshold = m["compact_threshold"]
-        cow = m["mode"] == "cow"
-        to_compact = [
-            b
-            for b, v in m["buckets"].items()
-            if v.get("delta") and (cow or len(v["delta"]) >= threshold)
-        ]
-        # the data commit above is already DURABLE (ledger advanced) —
-        # losing a version race during the post-commit maintenance ladder
-        # must not surface as a failed batch; the next commit or an
-        # explicit maintenance call re-attempts the fold
-        try:
-            if to_compact:
-                self.compact(to_compact)
-            minor = m.get("minor_compact_threshold")
-            if minor:
-                to_minor = [
-                    b
-                    for b, v in m["buckets"].items()
-                    if b not in to_compact and len(v.get("delta", [])) >= minor
-                ]
-                if to_minor:
-                    self.compact_deltas(to_minor)
-        except CommitConflict:
-            self._manifest_cache_version = -1  # reload next read
         return {
             "skipped": False,
             "buckets_touched": sorted(entries_by_bucket, key=int),
@@ -2614,12 +2639,12 @@ class LakeTable:
             "rows_applied": sum(
                 e.get("rows", 0) for es in entries_by_bucket.values() for e in es
             ),
-            "snapshot_id": self.snapshot_id(),
-            # the DATA commit's version (m is the manifest this call
-            # published — maintenance may have advanced the table since,
+            # the DATA commit's snapshot (m is the manifest this call
+            # published — a later fold or writer may advance the table,
             # but snapshot publishers must pin the batch's own commit)
+            "snapshot_id": m["snapshot_id"],
             "version": m["version"],
-            "schema_version": self.manifest()["current_schema_version"],
+            "schema_version": m["current_schema_version"],
             "commit_ms": round((time.time() - t0) * 1000, 1),
         }
 
@@ -3215,8 +3240,15 @@ class LakeTable:
             return result
 
         if update_mode == "row" and require_parent_version is not None:
-            return attempt()
-        return self.recompute_on_conflict(attempt)
+            result = attempt()
+        else:
+            result = self.recompute_on_conflict(attempt)
+        if not result.get("skipped"):
+            folded = compact_due([self])[0]
+            if isinstance(folded, Exception):
+                raise folded
+            result.update(folded)
+        return result
 
     def _discard_unreferenced(self, entries: dict[str, list[dict]]) -> None:
         """Delete data files that were written but never committed (their
@@ -3415,35 +3447,50 @@ class LakeTable:
         minor-merge deltas when they stack up → fold into base rarely.
         Tombstones survive the merge (deletes stay deletes), so
         base ⊎ merged-delta resolves to the identical state.
+
+        ``buckets`` defaults to every bucket holding >= 2 deltas. A
+        one-table call of :func:`fold_tables`; a lost version race
+        deletes the merged run and raises ``CommitConflict``.
         """
-        m = json.loads(json.dumps(self.manifest()))
-        if buckets is None:
-            buckets = [b for b, v in m["buckets"].items() if len(v.get("delta", [])) >= 2]
-        buckets = [b for b in buckets if len(m["buckets"].get(b, {}).get("delta", [])) >= 2]
-        if not buckets:
-            return {"minor_compacted_buckets": []}
-        target = self._internal_schema(self.schema())
-        entries = [e for b in buckets for e in m["buckets"][b]["delta"]]
-        df = self._read_files(entries, target)
-        resolved = self._lww_resolve(df, target).withColumn(
-            _BUCKET_COL, self._bucket_expr()
-        )
-        new_entries = self._write_data_files(resolved, m["version"] + 1, "delta")
+        return self._fold(buckets, minor=True)
+
+    def _fold(self, buckets: "list[str] | None", minor: bool) -> dict:
+        r = fold_tables([(self, buckets)], minor=minor)[0]
+        if isinstance(r, Exception):
+            raise r
+        return r
+
+    def _commit_fold(
+        self,
+        m: dict,
+        buckets: "list[str]",
+        new_entries: "dict[str, list[dict]]",
+        minor: bool,
+    ) -> dict:
+        """Publish a fold of ``buckets`` on ``m``, the manifest copy the
+        fold read: the new run replaces each bucket's deltas (minor) or
+        its base and deltas (major). Raises ``CommitConflict`` when
+        another writer took the version; the caller deletes the run."""
         stray = set(new_entries) - set(buckets)
         if stray:
+            # rows re-bucketed outside the folded buckets means the files
+            # were written with a different n_buckets — refusing beats
+            # silently dropping those files from the manifest
             raise RuntimeError(
-                f"minor compaction re-bucketed rows into {sorted(stray)} — "
+                f"compaction re-bucketed rows into {sorted(stray)} — "
                 f"bucket-layout mismatch at {self.path}"
             )
         for b in buckets:
-            m["buckets"][b]["delta"] = new_entries.get(b, [])
+            if not minor:
+                m["buckets"][b]["base"] = new_entries.get(b, [])
+            m["buckets"][b]["delta"] = new_entries.get(b, []) if minor else []
         m["stats"]["total_files"] = sum(
             len(v.get("base", [])) + len(v.get("delta", []))
             for v in m["buckets"].values()
         )
-        self._advance(m, "compact-minor")
+        self._advance(m, "compact-minor" if minor else "compact")
         self._publish(m)
-        return {"minor_compacted_buckets": sorted(buckets, key=int)}
+        return {_fold_key(minor): sorted(buckets, key=int)}
 
     def compact(
         self,
@@ -3456,7 +3503,10 @@ class LakeTable:
         """Fold delta files into the base for ``buckets`` (default: all
         buckets that have deltas). Base keeps tombstones so late lower-LSN
         updates can never resurrect deleted keys; ``vacuum_tombstones``
-        drops them once the feed's low-water mark passes.
+        drops them once the feed's low-water mark passes. Unclustered,
+        this is a one-table call of :func:`fold_tables`; on either lane a
+        lost version race deletes the new run and raises
+        ``CommitConflict``.
 
         ``cluster=True`` additionally range-clusters each rewritten
         bucket base on the key into ~``files_per_bucket`` files per
@@ -3514,62 +3564,37 @@ class LakeTable:
                     f"cluster_by column(s) {missing} not in table "
                     f"schema {sorted(names)}"
                 )
+        if not cluster:
+            return self._fold(buckets, minor=False)
         m = json.loads(json.dumps(self.manifest()))
-        if buckets is None:
-            if cluster:
-                # a clustering rewrite is worthwhile even for buckets
-                # with no deltas (it reshapes the base itself)
-                buckets = [
-                    b
-                    for b, v in m["buckets"].items()
-                    if v.get("delta") or v.get("base")
-                ]
-            else:
-                buckets = [b for b, v in m["buckets"].items() if v.get("delta")]
-        keep = (
-            (lambda b: b.get("delta") or b.get("base"))
-            if cluster
-            else (lambda b: b.get("delta"))
-        )
-        buckets = [b for b in buckets if keep(m["buckets"].get(b, {}))]
+        # a clustering rewrite is worthwhile even for buckets with no
+        # deltas (it reshapes the base itself)
+        buckets = [
+            b
+            for b in (m["buckets"] if buckets is None else buckets)
+            if m["buckets"].get(b, {}).get("delta")
+            or m["buckets"].get(b, {}).get("base")
+        ]
         if not buckets:
             return {"compacted_buckets": []}
         target = self._internal_schema(self.schema())
-        entries: list[dict] = []
-        for b in buckets:
-            entries.extend(m["buckets"][b].get("base", []))
-            entries.extend(m["buckets"][b].get("delta", []))
-        df = self._read_files(entries, target)
-        resolved = self._lww_resolve(df, target).withColumn(
-            _BUCKET_COL, self._bucket_expr()
-        )
-        new_entries = self._write_data_files(
-            resolved,
-            m["version"] + 1,
+        entries = [
+            e
+            for b in buckets
+            for part in ("base", "delta")
+            for e in m["buckets"][b].get(part, [])
+        ]
+        df = self._read_files(entries, target, m)
+        return self._write_and_commit(
+            self._lww_resolve(df, target).withColumn(
+                _BUCKET_COL, self._bucket_expr()
+            ),
             "base",
-            cluster_files=len(buckets) * files_per_bucket if cluster else 0,
+            lambda new: self._commit_fold(m, buckets, new, minor=False),
+            cluster_files=len(buckets) * files_per_bucket,
             cluster_cols=cluster_by,
             zorder=zorder,
         )
-        stray = set(new_entries) - set(buckets)
-        if stray:
-            # rows re-bucketed outside the buckets being compacted means
-            # the deltas were written with a different n_buckets — refusing
-            # beats silently dropping those files from the manifest
-            raise RuntimeError(
-                f"compaction re-bucketed rows into {sorted(stray)} — "
-                f"bucket-layout mismatch at {self.path}"
-            )
-        for b in buckets:
-            m["buckets"][b]["base"] = new_entries.get(b, [])
-            m["buckets"][b]["delta"] = []
-        m["stats"]["total_files"] = sum(
-            len(v.get("base", [])) + len(v.get("delta", []))
-            for v in m["buckets"].values()
-        )
-        self._advance(m, "compact")
-        self._publish(m)
-        return {"compacted_buckets": sorted(buckets, key=int)}
 
     def rebucket(self, n_buckets: int, cluster: bool = False) -> dict:
         """Change the table's bucket count — bucket-layout evolution
@@ -3634,6 +3659,171 @@ class LakeTable:
     # convenience for tests / entry
     def count(self) -> int:
         return self.read().count()
+
+
+def fold_tables(
+    jobs: "list[tuple[LakeTable, list[str] | None]]", minor: bool = False
+) -> "list[dict | Exception]":
+    """Fold the buckets of many tables with ONE Spark job per group of
+    alike tables — the one-job-over-N-tables shape of the reference
+    (MultiTableDBSource.java:61-66) that ``merge_many`` uses to apply a
+    batch. ``jobs`` pairs a table with the buckets to fold (None: all).
+    A major fold rewrites a bucket's base and deltas as one base file;
+    a minor fold (``minor=True``) merges its deltas (>= 2) into one
+    delta file. Tables sharing a warehouse, internal schema, key and
+    bucket count form a group: its job reads every folded file tagged
+    with its table, hash-partitions on ``(_table, _bucket)`` — which
+    already clusters the per-(table, bucket, key) LWW aggregate, so the
+    plan has one exchange — and writes one staged ``partitionBy(_table,
+    _bucket)`` run. Per table, the driver places its files through the
+    FileIO seam (:func:`_place_run`) and publishes its manifest by CAS.
+
+    Returns one result per job: the fold's result dict, or the
+    exception that failed it (a group's job failing fails each of its
+    tables; a lost version race is a ``CommitConflict``). A failed
+    table keeps no new file."""
+    out: "list[dict | Exception]" = [{} for _ in jobs]
+    groups: "dict[tuple, list]" = {}
+    for i, (lt, buckets) in enumerate(jobs):
+        m = json.loads(json.dumps(lt.manifest()))
+        buckets = [
+            b
+            for b in (m["buckets"] if buckets is None else buckets)
+            if len(m["buckets"].get(b, {}).get("delta", [])) >= 1 + minor
+        ]
+        if not buckets:
+            out[i] = {_fold_key(minor): []}
+            continue
+        sv = str(m["current_schema_version"])
+        target = lt._internal_schema(schema_from_json(m["schemas"][sv]))
+        g = (os.path.dirname(lt.path), target.json(), str(m["key"]), m["n_buckets"])
+        groups.setdefault(g, []).append((i, lt, m, buckets, target))
+    for (warehouse, *_), members in groups.items():
+        staging = os.path.join(warehouse, "_staging", f"fold-{uuid.uuid4().hex[:8]}")
+
+        def publish(member) -> None:
+            i, lt, m, buckets, _ = member
+            tag = "delta" if minor else "base"
+            rel = f"{DATA_DIR}/v{m['version'] + 1:08d}-{tag}-{uuid.uuid4().hex[:8]}"
+            src = os.path.join(staging, f"{_TABLE_COL}={i}")
+            try:
+                entries = {}
+                if lt.io.isdir(src):
+                    entries = _place_run(
+                        lt.io, src, lt.path, rel,
+                        _stat_cols(m, base=not minor),
+                        m["current_schema_version"],
+                    )
+                if minor and m.get("bloom_filters") and entries:
+                    lt._attach_blooms(os.path.join(lt.path, rel), entries)
+                out[i] = lt._commit_fold(m, buckets, entries, minor)
+            except Exception as e:
+                lt.io.remove_tree(os.path.join(lt.path, rel))
+                out[i] = e
+
+        io = members[0][1].io
+        try:
+            _fold_write(members, minor, staging)
+            with ThreadPoolExecutor(max_workers=COMMIT_THREADS) as ex:
+                list(ex.map(publish, members))
+        except Exception as e:  # the shared job; publish() keeps its own
+            for i, *_ in members:
+                out[i] = e
+        finally:
+            io.remove_tree(staging)
+            io.remove_dir_if_empty(os.path.dirname(staging))
+    return out
+
+
+def _fold_key(minor: bool) -> str:
+    return "minor_compacted_buckets" if minor else "compacted_buckets"
+
+
+def _fold_write(members: list, minor: bool, staging: str) -> None:
+    """The shared job of one :func:`fold_tables` group."""
+    _, lt0, m0, _, target = members[0]
+    parts = ("delta",) if minor else ("base", "delta")
+    df = functools.reduce(
+        DataFrame.unionByName,
+        [
+            lt._read_files(
+                [e for b in bs for p in parts for e in m["buckets"][b].get(p, [])],
+                target,
+                m,
+            ).withColumn(_TABLE_COL, F.lit(i))
+            for i, lt, m, bs, _ in members
+        ],
+    )
+    resolved = lt0._lww_resolve(
+        df.withColumn(_BUCKET_COL, lt0._bucket_expr(m0["n_buckets"]))
+        .repartition(F.col(_TABLE_COL), F.col(_BUCKET_COL)),
+        target,
+        by=(_TABLE_COL, _BUCKET_COL),
+    )
+    w = resolved.write.partitionBy(_TABLE_COL, _BUCKET_COL)
+    w.options(**(DELTA_WRITE_OPTS if minor else {})).mode("error").parquet(staging)
+
+
+def compact_due(tables: "list[LakeTable]") -> "list[dict | Exception]":
+    """The threshold ladder after data commits (``merge_many``'s last
+    step, and ``merge_into``'s): buckets whose deltas reached
+    ``compact_threshold`` (any delta, in COW mode) fold into their base;
+    with ``minor_compact_threshold`` set, other buckets whose deltas
+    reached it get a minor fold. Plain tables share one
+    :func:`fold_tables` job per kind; a table with a persisted sort
+    order takes its own clustered lane (:meth:`LakeTable.compact`).
+
+    Returns one dict per table: ``compacted_buckets`` and/or
+    ``minor_compacted_buckets`` plus ``compact_ms`` (the wall time of
+    the fold calls it was in) if it folded — or the exception that
+    failed its fold. The data commits are durable, so a fold that loses
+    the version race is no failure: its run is gone, one ``degraded``
+    lineage record (``site: compaction``, the data commit's
+    ``version``) names the table, and the next commit folds again."""
+    out: "list[dict | Exception]" = [{} for _ in tables]
+    versions, major, lanes, small, lost = {}, [], [], [], set()
+    for n, lt in enumerate(tables):
+        m = lt.manifest()
+        versions[n] = m["version"]
+        deltas = {b: len(v.get("delta", [])) for b, v in m["buckets"].items()}
+        cut = 1 if m["mode"] == "cow" else max(1, m["compact_threshold"])
+        due = [b for b, k in deltas.items() if k >= cut]
+        least = m.get("minor_compact_threshold")
+        rest = [b for b, k in deltas.items() if least and b not in due and k >= least]
+        if due:
+            (lanes if m.get("sort_order") else major).append((n, due))
+        if rest:
+            small.append((n, rest))
+
+    def run(jobs, fold) -> None:
+        if not jobs:
+            return
+        t0 = time.time()
+        results = fold([(tables[n], b) for n, b in jobs])
+        ms = (time.time() - t0) * 1000
+        for (n, _), r in zip(jobs, results):
+            if isinstance(r, Exception):
+                lost.add(n)
+                if isinstance(r, CommitConflict):
+                    tables[n]._degraded("compaction", versions[n], r)
+                else:
+                    out[n] = r
+            else:
+                out[n].update(r, compact_ms=round(out[n].get("compact_ms", 0) + ms, 1))
+
+    def clustered(jobs) -> list:
+        results = []
+        for lt, b in jobs:
+            try:
+                results.append(lt.compact(b))
+            except Exception as e:
+                results.append(e)
+        return results
+
+    run(major, fold_tables)
+    run(lanes, clustered)
+    run([j for j in small if j[0] not in lost], lambda jobs: fold_tables(jobs, True))
+    return out
 
 
 def discover_tables(

@@ -600,3 +600,34 @@ def test_discover_tables_skips_a_table_with_no_manifest_yet(tmp_path):
     io = get_fileio(None)
     assert discover_tables(io, wh, set(), set()) == ["a", "b", "c"]
     assert discover_tables(io, wh, {"a", "c", "half"}, {"c"}) == ["a"]
+
+
+def test_pinned_manifest_reads_do_not_list_the_log(tmp_path):
+    """``manifest(v)`` opens ``manifest-<v>.json`` by name: the
+    startingTimestamp walk over a 51-version log lists ``_manifests/``
+    once, not once per version, and a missing version still says so."""
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.streaming.cdf_source import (
+        _start_version_for_ts,
+    )
+
+    p = str(tmp_path / "t")
+    t = LakeTable.create(None, p, SCHEMA)
+    for i in range(50):
+        t.set_sort_order(["source"] if i % 2 == 0 else None)
+    assert t.versions() == list(range(51))
+    inner = get_fileio(None)
+    listed = []
+
+    class Counting:
+        def __getattr__(self, name):
+            return getattr(inner, name)
+
+        def listdir(self, path):
+            listed.append(path)
+            return inner.listdir(path)
+
+    assert _start_version_for_ts(Counting(), p, time.time() + 3600) == 50
+    assert len(listed) <= 2, listed
+    with pytest.raises(FileNotFoundError, match="no version 99"):
+        LakeTable(None, p, io=Counting()).manifest(99)

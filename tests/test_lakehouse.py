@@ -238,3 +238,224 @@ def test_crash_between_write_and_publish_does_not_poison(spark, tmp_table_dir, m
     r = t.merge_into(_changes(spark, [(1, "I", "a", [1])]), app_id="c", epoch=0)
     assert r["skipped"] is False
     assert _state(t) == {"a": [1]}
+
+
+# --- threshold compaction after merge_many: one job folds every due table ---
+
+MM = "table_name string, lsn long, op string, k long, n long"
+
+
+def _mm_batch(spark, tables, lsn0, keys=range(40), delete=()):
+    rows, lsn = [], lsn0
+    for t in tables:
+        for k in keys:
+            gone = k in delete
+            rows.append((t, lsn, "D" if gone else "U", k, None if gone else lsn))
+            lsn += 1
+    return spark.createDataFrame(rows, MM)
+
+
+def _by_key(df):
+    return {r["k"]: r.asDict() for r in df.collect()}
+
+
+def _count_parquet_writes(monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    n = {"writes": 0}
+    real = DataFrameWriter.parquet
+
+    def counted(self, *a, **kw):
+        n["writes"] += 1
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    return n
+
+
+def _assert_folded(lt, r, op="compact"):
+    """``lt``'s newest commit is the fold of its data commit ``r``: the
+    state is unchanged, every folded bucket holds one file and, for a
+    major fold, no delta."""
+    m = lt.manifest()
+    assert m["op"] == op and m["version"] == r["version"] + 1
+    assert _by_key(lt.read(version=r["version"])) == _by_key(lt.read())
+    for b in m["buckets"].values():
+        if op == "compact":
+            assert len(b["base"]) == 1 and b["delta"] == []
+        else:
+            assert b["base"] == [] and len(b["delta"]) == 1
+
+
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_one_job_folds_every_due_table(spark, tmp_path, monkeypatch, backend):
+    """A batch that makes three tables due folds them with one write
+    after the batch write; each table's state is unchanged by its fold
+    and the shared staging directory is gone."""
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+
+    wh = str(tmp_path / "wh")
+    io = get_fileio(backend)
+    kw = dict(app_id="f", n_buckets=2, compact_threshold=2, key_col="k", io=io)
+    names = ["a", "b", "c"]
+    merge_many(spark, _mm_batch(spark, names, 1), wh, epoch=0, **kw)
+    writes = _count_parquet_writes(monkeypatch)
+    res = merge_many(
+        spark, _mm_batch(spark, names, 1000, delete={0, 7}), wh, epoch=1, **kw
+    )
+    assert writes["writes"] == 2  # the batch write and ONE fold write
+    for t in names:
+        lt = LakeTable(spark, os.path.join(wh, t), io=io)
+        assert res[t]["compacted_buckets"] == ["0", "1"]
+        assert res[t]["compact_ms"] > 0
+        _assert_folded(lt, res[t])
+        assert len(_by_key(lt.read())) == 38  # tombstones stay hidden
+    assert not os.path.exists(os.path.join(wh, "_staging"))
+
+
+def test_fold_groups_tables_by_schema(spark, tmp_path, monkeypatch):
+    """Two tables due in the same batch, one of them evolved with an
+    added column: one fold job per schema, both fold to the state they
+    had, and the evolved table's rows keep the added column."""
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+
+    wh = str(tmp_path / "wh")
+    kw = dict(app_id="f", n_buckets=1, compact_threshold=3, key_col="k")
+    merge_many(spark, _mm_batch(spark, ["a", "b"], 1), wh, epoch=0, **kw)
+    a = LakeTable(spark, os.path.join(wh, "a"))
+    b = LakeTable(spark, os.path.join(wh, "b"))
+    a.merge_into(
+        spark.createDataFrame(
+            [(500 + k, "U", k, k, f"x{k}") for k in range(10)],
+            "lsn long, op string, k long, n long, x string",
+        ),
+        app_id="side",
+    )
+    b.merge_into(
+        spark.createDataFrame(
+            [(500 + k, "U", k, k) for k in range(10, 20)],
+            "lsn long, op string, k long, n long",
+        ),
+        app_id="side",
+    )
+    assert a.schema().fieldNames() == ["k", "n", "x"]
+    writes = _count_parquet_writes(monkeypatch)
+    res = merge_many(
+        spark, _mm_batch(spark, ["a", "b"], 1000, keys=range(5, 45)), wh,
+        epoch=1, **kw,
+    )
+    assert writes["writes"] == 3  # the batch write and one fold per schema
+    for lt, t in ((a, "a"), (b, "b")):
+        assert res[t]["compacted_buckets"] == ["0"]
+        _assert_folded(lt, res[t])
+    got = _by_key(a.read())
+    assert got[3]["x"] == "x3" and got[3]["n"] == 3  # side write kept
+    assert got[7]["x"] is None and got[7]["n"] > 1000  # batch wins by lsn
+
+
+def test_sorted_table_keeps_its_clustered_lane(spark, tmp_path, monkeypatch):
+    """A table with a persisted sort order, due alongside plain tables,
+    compacts on its own clustered lane (several base files per bucket);
+    the plain tables share one fold job."""
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+
+    wh = str(tmp_path / "wh")
+    kw = dict(app_id="f", n_buckets=2, compact_threshold=2, key_col="k")
+    names = ["a", "b", "z"]
+    merge_many(spark, _mm_batch(spark, names, 1, keys=range(120)), wh, epoch=0, **kw)
+    z = LakeTable(spark, os.path.join(wh, "z"))
+    z.set_sort_order([], files_per_bucket=3)
+    writes = _count_parquet_writes(monkeypatch)
+    res = merge_many(
+        spark, _mm_batch(spark, names, 1000, keys=range(120)), wh, epoch=1, **kw
+    )
+    assert writes["writes"] == 3  # batch write, shared fold, clustered lane
+    for t in ("a", "b"):
+        _assert_folded(LakeTable(spark, os.path.join(wh, t)), res[t])
+    assert res["z"]["compacted_buckets"] == ["0", "1"]
+    m = z.manifest()
+    assert m["op"] == "compact" and m["version"] == res["z"]["version"] + 1
+    assert all(b["delta"] == [] for b in m["buckets"].values())
+    assert all(len(b["base"]) > 1 for b in m["buckets"].values())
+    assert _by_key(z.read(version=res["z"]["version"])) == _by_key(z.read())
+
+
+def test_minor_ladder_uses_the_shared_fold(spark, tmp_path, monkeypatch):
+    """With ``minor_compact_threshold`` reached, both tables' deltas are
+    merged by one minor fold call (one job); bases stay empty."""
+    from multi_table_plugins_spark.lakehouse import table as table_mod
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+
+    wh = str(tmp_path / "wh")
+    kw = dict(
+        app_id="f", n_buckets=2, compact_threshold=100,
+        minor_compact_threshold=2, key_col="k",
+    )
+    merge_many(spark, _mm_batch(spark, ["a", "b"], 1), wh, epoch=0, **kw)
+    calls = []
+    real = table_mod.fold_tables
+
+    def spy(jobs, minor=False):
+        calls.append((sorted(os.path.basename(lt.path) for lt, _ in jobs), minor))
+        return real(jobs, minor=minor)
+
+    monkeypatch.setattr(table_mod, "fold_tables", spy)
+    writes = _count_parquet_writes(monkeypatch)
+    res = merge_many(
+        spark, _mm_batch(spark, ["a", "b"], 1000, delete={3}), wh, epoch=1, **kw
+    )
+    assert calls == [(["a", "b"], True)]
+    assert writes["writes"] == 2
+    for t in ("a", "b"):
+        assert res[t]["minor_compacted_buckets"] == ["0", "1"]
+        _assert_folded(LakeTable(spark, os.path.join(wh, t)), res[t], "compact-minor")
+
+
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_lost_fold_leaves_no_run_and_is_recorded(spark, tmp_path, monkeypatch, backend):
+    """A fold that loses the version race after the data commit: the
+    data commit stands, the fold's placed run is deleted, one
+    ``degraded`` record names the table, and the next batch folds the
+    buckets. An explicit ``compact()`` that loses raises instead, and
+    leaves no run either."""
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
+    from multi_table_plugins_spark.streaming.lineage import LineageLog
+
+    wh = str(tmp_path / "wh")
+    io = get_fileio(backend)
+    kw = dict(app_id="f", n_buckets=2, compact_threshold=2, key_col="k", io=io)
+    merge_many(spark, _mm_batch(spark, ["a"], 1), wh, epoch=0, **kw)
+    real = LakeTable._publish
+    lose = {"n": 1}
+
+    def publish(self, manifest, added=None):
+        if manifest["op"] == "compact" and lose["n"]:
+            lose["n"] -= 1
+            raise CommitConflict("injected lost fold")
+        return real(self, manifest, added=added)
+
+    monkeypatch.setattr(LakeTable, "_publish", publish)
+    res = merge_many(spark, _mm_batch(spark, ["a"], 1000), wh, epoch=1, **kw)
+    a = LakeTable(spark, os.path.join(wh, "a"), io=io)
+    assert lose["n"] == 0 and "compacted_buckets" not in res["a"]
+    assert a.last_committed_epoch("f") == 1
+    assert a.manifest()["version"] == res["a"]["version"]
+    assert not unreferenced_data_files(a, a.versions())
+    recs = [r for r in LineageLog(wh).read() if r["kind"] == "degraded"]
+    assert len(recs) == 1, recs
+    assert recs[0]["site"] == "compaction" and recs[0]["table"] == "a"
+    assert recs[0]["version"] == res["a"]["version"]
+    assert "injected lost fold" in recs[0]["error"]
+
+    res = merge_many(spark, _mm_batch(spark, ["a"], 2000), wh, epoch=2, **kw)
+    assert res["a"]["compacted_buckets"] == ["0", "1"]
+    _assert_folded(a, res["a"])
+    assert not unreferenced_data_files(a, a.versions())
+
+    merge_many(spark, _mm_batch(spark, ["a"], 3000), wh, epoch=3, **kw)
+    lose["n"] = 1
+    with pytest.raises(CommitConflict, match="injected lost fold"):
+        a.compact()
+    assert not unreferenced_data_files(a, a.versions())
