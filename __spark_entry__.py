@@ -2517,18 +2517,17 @@ SELECT id_a, id_b, ROUND(j, 4) AS jaccard FROM scored WHERE j >= 0.5
 def q_scd2_history(spark, sf_dir):
     """SCD2 battery: the full validity-interval history per business key
     (one key-shuffle + per-key sorted window; no global sort) PLUS
-    point-in-time navigation over it — ``scd2_as_of`` marks the exact
-    rows live at the probe instant (``asof_hit``), so history
-    reconstruction and as-of lookup are both oracle-checked in one
-    battery."""
+    point-in-time navigation over it — ``asof_hit`` marks the exact
+    rows live at the probe instant (``valid_from <= t < valid_to``), so
+    history reconstruction and as-of lookup are both oracle-checked in
+    one battery."""
     from multi_table_plugins_spark.operators.scd2 import scd2_history
 
     ev = _r(spark, sf_dir, "events")
     hist = scd2_history(
         ev, keys=["user_id"], order_by=["ts", "event_id"], payload=["event_type", "value"]
     )
-    # as-of marking INLINE on the single window pass (the same interval
-    # predicate scd2_as_of applies — operators/scd2.py:57): the previous
+    # as-of marking INLINE on the single window pass: the previous
     # shape filtered a second copy of ``hist`` and left-joined it back on
     # (user_id, version_num), which ran the key-window twice and added a
     # join + exchange for a value that is a pure row-local predicate.

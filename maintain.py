@@ -117,7 +117,7 @@ def _spark(cpus_env: str = "SPARK_GRAFT_CPUS"):
 def _tables_of(warehouse: str, io, only: "list[str]") -> "list[str]":
     from multi_table_plugins_spark.lakehouse.table import discover_tables
 
-    names = discover_tables(io, warehouse, set(only), set())
+    names = list(discover_tables(io, warehouse, set(only), set()))
     if only:
         missing = sorted(set(only) - set(names))
         if missing:
@@ -479,7 +479,6 @@ def main() -> None:
                     "rows": lt.count(),
                     "n_buckets": m["n_buckets"],
                     "key": m["key"],
-                    "bloom_filters": bool(m.get("bloom_filters")),
                     "sort_order": m.get("sort_order"),
                     "constraints": m.get("constraints") or {},
                     "dropped_columns": m.get("dropped_columns") or [],

@@ -28,10 +28,6 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def l2_sq(a: Column | str, b: Column | str) -> Column:
     """Squared L2 distance — fold of (x-y)^2 in array order (oracle:
     ``list_sum(list_transform(list_zip(a,b), x -> (x1-x2)^2))``)."""

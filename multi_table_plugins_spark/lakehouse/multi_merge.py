@@ -76,7 +76,6 @@ def merge_many(
     app_id: str,
     epoch: int | None,
     n_buckets: int = 16,
-    table_mode: str = "mor",
     compact_threshold: int = 16,
     minor_compact_threshold: int | None = None,
     key_col: "str | list[str]" = "doc_id",
@@ -217,7 +216,6 @@ def merge_many(
             payload_schema,
             key=key_col,
             n_buckets=n_buckets,
-            mode=table_mode,
             compact_threshold=compact_threshold,
             minor_compact_threshold=minor_compact_threshold,
             io=io,

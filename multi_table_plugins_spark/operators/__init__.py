@@ -1,8 +1,7 @@
-"""Operator package. ``release_cached`` is the companion to the
-``_mtp_cached`` convention: operators that must persist an intermediate
-frame (materialization barriers for interpreted HOF chains) attach the
-persisted handle(s) to their returned DataFrame; callers release them
-once the result is materialized."""
+"""Operator package. The ``_mtp_cached`` convention: operators that must
+persist an intermediate frame (materialization barriers for interpreted
+HOF chains) attach the persisted handle(s) to their returned DataFrame;
+callers unpersist them once the result is materialized."""
 
 from __future__ import annotations
 
@@ -27,13 +26,3 @@ def fan_out(df):
     if parts < target:
         return df.repartition(target)
     return df
-
-
-def release_cached(df) -> None:
-    """Unpersist whatever ``df._mtp_cached`` carries (a single frame or
-    a list of frames). Safe no-op when nothing is attached."""
-    cached = getattr(df, "_mtp_cached", None)
-    if cached is None:
-        return
-    for frame in cached if isinstance(cached, (list, tuple)) else [cached]:
-        frame.unpersist()

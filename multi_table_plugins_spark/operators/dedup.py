@@ -1,17 +1,14 @@
 """Deduplication family for web-scale training-data curation.
 
 Scale design: every method here avoids the O(n²) all-pairs comparison —
-candidates are generated by hash bucketing (exact) or LSH band
-bucketing (MinHash), so the shuffle key always bounds the comparison
+candidates are generated by LSH band bucketing (MinHash) or an
+inverted shingle index, so the shuffle key always bounds the comparison
 set. Verification (exact Jaccard) runs only inside candidate buckets.
 Everything is Catalyst higher-order-function expressions; no Python UDFs.
 
-  * exact_dedup          — md5 content hash groupBy, one shuffle
   * minhash_signatures   — n independent murmur3 min-hashes over shingles
   * lsh_candidate_pairs  — banding → bucket join → verified Jaccard
-  * minhash_dedup        — keep canonical doc per near-dup cluster
   * simhash64            — 64-bit SimHash over words (xxhash64 bit votes)
-  * ngram_jaccard        — exact Jaccard between two text columns
 """
 
 from __future__ import annotations
@@ -19,23 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.textfns import word_shingles, words
-
-
-# ---------------------------------------------------------------------------
-# exact
-# ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the smallest-id row per exact content hash. One hash-shuffle;
-    partial aggregation map-side. Equivalent SQL: min(id) group by md5(text)."""
-    h = F.md5(F.col(text_col)).alias("_h")
-    keep = (
-        df.select(h, F.col(id_col))
-        .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col))
-        .drop("_h")
-    )
-    return df.join(keep, id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -92,7 +72,7 @@ def minhash_signatures(
     sig = _minhash_sig_expr(num_hashes).alias("sig")
     out = base.select(id_col, "shingles", sig)
     # expose the cached frame so pipeline callers can release it
-    # (minhash_dedup does; one-shot query contexts rely on LRU eviction)
+    # (one-shot query contexts rely on LRU eviction)
     out._mtp_cached = base
     return out
 
@@ -271,31 +251,7 @@ def lsh_candidate_pairs(
     return pairs
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Drop near-duplicates: within each near-dup pair the larger id is
-    removed (greedy canonicalization — at threshold≥0.7 clusters are
-    near-cliques, so min-id-per-cluster and iterated-pair-removal agree
-    for the common case; a connected-components pass would be the exact
-    cluster semantics at massive scale)."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
-    pairs = lsh_candidate_pairs(
-        sigs, id_col, num_bands, threshold, num_hashes=num_hashes
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    out = df.join(losers, id_col, "left_anti").localCheckpoint(eager=True)
-    # result is materialized — release the pipeline's cached frames
-    from . import release_cached
 
-    release_cached(sigs)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -513,15 +469,3 @@ def shingle_jaccard_pairs(
     # the result is materialized; one-shot queries rely on LRU eviction
     pairs._mtp_cached = sh_all
     return pairs
-
-
-def ngram_jaccard(df: DataFrame, text_a: str, text_b: str, k: int = 3) -> DataFrame:
-    """Exact k-gram Jaccard between two text columns (pair-scoring
-    primitive used by the verify stage)."""
-    return df.withColumn(
-        "jaccard",
-        jaccard(
-            F.array_distinct(word_shingles(text_a, k)),
-            F.array_distinct(word_shingles(text_b, k)),
-        ),
-    )

@@ -52,14 +52,3 @@ def scd2_history(
         F.row_number().over(w).cast("long").alias("version_num"),
         F.lead(ts).over(w).isNull().alias("is_current"),
     )
-
-
-def scd2_as_of(history: DataFrame, ts_expr) -> DataFrame:
-    """Point-in-time lookup over an SCD2 frame: the version valid at
-    ``ts_expr`` (a Column or literal). Pure filter — pushes down to the
-    scan when the history is stored partitioned/sorted by key."""
-    t = F.lit(ts_expr)  # passes Column arguments through unchanged
-    return history.where(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    )

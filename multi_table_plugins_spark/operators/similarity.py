@@ -29,11 +29,12 @@ def _paired_cosine() -> "F.Column":
 
     The norms (and the float→double array casts) are hoisted into the
     per-ROW projections below each join (``_prenormed``) instead of
-    being folded per PAIR inside ``cosine_sim`` — a candidate join
-    evaluates the sim expression once per generated pair, so the hoist
-    removes two O(dim) aggregate folds and two array casts from every
-    pair. Bit-identical to ``cosine_sim``: the same sqrt-of-fold values
-    enter the same divide/multiply tree, only computed earlier."""
+    being folded per PAIR as ``dot(a, b) / (l2_norm(a) * l2_norm(b))``
+    — a candidate join evaluates the sim expression once per generated
+    pair, so the hoist removes two O(dim) aggregate folds and two array
+    casts from every pair. Bit-identical to that per-pair form: the same
+    sqrt-of-fold values enter the same divide/multiply tree, only
+    computed earlier."""
     return dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
 
 

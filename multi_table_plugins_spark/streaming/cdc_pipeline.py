@@ -80,7 +80,7 @@ def read_history(
     timestamp with the LSN as total-order tiebreak. Delete events appear
     as versions with ``change_op = 'D'`` — "what did this row look like
     at time T, and when was it deleted?" is one filter away
-    (:func:`~multi_table_plugins_spark.operators.scd2.scd2_as_of`)."""
+    (``valid_from <= T`` and ``valid_to`` null or ``> T``)."""
     from ..operators.scd2 import scd2_history
 
     lt = LakeTable(spark, os.path.join(warehouse, table + HISTORY_SUFFIX))
@@ -138,7 +138,6 @@ def apply_cdc_batch(
     allow_tables: tuple[str, ...] = (),
     block_tables: tuple[str, ...] = (),
     n_buckets: int = 16,
-    table_mode: str = "mor",
     compact_threshold: int = 16,
     minor_compact_threshold: int | None = None,
     validate: bool = True,
@@ -208,9 +207,9 @@ def apply_cdc_batch(
             )
         main = apply_cdc_batch(
             spark, batch_df, warehouse, epoch, app_id, error_mode,
-            allow_tables, block_tables, n_buckets, table_mode,
-            compact_threshold, minor_compact_threshold, validate,
-            lineage, io, key_col, history_tables=False, branch=branch,
+            allow_tables, block_tables, n_buckets, compact_threshold,
+            minor_compact_threshold, validate, lineage, io, key_col,
+            history_tables=False, branch=branch,
         )
         src = batch_df.filter(~errmod.invalid_condition()) if validate else batch_df
         src = _route(src, allow_tables, block_tables)
@@ -230,10 +229,9 @@ def apply_cdc_batch(
         keys = [key_col] if isinstance(key_col, str) else list(key_col)
         hres = apply_cdc_batch(
             spark, hist, warehouse, epoch, app_id, error_mode,
-            (), (), n_buckets, table_mode,
-            compact_threshold, minor_compact_threshold, False,
-            lineage, io, keys + ["lsn_key"], history_tables=False,
-            branch=branch,
+            (), (), n_buckets, compact_threshold,
+            minor_compact_threshold, False, lineage, io, keys + ["lsn_key"],
+            history_tables=False, branch=branch,
         )
         main["history"] = hres["tables"]
         # a failed history merge must be as visible as a failed main
@@ -267,7 +265,6 @@ def apply_cdc_batch(
         app_id=app_id,
         epoch=epoch,
         n_buckets=n_buckets,
-        table_mode=table_mode,
         compact_threshold=compact_threshold,
         minor_compact_threshold=minor_compact_threshold,
         io=io,

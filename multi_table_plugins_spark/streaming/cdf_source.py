@@ -317,30 +317,23 @@ class WarehouseCDFStreamReader(LakeCDFStreamReader):
             _parse_start_ts(start_ts) if start_ts is not None else None
         )
 
-    def _tables(self) -> "list[str]":
-        return discover_tables(self._io, self._wh, self._allow, self._block)
-
     def _tpath(self, t: str) -> str:
         return os.path.join(self._wh, t)
 
     def _versions_now(self) -> dict:
-        return {
-            t: _head_version(self._io, self._tpath(t))
-            for t in self._tables()
-        }
+        return discover_tables(self._io, self._wh, self._allow, self._block)
 
     def initialOffset(self) -> dict:
+        vs = self._versions_now()
         if self._start_version is not None:
-            vs = {t: self._start_version for t in self._tables()}
+            vs = {t: self._start_version for t in vs}
         elif self._start_ts is not None:
             vs = {
                 t: _start_version_for_ts(
                     self._io, self._tpath(t), self._start_ts
                 )
-                for t in self._tables()
+                for t in vs
             }
-        else:
-            vs = self._versions_now()
         return {"versions": vs}
 
     def latestOffset(self) -> dict:

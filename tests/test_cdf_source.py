@@ -598,8 +598,37 @@ def test_discover_tables_skips_a_table_with_no_manifest_yet(tmp_path):
     os.makedirs(os.path.join(wh, "half", "_manifests"))
     os.makedirs(os.path.join(wh, "_lineage"))
     io = get_fileio(None)
-    assert discover_tables(io, wh, set(), set()) == ["a", "b", "c"]
-    assert discover_tables(io, wh, {"a", "c", "half"}, {"c"}) == ["a"]
+    assert discover_tables(io, wh, set(), set()) == {"a": 0, "b": 0, "c": 0}
+    assert discover_tables(io, wh, {"a", "c", "half"}, {"c"}) == {"a": 0}
+
+
+def test_warehouse_offset_lists_each_table_once(tmp_path):
+    """A warehouse-mode offset lists the warehouse once and each table's
+    ``_manifests/`` once: discovery and the head version share one
+    listing."""
+    from multi_table_plugins_spark.lakehouse.fileio import get_fileio
+    from multi_table_plugins_spark.streaming.cdf_source import (
+        WarehouseCDFStreamReader,
+    )
+
+    wh = str(tmp_path / "wh")
+    for t in ("a", "b", "c"):
+        LakeTable.create(None, os.path.join(wh, t), SCHEMA)
+    LakeTable(None, os.path.join(wh, "b")).set_sort_order(["source"])
+    inner = get_fileio(None)
+    listed = []
+
+    class Counting:
+        def __getattr__(self, name):
+            return getattr(inner, name)
+
+        def listdir(self, path):
+            listed.append(path)
+            return inner.listdir(path)
+
+    reader = WarehouseCDFStreamReader(None, {"warehouse": wh, "fileio": Counting()})
+    assert reader._versions_now() == {"a": 0, "b": 1, "c": 0}
+    assert len(listed) == 4, listed
 
 
 def test_pinned_manifest_reads_do_not_list_the_log(tmp_path):

@@ -14,7 +14,7 @@ from multi_table_plugins_spark.operators.curation import (
     sequence_pack,
     stratified_sample,
 )
-from multi_table_plugins_spark.operators.scd2 import scd2_as_of, scd2_history
+from multi_table_plugins_spark.operators.scd2 import scd2_history
 
 
 def _plan(df) -> str:
@@ -127,13 +127,7 @@ def test_scd2_intervals_partition_the_timeline(spark):
     assert k1 == ["a", "b", "c", "d"]
 
 
-def test_scd2_as_of_returns_one_version_per_live_key(spark):
-    hist = scd2_history(_events(spark), ["k"], ["ts", "eid"], ["v"])
-    asof = scd2_as_of(hist, F.lit(25)).collect()
-    got = {r["k"]: r["v"] for r in asof}
-    assert got == {1: "c", 2: "x"}  # latest version valid at t=25
-    assert scd2_as_of(hist, F.lit(5)).count() == 0  # before any history
-
+def test_scd2_history_needs_a_key(spark):
     with pytest.raises(ValueError):
         scd2_history(_events(spark), [], ["ts"], ["v"])
 
@@ -214,7 +208,6 @@ def test_token_shingles_and_near_dup(spark):
         token_near_dup_pairs,
         token_shingles,
     )
-    from multi_table_plugins_spark.operators import release_cached
 
     df = spark.createDataFrame(
         [
@@ -231,7 +224,7 @@ def test_token_shingles_and_near_dup(spark):
     assert sh[3] == []
     pairs = token_near_dup_pairs(df, threshold=0.5)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
-    release_cached(pairs)
+    pairs._mtp_cached.unpersist()
     assert set(got) == {(1, 2)}
     assert abs(got[(1, 2)] - 2 / 3) < 1e-9
 

@@ -9,11 +9,8 @@ from multi_table_plugins_spark.functions.textfns import (
     word_shingles,
 )
 from multi_table_plugins_spark.operators.dedup import (
-    exact_dedup,
     lsh_candidate_pairs,
-    minhash_dedup,
     minhash_signatures,
-    ngram_jaccard,
     shingle_jaccard_pairs,
     simhash64,
 )
@@ -42,11 +39,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_dedup(docs):
-    kept = {r["doc_id"] for r in exact_dedup(docs).collect()}
-    assert kept == {1, 3, 4, 5}  # 2 dropped (exact dup, larger id)
-
-
 def test_minhash_lsh_finds_near_dups(docs):
     sigs = minhash_signatures(docs, num_hashes=32, shingle_k=3)
     pairs = lsh_candidate_pairs(sigs, num_bands=16, threshold=0.5)
@@ -57,19 +49,6 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert js[(1, 2)] == 1.0
     assert all(j >= 0.5 for j in js.values())
     assert not any({a, b} == {1, 4} for a, b in found)
-
-
-def test_minhash_dedup_drops_losers(docs):
-    kept = {r["doc_id"] for r in minhash_dedup(docs, num_hashes=32, num_bands=16, threshold=0.5).collect()}
-    assert 1 in kept and 4 in kept
-    assert 2 not in kept
-
-
-def test_ngram_jaccard_pairwise(spark):
-    df = spark.createDataFrame([(BASE, BASE), (BASE, FAR)], "a string, b string")
-    out = ngram_jaccard(df, "a", "b").collect()
-    assert out[0]["jaccard"] == 1.0
-    assert out[1]["jaccard"] < 0.1
 
 
 def test_shingle_jaccard_pairs_never_pair_a_duplicate_id_with_itself(spark):

@@ -14,6 +14,7 @@ Soundness invariants tested here:
   * stats survive compaction (rewritten files get fresh footers).
 """
 
+import datetime as dt
 import os
 
 import pytest
@@ -25,6 +26,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from multi_table_plugins_spark.lakehouse import LakeTable
@@ -239,6 +241,79 @@ def test_lookup_uses_stats_within_bucket(spark, tmp_path):
     assert info["files_read"] < info["files_total"], info
     # absent key in a pruned-away range still answers correctly
     assert t.lookup(999_999).count() == 0
+
+
+def test_lookup_compound_and_string_keys(spark, tmp_path):
+    """A compound (string, long) key probes as a tuple in manifest key
+    order and finds the one version its batch wrote."""
+    sch = StructType(
+        [
+            StructField("a", StringType(), False),
+            StructField("b", LongType(), False),
+            StructField("v", LongType(), True),
+        ]
+    )
+    ch = StructType(
+        [
+            StructField("lsn", LongType(), False),
+            StructField("op", StringType(), False),
+            StructField("a", StringType(), False),
+            StructField("b", LongType(), False),
+            StructField("v", LongType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "ck"),
+        sch,
+        key=["a", "b"],
+        n_buckets=1,
+        compact_threshold=100,
+    )
+    for i in range(3):
+        rows = [(100 * i + k, "I", f"k{k}", 10 * i + k, k) for k in range(20)]
+        t.merge_into(spark.createDataFrame(rows, ch), app_id="ck", epoch=i)
+    got = t.lookup(("k7", 17)).collect()  # batch 1 only
+    assert len(got) == 1 and got[0]["v"] == 7
+
+
+def test_lookup_timestamp_key_probe_both_forms(spark, tmp_path):
+    """A timestamp key answers a datetime probe and the same instant as
+    epoch seconds (lookup's cast contract) with the same row."""
+    sch = StructType(
+        [
+            StructField("ts", TimestampType(), False),
+            StructField("v", LongType(), True),
+        ]
+    )
+    ch = StructType(
+        [
+            StructField("lsn", LongType(), False),
+            StructField("op", StringType(), False),
+            StructField("ts", TimestampType(), False),
+            StructField("v", LongType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "ts"),
+        sch,
+        key="ts",
+        n_buckets=1,
+        compact_threshold=100,
+    )
+    base = dt.datetime(2021, 6, 1)
+    for i in range(3):
+        rows = [
+            (100 * i + k, "I", base + dt.timedelta(hours=k * 3 + i), k)
+            for k in range(20)
+        ]
+        t.merge_into(spark.createDataFrame(rows, ch), app_id="ts", epoch=i)
+    probe_dt = base + dt.timedelta(hours=5 * 3 + 1)  # batch 1, k=5
+    got = t.lookup(probe_dt).collect()
+    assert len(got) == 1 and got[0]["v"] == 5
+    got2 = t.lookup(int(probe_dt.timestamp())).collect()
+    assert len(got2) == 1 and got2[0]["v"] == 5
 
 
 def test_pipeline_fast_path_files_carry_stats(spark, tmp_path):

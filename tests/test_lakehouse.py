@@ -2,6 +2,7 @@
 evolution, compaction, atomic commit. The golden-final-state style mirrors
 the reference's PipelineTest.java:185-230 (assert exact end state)."""
 
+import base64
 import json
 import os
 
@@ -169,13 +170,54 @@ def test_compaction_preserves_state(spark, tmp_table_dir):
     assert m2["stats"]["total_files"] <= m["stats"]["total_files"]
 
 
-def test_cow_mode_compacts_every_commit(spark, tmp_table_dir):
-    t = LakeTable.create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2, mode="cow")
+def test_compact_threshold_one_compacts_every_commit(spark, tmp_table_dir):
+    t = LakeTable.create(
+        spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2, compact_threshold=1
+    )
     t.merge_into(_changes(spark, [(1, "I", "a", [1])]), app_id="w", epoch=0)
     t.merge_into(_changes(spark, [(2, "U", "a", [2])]), app_id="w", epoch=1)
     m = t.manifest()
     assert all(not b["delta"] for b in m["buckets"].values())
     assert _state(t) == {"a": [2]}
+
+
+def test_legacy_mode_and_bloom_manifest_keys_are_ignored(spark, tmp_table_dir):
+    """Manifests from when tables had a ``mode`` and per-file key blooms
+    read as before: the keys are ignored. An all-zero bloom would have
+    excluded every key, so the rows prove nothing consults it."""
+    t = LakeTable.create(
+        spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2, compact_threshold=100
+    )
+    t.merge_into(
+        _changes(spark, [(1, "I", "a", [1]), (2, "I", "b", [2])]),
+        app_id="w",
+        epoch=0,
+    )
+    t.merge_into(_changes(spark, [(3, "U", "a", [3])]), app_id="w", epoch=1)
+    before = _state(t)
+    before_lookup = [r.asDict() for r in t.lookup("a").collect()]
+    mdir = os.path.join(tmp_table_dir, "_manifests")
+    path = os.path.join(
+        mdir, max(n for n in os.listdir(mdir) if n.startswith("manifest-"))
+    )
+    with open(path) as fh:
+        m = json.load(fh)
+    m["mode"] = "cow"
+    m["bloom_filters"] = True
+    zero_bloom = base64.b64encode(bytes(8192 // 8)).decode("ascii")
+    blooms = 0
+    for b in m["buckets"].values():
+        for part in ("base", "delta"):
+            for e in b.get(part, []):
+                e["bloom"] = {"v": 1, "m": 8192, "k": 4, "b64": zero_bloom}
+                blooms += 1
+    assert blooms
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    legacy = LakeTable(spark, tmp_table_dir)
+    assert _state(legacy) == before == {"a": [3], "b": [2]}
+    assert [r.asDict() for r in legacy.lookup("a").collect()] == before_lookup
+    assert legacy.last_scan_info["files_read"] >= 1
 
 
 def test_atomic_commit_conflict(spark, tmp_table_dir):

@@ -193,17 +193,18 @@ def test_scd2_reconstructs_lww_at_every_instant(spark, events):
     """SCD2 + as-of at any probe instant must agree with a direct LWW
     over the events at or before that instant — the temporal-navigation
     contract, for arbitrary (eid, ts, key) event sets."""
-    from multi_table_plugins_spark.operators.scd2 import scd2_as_of, scd2_history
+    from multi_table_plugins_spark.operators.scd2 import scd2_history
 
     rows = [(eid, ts, k, f"v{eid}") for eid, ts, k in events]
     df = spark.createDataFrame(rows, "eid long, ts long, k long, v string")
     hist = scd2_history(df, ["k"], ["ts", "eid"], ["v"])
     distinct_ts = sorted({ts for _, ts, _ in events})
     probe_ts = distinct_ts[len(distinct_ts) // 2]
-    got = {
-        r["k"]: r["v"]
-        for r in scd2_as_of(hist, F.lit(probe_ts)).collect()
-    }
+    t = F.lit(probe_ts)
+    live = (F.col("valid_from") <= t) & (
+        F.col("valid_to").isNull() | (F.col("valid_to") > t)
+    )
+    got = {r["k"]: r["v"] for r in hist.where(live).collect()}
     want = {}
     for eid, ts, k in sorted(events, key=lambda e: (e[1], e[0])):
         if ts <= probe_ts:

@@ -3,17 +3,21 @@ assignment in the package and in ``__spark_entry__.py`` must be named
 somewhere in non-test code, or it is code that only tests reach.
 
 A name counts as reached when ``\\bname\\b`` matches non-test code
-outside three kinds of text: import statements (so ``__init__``
-re-exports do not keep a name alive), the definition's own line, and the
-bodies of definitions already found dead. A package module whose every
-top-level definition is dead is dead as a whole. The dead set is grown
-until it stops changing, so a helper named only inside dead code is dead
-too. Standard library only; no Spark.
+outside five kinds of text: comments, docstrings, import statements (so
+``__init__`` re-exports do not keep a name alive), the definition's own
+line span (so recursion or a self-mention is no use), and the bodies of
+definitions already found dead. Other string literals do count: a name
+looked up by string (a wrapper list, ``getattr``) is reached. A package
+module whose every top-level definition is dead is dead as a whole. The
+dead set is grown until it stops changing, so a helper named only inside
+dead code is dead too. Standard library only; no Spark.
 """
 
 import ast
+import io
 import os
 import re
+import tokenize
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "multi_table_plugins_spark"
@@ -37,7 +41,14 @@ ALLOWLIST = {
     "read_union": "reference parity: tagged multi-table fan-in (S9)",
     "read_all": "reference parity: per-table fan-in (S9)",
     "route_all": "reference parity: route every table of a union (R1)",
-    "_bloom_pack": "reference bloom encoder that the scan-side probe is tested against",
+    "split_where_clause": "reference parity: DBTableSplit.java:77-84 split predicate",
+    "build_split_query": "reference parity: DBTableRecordReader.java:169-180 split query",
+    "DEFAULT_CLAUSE": "reference parity: DBTableSplit.java:29 open-bound placeholder",
+    "split_bounds": "reference parity: MultiTableDBInputFormat.java:253-257 split bounds",
+    "WarehouseSnapshot": "public pinned reader of the warehouse snapshot log",
+    "stage_cdc_batch": "staging half of maintain.py publish-staged (write-audit-publish)",
+    "default_branch": "staging half of maintain.py publish-staged: the batch's branch name",
+    "_write_marker": "staging half of maintain.py publish-staged: the staged-table marker",
     "TARGET_SCHEMA": "documented target-table schema",
 }
 
@@ -83,11 +94,38 @@ def _definitions(tree):
     return defs
 
 
+def _docstring_starts(tree):
+    """(line, col) where each module, class and function docstring starts."""
+    return {
+        (node.body[0].lineno, node.body[0].col_offset)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and ast.get_docstring(node, clean=False) is not None
+    }
+
+
+def _words_by_line(text, tree):
+    """{line: words} of the code tokens: comments and docstrings are
+    left out; a multi-line token's words land on their own lines."""
+    docstrings = _docstring_starts(tree)
+    out = {}
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type == tokenize.COMMENT or (
+            tok.type == tokenize.STRING and tok.start in docstrings
+        ):
+            continue
+        for i, part in enumerate(tok.string.split("\n")):
+            out.setdefault(tok.start[0] + i, set()).update(re.findall(r"\w+", part))
+    return out
+
+
 def _scan():
     """Returns (definitions, occurrences, n_lines): definitions are
     (name, path, first_line, last_line, top_level); occurrences map each
-    word to the (path, line) pairs where it appears outside import
-    statements; n_lines maps each path to its line count."""
+    word to the (path, line) pairs where it appears in code outside
+    import statements; n_lines maps each path to its line count."""
     definitions, occurrences, n_lines = [], {}, {}
     for rel, defines in _sources():
         with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
@@ -97,12 +135,11 @@ def _scan():
         for node in ast.walk(tree):
             if isinstance(node, (ast.Import, ast.ImportFrom)):
                 import_lines.update(range(node.lineno, node.end_lineno + 1))
-        lines = text.splitlines()
-        n_lines[rel] = len(lines)
-        for lineno, line in enumerate(lines, 1):
+        n_lines[rel] = len(text.splitlines())
+        for lineno, words in _words_by_line(text, tree).items():
             if lineno in import_lines:
                 continue
-            for word in set(re.findall(r"\w+", line)):
+            for word in words:
                 occurrences.setdefault(word, []).append((rel, lineno))
         if defines:
             definitions += [(d[0], rel) + d[1:] for d in _definitions(tree)]
@@ -131,14 +168,14 @@ def dead_definitions(allowlist=ALLOWLIST):
             if all(d in dead for d in tops)
         ]
 
-        def reached(name, path, first):
+        def reached(name, path, first, last):
             return any(
-                (rel, lineno) != (path, first)
+                not (rel == path and first <= lineno <= last)
                 and not any(rel == p and a <= lineno <= b for p, a, b in spans)
                 for rel, lineno in occurrences.get(name, ())
             )
 
-        newly = [d for d in candidates if d not in dead and not reached(*d[:3])]
+        newly = [d for d in candidates if d not in dead and not reached(*d[:4])]
         if not newly:
             return sorted(f"{p}:{a} {n}" for n, p, a, _, _ in dead)
         dead += newly

@@ -98,7 +98,6 @@ def test_incremental_index_releases_minhash_cache(spark, tmp_path):
 
 
 def test_probe_exposes_all_cached_frames(spark, tmp_path):
-    from multi_table_plugins_spark.operators import release_cached
     from multi_table_plugins_spark.operators.incremental import (
         build_signature_index,
         incremental_near_dup,
@@ -118,7 +117,8 @@ def test_probe_exposes_all_cached_frames(spark, tmp_path):
     pairs = incremental_near_dup(spark, new, idx, threshold=0.5)
     pairs.collect()
     assert isinstance(pairs._mtp_cached, list) and len(pairs._mtp_cached) == 2
-    release_cached(pairs)
+    for frame in pairs._mtp_cached:
+        frame.unpersist()
     assert jsc.getPersistentRDDs().size() == before
 
 
