@@ -16,7 +16,7 @@ write side:
      FileIO seam (hard links on local fs, copy/conditional-PUT on the
      generic/object-store backend — see fileio.py), read row counts
      from parquet footers (no job), and make one atomic ledger-checked
-     manifest commit per table;
+     manifest commit per table (``LakeTable.append_staged``);
   4. one job folds every due table (``table.compact_due``): the tables
      whose delta stacks reached the compaction threshold are read,
      LWW-resolved per (table, bucket, key) and written with one more
@@ -29,8 +29,13 @@ Row/delete counts, the watermark and the max LSN ride the write job via
 Crash safety: a crash after some tables committed and others not is
 healed on replay — committed tables' ledgers skip, uncommitted apply.
 A crash between the commits and the fold leaves buckets over threshold,
-and the table's next commit folds them. Orphaned staging files are ignored by readers (only manifest-listed
-files are visible) — a vacuum can reclaim them.
+and the table's next commit folds them. A table's placed run that
+does not commit — the commit raises (a lost race, a refused schema)
+or the ledger skips it — is deleted by its one owner,
+``LakeTable._commit_run``; the staging directory is removed in any
+case. Only a process crash leaves files behind: readers ignore them
+(only manifest-listed files are visible) and
+``expire_snapshots(remove_orphans=True)`` reclaims them.
 """
 
 from __future__ import annotations
@@ -60,10 +65,8 @@ from .table import (
     _BUCKET_COL,
     _TABLE_COL,
     COMMIT_THREADS,
-    DATA_DIR,
     DELTA_WRITE_OPTS,
     LakeTable,
-    _place_run,
     _violations,
     compact_due,
 )
@@ -239,26 +242,10 @@ def merge_many(
             # zero-copy fast lane below.
             _commit_table_slow(lt, table, tdir)
             return
-        dest_rel = f"{DATA_DIR}/e{epoch if epoch is not None else 'x'}-{uuid.uuid4().hex[:8]}"
-        # sv 0 is a placeholder: commit_delta tags the files' schema
-        entries = _place_run(
-            io, os.path.join(staging, tdir), tpath, dest_rel,
-            key_cols + [LSN_COL], 0,
+        results[table] = lt.append_staged(
+            os.path.join(staging, tdir), key_cols, payload_schema, app_id,
+            epoch, n_buckets,
         )
-        # expected_n_buckets: these entries were hashed with the bucket
-        # count read at planning time — a concurrent rebucket() must
-        # conflict here, not silently file rows under wrong bucket ids
-        m = lt.commit_delta(
-            entries,
-            payload_schema,
-            app_id,
-            epoch,
-            expected_n_buckets=n_buckets,
-        )
-        if m.get("skipped"):
-            # epoch already committed (crash replay) — discard placed files
-            io.remove_tree(os.path.join(tpath, dest_rel))
-        results[table] = m
 
     tdirs = sorted(
         d for d in io.listdir(staging) if d.startswith(f"{_TABLE_COL}=")

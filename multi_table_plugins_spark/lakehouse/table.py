@@ -47,6 +47,7 @@ import functools
 import json
 import logging
 import os
+import re
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -174,18 +175,6 @@ def _violations(obs: "Observation | None") -> int:
     return int(obs.get.get("nv") or 0) if obs is not None else 0
 
 
-def _footer_rows(path: str, io: FileIO | None = None) -> int:
-    """Row count from the parquet footer — driver-side metadata read,
-    no Spark job. Routed through the FileIO seam so an object-store
-    backend can hand pyarrow a remote file handle."""
-    import pyarrow.parquet as pq
-
-    if io is None:
-        return pq.ParquetFile(path).metadata.num_rows
-    with io.open_input(path) as f:
-        return pq.ParquetFile(f).metadata.num_rows
-
-
 # string min/max longer than this are dropped from file stats (Iceberg
 # truncates instead; dropping is simpler and merely disables skipping
 # for that file — never wrong)
@@ -298,6 +287,36 @@ def _stat_cols(m: dict, base: bool) -> "list[str]":
     k = m["key"]
     cols = ([k] if isinstance(k, str) else list(k)) + [LSN_COL]
     return cols + (m.get("stats_columns") or []) if base else cols
+
+
+def _entries_of(
+    m: dict, buckets: Iterable[str], parts: "tuple[str, ...]" = ("base", "delta")
+) -> "list[dict]":
+    """The file entries of ``buckets`` in manifest ``m``, ``parts`` of
+    each (a bucket ``m`` does not hold has none)."""
+    return [
+        e for b in buckets for p in parts for e in m["buckets"].get(b, {}).get(p, [])
+    ]
+
+
+_MANIFEST_NAME = re.compile(r"manifest-(\d{8,})\.json")
+
+
+def _manifest_name(version: int) -> str:
+    return f"manifest-{version:08d}.json"
+
+
+def _manifest_versions(io: FileIO, d: str) -> "list[int]":
+    """The versions of the manifests in directory ``d``, ascending: one
+    parser of a manifest file name for every reader of the log (a
+    ``manifest-00000001.json.bak`` or ``.tmp-*`` file is no manifest)."""
+    if not io.isdir(d):
+        return []
+    return sorted(
+        int(hit.group(1))
+        for n in io.listdir(d)
+        if (hit := _MANIFEST_NAME.fullmatch(n))
+    )
 
 
 def _place_run(
@@ -654,10 +673,8 @@ class LakeTable:
     # ------------------------------------------------------------------
     @staticmethod
     def exists(path: str, io: FileIO | None = None) -> bool:
-        io = get_fileio(io)
-        d = os.path.join(path, MANIFEST_DIR)
-        return io.isdir(d) and any(
-            n.startswith("manifest-") for n in io.listdir(d)
+        return bool(
+            _manifest_versions(get_fileio(io), os.path.join(path, MANIFEST_DIR))
         )
 
     @classmethod
@@ -749,7 +766,7 @@ class LakeTable:
             # per-entry "bloom" keys; nothing reads them any more)
             "buckets": {},
             "committed": {},  # app_id -> last epoch (exactly-once ledger)
-            "stats": {"live_rows": 0, "total_files": 0},
+            "stats": {"total_files": 0},
             "ts": time.time(),
             "op": "create",
         }
@@ -784,24 +801,14 @@ class LakeTable:
                 raise  # invalid name — never swallow
         return t.branch_of(branch)
 
-    def _manifest_files(self) -> list[str]:
-        d = self._mdir
-        if not self.io.isdir(d):
-            return []
-        return sorted(
-            n
-            for n in self.io.listdir(d)
-            if n.startswith("manifest-") and n.endswith(".json")
-        )
-
-    def _load_manifest(self, name: str) -> dict:
+    def _load_manifest(self, version: int) -> dict:
         """Read + parse one manifest file. Both backends publish the
         manifest body atomically (tmp-write + link claim), so a partial
         read is only possible on GenericFileIO's linkless-filesystem
         fallback (exclusive-create + write). Retry with backoff —
         generous enough to outlast a concurrent writer's write+fsync
         under I/O load — before declaring corruption."""
-        path = os.path.join(self._mdir, name)
+        path = os.path.join(self._mdir, _manifest_name(version))
         last_err: Exception | None = None
         for attempt in range(8):
             try:
@@ -818,26 +825,23 @@ class LakeTable:
         the log."""
         if version is not None:
             try:
-                return self._load_manifest(f"manifest-{version:08d}.json")
+                return self._load_manifest(version)
             except FileNotFoundError:
                 raise FileNotFoundError(
                     f"no version {version} at {self.path}"
                 ) from None
-        names = self._manifest_files()
-        if not names:
+        vs = self.versions()
+        if not vs:
             raise FileNotFoundError(f"no manifest under {self.path}")
-        latest = names[-1]
-        v = int(latest[len("manifest-") : -len(".json")])
+        v = vs[-1]
         if v == self._manifest_cache_version and self._manifest_cache:
             return self._manifest_cache
-        m = self._load_manifest(latest)
+        m = self._load_manifest(v)
         self._manifest_cache, self._manifest_cache_version = m, v
         return m
 
     def versions(self) -> list[int]:
-        return [
-            int(n[len("manifest-") : -len(".json")]) for n in self._manifest_files()
-        ]
+        return _manifest_versions(self.io, self._mdir)
 
     def history(self, limit: int | None = None) -> list[dict]:
         """Commit history, newest first (Delta ``DESCRIBE HISTORY``
@@ -852,13 +856,9 @@ class LakeTable:
         ``added_*`` fields are None when the sidecar is missing
         (legacy / crash window) — absent metadata is reported as
         unknown, never guessed."""
-        names = sorted(self._manifest_files(), reverse=True)
-        if limit is not None:
-            names = names[:limit]
         out = []
-        for name in names:
-            m = self._load_manifest(name)
-            v = int(name[len("manifest-") : -len(".json")])
+        for v in self.versions()[::-1][:limit]:
+            m = self.manifest(v)
             side = self._load_commit_log(v)
             added = side.get("added_delta") if side else None
             out.append(
@@ -896,10 +896,8 @@ class LakeTable:
         if hasattr(ts, "timestamp"):
             ts = ts.timestamp()
         best = None
-        for name in self._manifest_files():
-            m = self._load_manifest(name)
-            v = int(name[len("manifest-") : -len(".json")])
-            if m.get("ts", 0.0) <= ts and (best is None or v > best):
+        for v in self.versions():
+            if self.manifest(v).get("ts", 0.0) <= ts and (best is None or v > best):
                 best = v
         if best is None:
             raise LookupError(
@@ -1023,7 +1021,7 @@ class LakeTable:
         self.io.makedirs(d)
         try:
             self.io.publish_atomic(
-                os.path.join(d, f"manifest-{version:08d}.json"),
+                os.path.join(d, _manifest_name(version)),
                 json.dumps(base),
             )
         except FileExistsError:
@@ -1055,13 +1053,7 @@ class LakeTable:
             return out
         for name in sorted(self.io.listdir(root)):
             d = os.path.join(root, name)
-            if not self.io.isdir(d):
-                continue
-            vs = sorted(
-                int(n[len("manifest-") : -len(".json")])
-                for n in self.io.listdir(d)
-                if n.startswith("manifest-") and n.endswith(".json")
-            )
+            vs = _manifest_versions(self.io, d)
             if not vs:
                 continue
             base = vs[0]
@@ -1130,7 +1122,7 @@ class LakeTable:
             ours = self.manifest(head_main)
             theirs = json.loads(
                 self.io.read_text(
-                    os.path.join(bdir, f"manifest-{head_main:08d}.json")
+                    os.path.join(bdir, _manifest_name(head_main))
                 )
             )
             if ours != theirs:
@@ -1141,11 +1133,11 @@ class LakeTable:
         published = []
         for v in range(head_main + 1, head_b + 1):
             body = self.io.read_text(
-                os.path.join(bdir, f"manifest-{v:08d}.json")
+                os.path.join(bdir, _manifest_name(v))
             )
             try:
                 self.io.publish_atomic(
-                    os.path.join(self._mdir, f"manifest-{v:08d}.json"),
+                    os.path.join(self._mdir, _manifest_name(v)),
                     body,
                 )
             except FileExistsError as e:
@@ -1200,7 +1192,7 @@ class LakeTable:
         write is recorded (:meth:`_degraded`), not raised.
         """
         v = manifest["version"]
-        final = os.path.join(self._mdir, f"manifest-{v:08d}.json")
+        final = os.path.join(self._mdir, _manifest_name(v))
         try:
             self.io.publish_atomic(final, json.dumps(manifest))
         except FileExistsError as e:
@@ -1238,15 +1230,18 @@ class LakeTable:
             "%s of v%s at %s degraded", site, version, self.path,
             exc_info=e,
         )
-        LineageLog(os.path.dirname(self.path)).emit(
-            {
-                "kind": "degraded",
-                "site": site,
-                "table": os.path.basename(self.path),
-                "version": version,
-                "error": f"{type(e).__name__}: {e}",
-            }
-        )
+        try:
+            LineageLog(os.path.dirname(self.path)).emit(
+                {
+                    "kind": "degraded",
+                    "site": site,
+                    "table": os.path.basename(self.path),
+                    "version": version,
+                    "error": f"{type(e).__name__}: {e}",
+                }
+            )
+        except OSError:
+            pass  # logged above; raising after a CAS would fail a commit that stands
 
     def _load_commit_log(self, version: int) -> "dict | None":
         """The ``commit-<v>.json`` sidecar for ``version``, or None if
@@ -1736,13 +1731,7 @@ class LakeTable:
 
         # old state, ONLY the touched buckets, tombstones included (a key
         # deleted before v_from then re-inserted in range is an insert)
-        old_entries = [
-            e
-            for bucket in touched
-            for part in ("base", "delta")
-            for e in m_from["buckets"].get(bucket, {}).get(part, [])
-        ]
-        old_df = self._read_files(old_entries, target, m_from)
+        old_df = self._read_files(_entries_of(m_from, touched), target, m_from)
         if old_df is None:
             old = None
         else:
@@ -1849,8 +1838,7 @@ class LakeTable:
             .first()[0]
         )
         target = self._internal_schema(schema)
-        b = m["buckets"].get(bucket, {})
-        entries = list(b.get("base", [])) + list(b.get("delta", []))
+        entries = _entries_of(m, [bucket])
         # second pruning stage: within the bucket, skip files whose
         # key-column min/max cannot contain this key (a hot bucket with
         # many delta files reads only the few that overlap)
@@ -1884,42 +1872,28 @@ class LakeTable:
     def vacuum_tombstones(self, lsn_watermark: int) -> dict:
         """Physically drop tombstones whose ``_lsn`` < ``lsn_watermark``
         (safe once the feed can no longer deliver events below the
-        watermark — the streaming low-water mark). Rewrites all buckets
-        that currently hold qualifying tombstones."""
-        m = self.manifest()
-        target = self._internal_schema(self.schema())
-        buckets = [b for b, v in m["buckets"].items() if v.get("base") or v.get("delta")]
+        watermark — the streaming low-water mark). One rewrite job and
+        one commit (``op: vacuum-tombstones``): every bucket holding
+        files is LWW-resolved, the winning tombstones below the
+        watermark are filtered out (counted on the write job itself),
+        and the rest is written as one unclustered base run."""
+        m = json.loads(json.dumps(self.manifest()))
+        buckets = [b for b in m["buckets"] if _entries_of(m, [b])]
         if not buckets:
             return {"vacuumed": 0}
-        self.compact(buckets)  # fold deltas first so base is authoritative
-        m = json.loads(json.dumps(self.manifest()))
-        entries = [e for b in buckets for e in m["buckets"][b].get("base", [])]
-        df = self._read_files(entries, target, m)
-        kept = df.filter(
-            ~(
-                F.coalesce(F.col(DELETED_COL), F.lit(False))
-                & (F.col(LSN_COL) < F.lit(lsn_watermark))
-            )
-        ).withColumn(_BUCKET_COL, self._bucket_expr())
-        new_entries = self._write_data_files(kept, m["version"] + 1, "base")
-        for b in buckets:
-            m["buckets"][b]["base"] = new_entries.get(b, [])
-            m["buckets"][b]["delta"] = []
-        m["stats"]["total_files"] = sum(
-            len(v.get("base", [])) + len(v.get("delta", []))
-            for v in m["buckets"].values()
+        gone = F.coalesce(F.col(DELETED_COL), F.lit(False)) & (
+            F.col(LSN_COL) < F.lit(lsn_watermark)
         )
-        self._advance(m, "vacuum-tombstones")
-        self._publish(m)
-        # row deltas from manifest/footer metadata — the rewrite job is
-        # the only Spark job this maintenance op runs (no counting scans)
-        before = sum(
-            e.get("rows") if e.get("rows") is not None
-            else _footer_rows(os.path.join(self.path, e["path"]), self.io)
-            for e in entries
+        obs = Observation()
+        self._rewrite(
+            m,
+            buckets,
+            "vacuum-tombstones",
+            post=lambda df: df.observe(
+                obs, F.sum(gone.cast("long")).alias("n")
+            ).filter(~gone),
         )
-        after = sum(e["rows"] for es in new_entries.values() for e in es)
-        return {"vacuumed": before - after}
+        return {"vacuumed": int(obs.get.get("n") or 0)}
 
     def expire_snapshots(
         self,
@@ -1959,26 +1933,19 @@ class LakeTable:
                 "references); delete_branch + remove_orphans reclaims "
                 "abandoned staging"
             )
-        names = self._manifest_files()
+        vs = self.versions()
         # tagged versions are retention-proof: their manifests AND the
         # files they reference survive until the tag is deleted
-        tagged = {f"manifest-{v:08d}.json" for v in self.tags().values()}
-        keep = names[-keep_last:] + [
-            n for n in names[:-keep_last] if n in tagged
-        ]
-        expired = [n for n in names[:-keep_last] if n not in tagged]
+        tagged = set(self.tags().values())
+        keep = vs[-keep_last:] + [v for v in vs[:-keep_last] if v in tagged]
+        expired = [v for v in vs[:-keep_last] if v not in tagged]
 
         def files_of(m: dict) -> set:
-            return {
-                e["path"]
-                for b in m["buckets"].values()
-                for kind in ("base", "delta")
-                for e in b.get(kind, [])
-            }
+            return {e["path"] for e in _entries_of(m, m["buckets"])}
 
         referenced: set = set()
-        for n in keep:
-            referenced |= files_of(self._load_manifest(n))
+        for v in keep:
+            referenced |= files_of(self.manifest(v))
         # live staging branches protect their files too: a branch
         # inherits the base version's files and adds staged ones —
         # neither may be deleted while the branch exists (its
@@ -1987,26 +1954,24 @@ class LakeTable:
         if self.io.isdir(broot):
             for bname in self.io.listdir(broot):
                 bdir = os.path.join(broot, bname)
-                if not self.io.isdir(bdir):
-                    continue
-                for n in self.io.listdir(bdir):
-                    if n.startswith("manifest-") and n.endswith(".json"):
-                        referenced |= files_of(
-                            json.loads(
-                                self.io.read_text(os.path.join(bdir, n))
+                for v in _manifest_versions(self.io, bdir):
+                    referenced |= files_of(
+                        json.loads(
+                            self.io.read_text(
+                                os.path.join(bdir, _manifest_name(v))
                             )
                         )
+                    )
         deleted_files = 0
-        for n in expired:
-            for rel in files_of(self._load_manifest(n)) - referenced:
+        for v in expired:
+            for rel in files_of(self.manifest(v)) - referenced:
                 try:
                     self.io.remove(os.path.join(self.path, rel))
                     deleted_files += 1
                 except FileNotFoundError:
                     pass  # shared by two expired manifests — already gone
-        for n in expired:
-            v = n[len("manifest-") : -len(".json")]
-            for gone in (n, f"commit-{v}.json"):
+        for v in expired:
+            for gone in (_manifest_name(v), f"commit-{v:08d}.json"):
                 try:
                     self.io.remove(os.path.join(self._mdir, gone))
                 except FileNotFoundError:
@@ -2048,9 +2013,7 @@ class LakeTable:
             "expired_manifests": len(expired),
             "deleted_files": deleted_files,
             "orphans_deleted": orphans,
-            "kept_versions": [
-                int(n[len("manifest-") : -len(".json")]) for n in keep
-            ],
+            "kept_versions": keep,
         }
 
     # ------------------------------------------------------------------
@@ -2059,7 +2022,7 @@ class LakeTable:
     def _write_data_files(
         self,
         df: DataFrame,
-        version: int,
+        rel: str,
         tag: str,
         cluster_files: int = 0,
         n_partitions: int | None = None,
@@ -2067,7 +2030,7 @@ class LakeTable:
         zorder: bool = False,
     ) -> dict[str, list[dict]]:
         """Write ``df`` (already bucketed via ``_bucket`` col) under
-        ``data/v{version}-{tag}/_bucket=N/``; return {bucket: [entries]}.
+        ``<table>/{rel}/_bucket=N/``; return {bucket: [entries]}.
 
         ``cluster_files`` > 0 range-clusters the write: rows are
         range-partitioned on (bucket, cluster columns) into
@@ -2086,10 +2049,6 @@ class LakeTable:
         cluster column prune independently; costs one extra sampled
         quantile pass over ``df`` before the write (Delta's OPTIMIZE
         ZORDER range-bound job)."""
-        # uuid suffix: a crash between data write and manifest publish
-        # must not poison the version-derived path on replay, and two
-        # concurrent writers must never collide on a directory
-        rel = f"{DATA_DIR}/v{version:08d}-{tag}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, rel)
         if cluster_files > 0:
             ccols = list(cluster_cols or self.key_cols)
@@ -2169,8 +2128,9 @@ class LakeTable:
         actual payload schema) + evolution of the current schema;
         threshold compaction is the caller's next step
         (:func:`compact_due`). Returns metrics (``commit_ms`` included);
-        ``skipped=True`` if the epoch was already committed (caller
-        should discard the files).
+        ``skipped=True`` if the epoch was already committed (the files'
+        owner, :meth:`_commit_run`, deletes them). Raises only before or
+        at the manifest CAS.
 
         ``require_parent_version`` — commit ONLY on top of exactly that
         table version; any concurrent commit in between raises
@@ -2239,10 +2199,6 @@ class LakeTable:
                     added_by_bucket[bucket] = entry_copies
             if epoch is not None:
                 m["committed"][app_id] = epoch
-            m["stats"]["total_files"] = sum(
-                len(b.get("base", [])) + len(b.get("delta", []))
-                for b in m["buckets"].values()
-            )
             return True
 
         m = self._commit_metadata(op_tag, mutate, added=added_by_bucket)
@@ -2566,23 +2522,38 @@ class LakeTable:
                     raise
                 self._manifest_cache_version = -1  # force reload
 
-    def _write_and_commit(self, df: DataFrame, tag: str, commit, **write_opts):
-        """Write ``df`` (carrying ``_bucket``) as one run of data files
-        and return ``commit(entries)``. The run is deleted when the
-        commit loses (the CommitConflict propagates) or reports
-        ``skipped``: readers only see manifest-listed files, so an
-        uncommitted run is garbage either way."""
-        entries = self._write_data_files(
-            df, self.manifest()["version"] + 1, tag, **write_opts
-        )
+    def _commit_run(self, rel: str, place, commit):
+        """The one owner of a data run's fate: return ``commit(place())``,
+        where ``place()`` writes or places one run of data files at
+        ``rel`` (under the table root) and returns its entries. The run
+        is deleted if placing or committing raises, or if the commit
+        reports ``skipped``: readers only see manifest-listed files, so
+        an uncommitted run is garbage. Every commit function raises
+        only before or at its manifest CAS (after it, :meth:`_publish`
+        records a lost sidecar instead of raising), so a committed run
+        is never deleted."""
         try:
-            result = commit(entries)
-        except CommitConflict:
-            self._discard_unreferenced(entries)
+            result = commit(place())
+        except Exception:
+            self.io.remove_tree(os.path.join(self.path, rel))
             raise
         if result.get("skipped"):
-            self._discard_unreferenced(entries)
+            self.io.remove_tree(os.path.join(self.path, rel))
         return result
+
+    def _write_and_commit(self, df: DataFrame, tag: str, commit, **write_opts):
+        """Write ``df`` (carrying ``_bucket``) as one run of data files
+        and return ``commit(entries)`` (:meth:`_commit_run`)."""
+        # uuid suffix: a crash between data write and manifest publish
+        # must not poison the version-derived path on replay, and two
+        # concurrent writers must never collide on a directory
+        v = self.manifest()["version"] + 1
+        rel = f"{DATA_DIR}/v{v:08d}-{tag}-{uuid.uuid4().hex[:8]}"
+        return self._commit_run(
+            rel,
+            lambda: self._write_data_files(df, rel, tag, **write_opts),
+            commit,
+        )
 
     def append_rows(
         self,
@@ -2611,7 +2582,28 @@ class LakeTable:
             ),
         )
 
+    def append_staged(
+        self, src: str, key_cols: "list[str]", file_schema: StructType,
+        app_id: str, epoch: int | None, n_buckets: int,
+    ) -> dict:
+        """Place one table's share of a multi-table write, the delta run
+        staged at ``src`` (``key_cols`` + ``_lsn`` stats per file), and
+        commit it (:meth:`commit_delta`; :meth:`_commit_run` owns the
+        run). The entries were hashed with ``n_buckets``: a concurrent
+        :meth:`rebucket` conflicts the commit instead of filing rows
+        under wrong bucket ids."""
+        rel = f"{DATA_DIR}/e{'x' if epoch is None else epoch}-{uuid.uuid4().hex[:8]}"
+        return self._commit_run(
+            rel,
+            # sv 0 is a placeholder: commit_delta tags the files' schema
+            lambda: _place_run(self.io, src, self.path, rel, key_cols + [LSN_COL], 0),
+            lambda entries: self.commit_delta(
+                entries, file_schema, app_id, epoch, expected_n_buckets=n_buckets
+            ),
+        )
+
     def _advance(self, m: dict, op: str = "append") -> None:
+        m["stats"]["total_files"] = len(_entries_of(m, m["buckets"]))
         m["parent_snapshot_id"] = m["snapshot_id"]
         m["version"] = m["version"] + 1
         m["snapshot_id"] = f"snap-{m['version']}-{uuid.uuid4().hex[:12]}"
@@ -2634,12 +2626,7 @@ class LakeTable:
             .distinct()
             .collect()
         ]
-        entries = [
-            e
-            for b in buckets
-            for part in ("base", "delta")
-            for e in m["buckets"].get(b, {}).get(part, [])
-        ]
+        entries = _entries_of(m, buckets)
         if not entries:
             return None
         return self._lww_resolve(self._read_files(entries, target, m), target)
@@ -2878,17 +2865,6 @@ class LakeTable:
             result.update(folded)
         return result
 
-    def _discard_unreferenced(self, entries: dict[str, list[dict]]) -> None:
-        """Delete data files that were written but never committed (their
-        run directories — readers only ever see manifest entries)."""
-        dirs = {
-            os.path.dirname(os.path.dirname(e["path"]))
-            for es in entries.values()
-            for e in es
-        }
-        for d in dirs:
-            self.io.remove_tree(os.path.join(self.path, d))
-
     def _dml_apply(
         self,
         where: "list[tuple]",
@@ -3088,22 +3064,31 @@ class LakeTable:
             raise r
         return r
 
-    def _commit_fold(
+    def _commit_rewrite(
         self,
         m: dict,
         buckets: "list[str]",
         new_entries: "dict[str, list[dict]]",
-        minor: bool,
+        op: str,
+        minor: bool = False,
+        n_buckets: int | None = None,
     ) -> dict:
-        """Publish a fold of ``buckets`` on ``m``, the manifest copy the
-        fold read: the new run replaces each bucket's deltas (minor) or
-        its base and deltas (major). Raises ``CommitConflict`` when
-        another writer took the version; the caller deletes the run."""
+        """Publish a rewrite of ``buckets`` on ``m``, the manifest copy
+        the rewrite read: the new run replaces each bucket's base and
+        deltas (``minor``: its deltas only). With ``n_buckets``, the run
+        was hashed with that new bucket count and replaces every bucket.
+        Raises ``CommitConflict`` when another writer took the version
+        (the run's owner, :meth:`_commit_run`, deletes it); returns the
+        published manifest."""
+        if n_buckets is not None:
+            m["n_buckets"] = n_buckets
+            m["buckets"] = {b: {} for b in new_entries}
+            buckets = list(new_entries)
         stray = set(new_entries) - set(buckets)
         if stray:
-            # rows re-bucketed outside the folded buckets means the files
-            # were written with a different n_buckets — refusing beats
-            # silently dropping those files from the manifest
+            # rows re-bucketed outside the rewritten buckets means the
+            # files were written with a different n_buckets — refusing
+            # beats silently dropping those files from the manifest
             raise RuntimeError(
                 f"compaction re-bucketed rows into {sorted(stray)} — "
                 f"bucket-layout mismatch at {self.path}"
@@ -3112,13 +3097,41 @@ class LakeTable:
             if not minor:
                 m["buckets"][b]["base"] = new_entries.get(b, [])
             m["buckets"][b]["delta"] = new_entries.get(b, []) if minor else []
-        m["stats"]["total_files"] = sum(
-            len(v.get("base", [])) + len(v.get("delta", []))
-            for v in m["buckets"].values()
-        )
-        self._advance(m, "compact-minor" if minor else "compact")
+        self._advance(m, op)
         self._publish(m)
-        return {_fold_key(minor): sorted(buckets, key=int)}
+        return m
+
+    def _rewrite(
+        self,
+        m: dict,
+        buckets: "list[str]",
+        op: str,
+        post=None,
+        n_buckets: int | None = None,
+        **write_opts,
+    ) -> dict:
+        """The one per-table bucket rewrite (clustered compaction,
+        :meth:`rebucket`, :meth:`vacuum_tombstones`): read the base and
+        delta files of ``buckets`` in ``m`` (a manifest copy),
+        LWW-resolve them, apply ``post`` (a filter on the resolved
+        rows), bucket them with ``n_buckets`` (default: the table's) and
+        commit the written base run with :meth:`_commit_rewrite`.
+        Returns the published manifest."""
+        target = self._internal_schema(self.schema())
+        df = self._read_files(_entries_of(m, buckets), target, m)
+        if df is None:  # an empty table: only the layout changes
+            return self._commit_rewrite(m, buckets, {}, op, n_buckets=n_buckets)
+        df = self._lww_resolve(df, target)
+        if post is not None:
+            df = post(df)
+        return self._write_and_commit(
+            df.withColumn(_BUCKET_COL, self._bucket_expr(n_buckets)),
+            "base",
+            lambda new: self._commit_rewrite(
+                m, buckets, new, op, n_buckets=n_buckets
+            ),
+            **write_opts,
+        )
 
     def compact(
         self,
@@ -3200,29 +3213,19 @@ class LakeTable:
         buckets = [
             b
             for b in (m["buckets"] if buckets is None else buckets)
-            if m["buckets"].get(b, {}).get("delta")
-            or m["buckets"].get(b, {}).get("base")
+            if _entries_of(m, [b])
         ]
         if not buckets:
             return {"compacted_buckets": []}
-        target = self._internal_schema(self.schema())
-        entries = [
-            e
-            for b in buckets
-            for part in ("base", "delta")
-            for e in m["buckets"][b].get(part, [])
-        ]
-        df = self._read_files(entries, target, m)
-        return self._write_and_commit(
-            self._lww_resolve(df, target).withColumn(
-                _BUCKET_COL, self._bucket_expr()
-            ),
-            "base",
-            lambda new: self._commit_fold(m, buckets, new, minor=False),
+        self._rewrite(
+            m,
+            buckets,
+            "compact",
             cluster_files=len(buckets) * files_per_bucket,
             cluster_cols=cluster_by,
             zorder=zorder,
         )
+        return {"compacted_buckets": sorted(buckets, key=int)}
 
     def rebucket(self, n_buckets: int, cluster: bool = False) -> dict:
         """Change the table's bucket count — bucket-layout evolution
@@ -3244,45 +3247,23 @@ class LakeTable:
         m = json.loads(json.dumps(self.manifest()))
         if n_buckets == m["n_buckets"]:
             return {"rebucketed": False, "n_buckets": n_buckets}
-        target = self._internal_schema(self.schema())
-        entries = [
-            e
-            for b in m["buckets"].values()
-            for part in ("base", "delta")
-            for e in b.get(part, [])
-        ]
-        df = self._read_files(entries, target)
-
-        def commit(new_entries: "dict[str, list[dict]]") -> dict:
-            m["n_buckets"] = n_buckets
-            m["buckets"] = {
-                b: {"base": es, "delta": []} for b, es in new_entries.items()
-            }
-            m["stats"]["total_files"] = sum(
-                len(es) for es in new_entries.values()
-            )
-            self._advance(m, "rebucket")
-            self._publish(m)
-            return {
-                "rebucketed": True,
-                "n_buckets": n_buckets,
-                "files_written": sum(len(es) for es in new_entries.values()),
-            }
-
-        if df is None:
-            return commit({})
         # losing the version race after an O(table) rewrite must not
         # leak a table-sized copy per attempt: the run is reclaimed and
         # the caller reruns against the winner's state
-        return self._write_and_commit(
-            self._lww_resolve(df, target).withColumn(
-                _BUCKET_COL, self._bucket_expr(n_buckets)
-            ),
-            "base",
-            commit,
+        m = self._rewrite(
+            m,
+            list(m["buckets"]),
+            "rebucket",
+            n_buckets=n_buckets,
             cluster_files=n_buckets * 4 if cluster else 0,
             n_partitions=n_buckets,
         )
+        return {
+            "rebucketed": True,
+            "n_buckets": n_buckets,
+            # every bucket now holds only the new run's base files
+            "files_written": m["stats"]["total_files"],
+        }
 
     # convenience for tests / entry
     def count(self) -> int:
@@ -3334,17 +3315,27 @@ def fold_tables(
             tag = "delta" if minor else "base"
             rel = f"{DATA_DIR}/v{m['version'] + 1:08d}-{tag}-{uuid.uuid4().hex[:8]}"
             src = os.path.join(staging, f"{_TABLE_COL}={i}")
+
+            def place() -> "dict[str, list[dict]]":
+                if not lt.io.isdir(src):
+                    return {}
+                return _place_run(
+                    lt.io, src, lt.path, rel,
+                    _stat_cols(m, base=not minor),
+                    m["current_schema_version"],
+                )
+
             try:
-                entries = {}
-                if lt.io.isdir(src):
-                    entries = _place_run(
-                        lt.io, src, lt.path, rel,
-                        _stat_cols(m, base=not minor),
-                        m["current_schema_version"],
-                    )
-                out[i] = lt._commit_fold(m, buckets, entries, minor)
+                lt._commit_run(
+                    rel,
+                    place,
+                    lambda entries: lt._commit_rewrite(
+                        m, buckets, entries,
+                        "compact-minor" if minor else "compact", minor=minor,
+                    ),
+                )
+                out[i] = {_fold_key(minor): sorted(buckets, key=int)}
             except Exception as e:
-                lt.io.remove_tree(os.path.join(lt.path, rel))
                 out[i] = e
 
         io = members[0][1].io
@@ -3372,11 +3363,8 @@ def _fold_write(members: list, minor: bool, staging: str) -> None:
     df = functools.reduce(
         DataFrame.unionByName,
         [
-            lt._read_files(
-                [e for b in bs for p in parts for e in m["buckets"][b].get(p, [])],
-                target,
-                m,
-            ).withColumn(_TABLE_COL, F.lit(i))
+            lt._read_files(_entries_of(m, bs, parts), target, m)
+            .withColumn(_TABLE_COL, F.lit(i))
             for i, lt, m, bs, _ in members
         ],
     )

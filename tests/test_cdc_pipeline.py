@@ -199,6 +199,40 @@ def test_error_port_and_skip_modes(spark, tmp_path):
     assert not LakeTable.exists(os.path.join(wh, "t1"))
 
 
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_refused_fast_lane_commit_leaves_no_run(spark, tmp_path, monkeypatch, backend):
+    """A feed that still carries a dropped column: the fast lane places
+    the table's run and its commit refuses the resurrected column; the
+    per-table fallback's re-run is refused the same way. The table is
+    reported failed, nothing is published, and neither run is left on
+    disk."""
+    from tests.test_lakehouse import unreferenced_data_files
+
+    monkeypatch.setenv("MTP_FILEIO", backend)
+    t0 = datetime(2026, 1, 1)
+
+    def batch(lsn, op):
+        return spark.createDataFrame(
+            [(lsn, "t0", op, "a", [1], 1, "web", t0)], CHANGE_FEED_SCHEMA
+        )
+
+    wh = str(tmp_path / "wh")
+    apply_cdc_batch(spark, batch(1, "I"), wh, epoch=0, app_id="dc", n_buckets=2)
+    t = LakeTable(spark, os.path.join(wh, "t0"))
+    t.drop_column("source")
+    versions = t.versions()
+    out = apply_cdc_batch(
+        spark, batch(2, "U"), wh, epoch=1, app_id="dc", n_buckets=2,
+        error_mode="skip",
+    )
+    assert out["failed"] == ["t0"]
+    assert any(
+        r["kind"] == "fast_path_fallback" for r in LineageLog(wh).read()
+    )
+    assert t.versions() == versions
+    assert unreferenced_data_files(t, versions) == set()
+
+
 def test_allow_block_tables(spark, tmp_path, feed):
     feed_dir, files = feed
     wh = str(tmp_path / "wh")
@@ -387,3 +421,21 @@ def test_isolated_path_rejects_traversal(spark, tmp_path, fail_next_merge_many):
     assert LakeTable.exists(os.path.join(wh, "good_t"))
     assert set(os.listdir(str(tmp_path))) == before
     assert not any("evil" in n for n in os.listdir(wh))
+
+
+def test_listener_removed_when_start_fails(spark, tmp_path):
+    """If writer.start() raises, run_cdc_stream must deregister the
+    progress listener instead of leaving it buffering forever."""
+    from multi_table_plugins_spark.streaming import run_cdc_stream
+
+    before = len(spark.streams._jsqm.listListeners())
+    with pytest.raises(Exception):
+        run_cdc_stream(
+            spark,
+            str(tmp_path / "missing_feed"),
+            str(tmp_path / "wh"),
+            # invalid checkpoint path forces start() to throw
+            "\0bad",
+            app_id="lfail",
+        )
+    assert len(spark.streams._jsqm.listListeners()) == before

@@ -172,3 +172,30 @@ def test_merge_many_compound_and_replay_idempotent(spark, tmp_path):
     # write-side bucketing matches the table layout: point lookup through
     # the bucket-pruned path finds the row
     assert ta.lookup(("x", 1)).count() == 1
+
+
+def test_create_rejects_empty_key(spark, tmp_table_dir):
+    with pytest.raises(ValueError, match="at least one column"):
+        LakeTable.create(spark, tmp_table_dir, PAYLOAD, key=[], n_buckets=2)
+    # nothing half-created on disk
+    assert not LakeTable.exists(tmp_table_dir)
+
+
+def test_merge_refuses_key_order_mismatch(spark, tmp_path):
+    """A batch bucketed on a reordered key tuple must be refused — the
+    bucket hash is order-sensitive, so committing it would corrupt the
+    table layout silently."""
+    wh = str(tmp_path / "wh")
+    b0 = _feed(spark, [(1, "ta", "I", "x", 1, 2)])
+    apply_cdc_batch(
+        spark, b0, wh, epoch=0, app_id="kg", n_buckets=4, key_col=["k1", "k2"]
+    )
+    b1 = _feed(spark, [(2, "ta", "U", "x", 1, 3)])
+    with pytest.raises(Exception, match="key"):
+        apply_cdc_batch(
+            spark, b1, wh, epoch=1, app_id="kg", n_buckets=4,
+            key_col=["k2", "k1"], error_mode="fail",
+        )
+    # table state untouched by the refused batch
+    ta = LakeTable(spark, os.path.join(wh, "ta"))
+    assert {r["n_tok"] for r in ta.read().collect()} == {2}

@@ -189,3 +189,18 @@ def test_cdc_replay_equal_state_local_vs_generic(spark, tmp_path):
     assert local_state.keys() == generic_state.keys()
     assert local_state == generic_state
     assert sum(len(v) for v in local_state.values()) > 0
+
+
+def test_generic_publish_is_atomic_and_cas(tmp_path):
+    """The generic manifest publish stages the full body and claims the
+    slot atomically: no partial content is ever at the published path,
+    a lost race raises FileExistsError, and no temp files remain."""
+    io = GenericFileIO()
+    p = str(tmp_path / "manifest-00000001.json")
+    io.publish_atomic(p, '{"v": 1}')
+    assert io.read_text(p) == '{"v": 1}'
+    with pytest.raises(FileExistsError):
+        io.publish_atomic(p, '{"v": 2}')
+    assert io.read_text(p) == '{"v": 1}'  # loser did not clobber
+    leftovers = [n for n in os.listdir(tmp_path) if n.startswith(".tmp-")]
+    assert leftovers == []

@@ -160,3 +160,47 @@ def test_index_io_routes_through_fileio_seam(spark, docs, tmp_path):
     assert got == _full_pairs_touching_new(docs)
     for c in pairs._mtp_cached:
         c.unpersist()
+
+
+def test_incremental_index_releases_minhash_cache(spark, tmp_path):
+    """build_signature_index must release the persisted minhash base
+    frame even though .filter() hides the _mtp_cached attribute."""
+    from multi_table_plugins_spark.operators.incremental import (
+        build_signature_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)],
+        "doc_id long, text string",
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    build_signature_index(
+        docs, str(tmp_path / "idx"), num_hashes=8, num_bands=4, hash_fn="md5"
+    )
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_probe_exposes_all_cached_frames(spark, tmp_path):
+    from multi_table_plugins_spark.operators.incremental import (
+        build_signature_index,
+        incremental_near_dup,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, f"one two three four five {i} six") for i in range(20)],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    build_signature_index(corpus, idx, num_hashes=8, num_bands=4, hash_fn="md5")
+    new = spark.createDataFrame(
+        [(100, "one two three four five 1 six")], "doc_id long, text string"
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    pairs = incremental_near_dup(spark, new, idx, threshold=0.5)
+    pairs.collect()
+    assert isinstance(pairs._mtp_cached, list) and len(pairs._mtp_cached) == 2
+    for frame in pairs._mtp_cached:
+        frame.unpersist()
+    assert jsc.getPersistentRDDs().size() == before

@@ -220,6 +220,19 @@ def test_legacy_mode_and_bloom_manifest_keys_are_ignored(spark, tmp_table_dir):
     assert legacy.last_scan_info["files_read"] >= 1
 
 
+def test_stray_manifest_backup_is_not_a_table(spark, tmp_table_dir):
+    """Only ``manifest-<v>.json`` names a version: a ``_manifests/``
+    holding nothing but a stray backup is no table, and get_or_create
+    creates one there."""
+    d = os.path.join(tmp_table_dir, "_manifests")
+    os.makedirs(d)
+    with open(os.path.join(d, "manifest-00000001.json.bak"), "w") as f:
+        f.write("{}")
+    assert not LakeTable.exists(tmp_table_dir)
+    t = LakeTable.get_or_create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2)
+    assert t.versions() == [0] and t.manifest()["version"] == 0
+
+
 def test_atomic_commit_conflict(spark, tmp_table_dir):
     t = LakeTable.create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2)
     m = json.loads(json.dumps(t.manifest()))

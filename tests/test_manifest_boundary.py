@@ -1,5 +1,6 @@
-"""Static boundary guard: the manifest log's on-disk format and its
-commit-conflict policy live in ``lakehouse/table.py`` only.
+"""Static boundary guard: the manifest log's on-disk format, its
+commit-conflict policy and the fate of written data runs live in
+``lakehouse/table.py`` only.
 
 Everywhere else in the package, each of these is a finding, reported
 as ``file:line``:
@@ -8,11 +9,16 @@ as ``file:line``:
     ``LakeTable.recompute_on_conflict`` or the re-apply loop inside
     ``LakeTable``);
   * an assignment to ``_manifest_cache_version``;
-  * a call of ``_write_data_files`` or ``_discard_unreferenced`` (the
-    write-and-commit step that discards a lost commit's files);
+  * a call of ``_write_data_files`` or ``_commit_run`` (the one owner
+    that commits a written or placed run, or deletes it);
   * a string literal holding ``"manifest-"``, ``"commit-"`` or
     ``"_manifests"`` (the log's file names); docstrings are prose and
     do not count.
+
+Inside ``lakehouse/table.py``, a manifest publish (``_publish``) is
+made only by ``create``, ``_commit_metadata`` and ``_commit_rewrite``,
+and data files are written (``_write_data_files``) only by
+``_write_and_commit``, so every run has one commit-or-delete owner.
 
 Standard library only; no Spark.
 """
@@ -24,7 +30,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "multi_table_plugins_spark"
 OWNER = os.path.join(PACKAGE, "lakehouse", "table.py")
 LOG_NAMES = ("manifest-", "commit-", "_manifests")
-PRIVATE_WRITES = ("_write_data_files", "_discard_unreferenced")
+PRIVATE_WRITES = ("_write_data_files", "_commit_run")
+#: write-side call -> the only definitions in the owner that may make it
+WRITE_SIDE_CALLERS = {
+    "_publish": {"create", "_commit_metadata", "_commit_rewrite"},
+    "_write_data_files": {"_write_and_commit"},
+}
 
 
 def _names(node):
@@ -131,7 +142,7 @@ def f(lt, io, p):
     try:
         lt._write_data_files(None, 1, "delta")
     except (ValueError, CommitConflict):
-        lt._discard_unreferenced({})
+        lt._commit_run("data/r", list, dict)
         lt._manifest_cache_version = -1
     return io.read_text(p + f"commit-{1:08d}.json")
 '''
@@ -139,8 +150,59 @@ def f(lt, io, p):
     kinds = sorted(g.split(": ", 1)[1] for g in got)
     assert kinds == [
         "assigns _manifest_cache_version",
-        "calls _discard_unreferenced",
+        "calls _commit_run",
         "calls _write_data_files",
         "except CommitConflict",
         "literal 'commit-'",
+    ], got
+
+
+def write_side_findings(source: str, rel: str) -> "list[str]":
+    """Calls of a ``WRITE_SIDE_CALLERS`` name made outside its allowed
+    definitions; a call inside a nested function or lambda counts as
+    its enclosing method's (or module function's)."""
+    tree = ast.parse(source)
+    owners = []
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef):
+            owners.extend(n for n in node.body if isinstance(n, ast.FunctionDef))
+        elif isinstance(node, ast.FunctionDef):
+            owners.append(node)
+    out = []
+    for fn in owners:
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                allowed = WRITE_SIDE_CALLERS.get(node.func.attr)
+                if allowed is not None and fn.name not in allowed:
+                    out.append(f"{rel}:{node.lineno}: {node.func.attr}( in {fn.name}")
+    return out
+
+
+def test_write_side_has_one_owner():
+    with open(os.path.join(ROOT, OWNER), encoding="utf-8") as fh:
+        found = write_side_findings(fh.read(), OWNER)
+    assert not found, (
+        "a manifest publish or a data-file write outside its owner "
+        "leaves a run no one commits or deletes:\n" + "\n".join(found)
+    )
+
+
+def test_write_side_guard_flags_each_kind():
+    src = '''
+class T:
+    def _commit_rewrite(self, m):
+        self._publish(m)
+    def vacuum(self, m):
+        self._publish(m)
+    def _write_and_commit(self, df):
+        return lambda: self._write_data_files(df, "data/r", "base")
+    def rebucket(self, df):
+        def commit(new):
+            self._write_data_files(df, "data/r", "base")
+        return commit
+'''
+    got = write_side_findings(src, "x.py")
+    assert [g.split(": ", 1)[1] for g in got] == [
+        "_publish( in vacuum",
+        "_write_data_files( in rebucket",
     ], got

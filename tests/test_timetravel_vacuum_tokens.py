@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from multi_table_plugins_spark.lakehouse import LakeTable
@@ -118,3 +120,66 @@ def test_vacuum_updates_total_files(spark, tmp_table_dir):
         len(b.get("base", [])) + len(b.get("delta", [])) for b in m["buckets"].values()
     )
     assert m["stats"]["total_files"] == actual
+
+
+def _tombstoned(spark, tmp_table_dir):
+    t = LakeTable.create(spark, tmp_table_dir, TARGET_SCHEMA, n_buckets=2)
+    t.merge_into(_changes(spark, [(1, "I", "a", [1]), (2, "I", "b", [2])]), app_id="v", epoch=0)
+    t.merge_into(_changes(spark, [(5, "D", "a", None), (6, "U", "b", [3])]), app_id="v", epoch=1)
+    return t
+
+
+def test_vacuum_is_one_job_and_one_commit(spark, tmp_table_dir, monkeypatch):
+    """vacuum_tombstones folds deltas and drops old tombstones in the
+    same rewrite: one parquet write, one published version, one base
+    run with no deltas left."""
+    from tests.test_lakehouse import _count_parquet_writes, unreferenced_data_files
+
+    t = _tombstoned(spark, tmp_table_dir)
+    v0 = t.manifest()["version"]
+    writes = _count_parquet_writes(monkeypatch)
+    assert t.vacuum_tombstones(lsn_watermark=10) == {"vacuumed": 1}
+    assert writes["writes"] == 1
+    m = t.manifest()
+    assert m["version"] == v0 + 1 and m["op"] == "vacuum-tombstones"
+    assert all(not b["delta"] for b in m["buckets"].values())
+    assert len({os.path.dirname(os.path.dirname(e["path"]))
+                for b in m["buckets"].values() for e in b["base"]}) == 1
+    assert t._scan(include_tombstones=True).count() == 1
+    assert _state(t) == {"b": [3]}
+    assert unreferenced_data_files(t, t.versions()) == set()
+
+
+@pytest.mark.parametrize(
+    "op, run",
+    [
+        ("vacuum-tombstones", lambda t: t.vacuum_tombstones(lsn_watermark=10)),
+        ("rebucket", lambda t: t.rebucket(4)),
+        ("compact", lambda t: t.compact(cluster=True)),
+    ],
+)
+def test_lost_rewrite_publishes_nothing_and_leaves_no_run(
+    spark, tmp_table_dir, monkeypatch, op, run
+):
+    """Each user of the one per-table rewrite, losing the version race
+    on its own publish, raises, publishes nothing and deletes its run."""
+    from multi_table_plugins_spark.lakehouse import CommitConflict
+    from tests.test_lakehouse import unreferenced_data_files
+
+    t = _tombstoned(spark, tmp_table_dir)
+    versions = t.versions()
+    real = LakeTable._publish
+    lose = {"n": 1}
+
+    def publish(self, manifest, added=None):
+        if manifest["op"] == op and lose["n"]:
+            lose["n"] -= 1
+            raise CommitConflict("injected lost rewrite")
+        return real(self, manifest, added=added)
+
+    monkeypatch.setattr(LakeTable, "_publish", publish)
+    with pytest.raises(CommitConflict, match="injected lost rewrite"):
+        run(t)
+    assert lose["n"] == 0
+    assert t.versions() == versions
+    assert unreferenced_data_files(t, versions) == set()
