@@ -67,6 +67,7 @@ from .table import (
     COMMIT_THREADS,
     DELTA_WRITE_OPTS,
     LakeTable,
+    _key_cols,
     _violations,
     compact_due,
 )
@@ -225,16 +226,20 @@ def merge_many(
             branch=branch,
         )
         handles[table] = lt
-        if lt.key_cols != key_cols:
+        # one listing of the log for the three pre-checks below; the
+        # commit's own ledger check re-reads the newest version
+        m = lt.manifest()
+        have = _key_cols(m)
+        if have != key_cols:
             # same corruption class as a bucket-count mismatch: the
             # bucket hash is order-sensitive over the key tuple, so a
             # reordered/different key would land every file in the
             # wrong bucket while committing cleanly
             raise ValueError(
-                f"table {table!r} has key {lt.key_cols}, batch was "
+                f"table {table!r} has key {have}, batch was "
                 f"bucketed on {key_cols}; pass the table's key order"
             )
-        if lt.n_buckets != n_buckets or lt.constraints():
+        if m["n_buckets"] != n_buckets or m.get("constraints"):
             # the staged files were hashed with the BATCH's bucket count
             # and never constraint-checked — this table needs the slow
             # lane (re-bucket to the table's layout after a rebucket();

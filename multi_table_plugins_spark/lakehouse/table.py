@@ -277,6 +277,13 @@ def _footer_meta(
         return _meta(f)
 
 
+def _key_cols(m: dict) -> "list[str]":
+    """Manifest ``m``'s primary-key columns as a list (compound keys are
+    stored as a list; single keys as a plain string)."""
+    k = m["key"]
+    return [k] if isinstance(k, str) else list(k)
+
+
 def _stat_cols(m: dict, base: bool) -> "list[str]":
     """Columns whose min/max a new file's entry records: the key and
     ``_lsn`` always; BASE files also the payload stats columns (one
@@ -284,8 +291,7 @@ def _stat_cols(m: dict, base: bool) -> "list[str]":
     see _scan). Delta files skip those: payload pruning never
     applies to a version stack, so the stats would be dead manifest
     bytes."""
-    k = m["key"]
-    cols = ([k] if isinstance(k, str) else list(k)) + [LSN_COL]
+    cols = _key_cols(m) + [LSN_COL]
     return cols + (m.get("stats_columns") or []) if base else cols
 
 
@@ -1307,10 +1313,8 @@ class LakeTable:
 
     @property
     def key_cols(self) -> list[str]:
-        """The primary-key columns as a list (compound keys are stored as
-        a list in the manifest; single keys as a plain string)."""
-        k = self.manifest()["key"]
-        return [k] if isinstance(k, str) else list(k)
+        """The primary-key columns as a list (see :func:`_key_cols`)."""
+        return _key_cols(self.manifest())
 
     @property
     def n_buckets(self) -> int:

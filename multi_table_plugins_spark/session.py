@@ -1,10 +1,11 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Tuned for the sandbox (local[N], 128 GiB) but every knob is the one you
-would set on a 1000-executor cluster: AQE on (runtime re-plan + skew-join
-splitting), shuffle partitions sized to cores, Arrow enabled for the
-pandas-UDF boundary, and small broadcast threshold left at default so
-Catalyst broadcasts dimension tables on its own.
+Every knob is the one you would set on a 1000-executor cluster: AQE on
+(runtime re-plan + skew-join splitting), shuffle partitions sized to
+cores, Arrow enabled for the pandas-UDF boundary, and a 64 MiB broadcast
+threshold so Catalyst broadcasts dimension tables and per-batch key sets
+on its own (on a cluster, size it to executor memory). A JVM this
+factory launches also gets the driver JIT policy (:data:`JIT_POLICY`).
 """
 
 from __future__ import annotations
@@ -29,6 +30,27 @@ LOCALFS_CONF = {
     "spark.hadoop.fs.AbstractFileSystem.file.impl": "mtp.localfs.NioLocalFs",
 }
 
+#: Driver JIT policy: HotSpot's tier-4 (C2) promotion thresholds raised
+#: about 10x over the defaults (5000 / 600 / 15000 / 40000). A micro-batch
+#: re-runs the driver's analysis, planning and commit code a few hundred
+#: times and then moves on, so at the default thresholds the JIT spends
+#: most of a short batch's CPU recompiling that lukewarm code at C2; hot
+#: loops (the scan, shuffle and parquet write) still reach C2. No
+#: ``TieredStopAtLevel``: stopping at C1 roughly doubled the CPU per event
+#: of a bulk replay. README "Driver JIT policy" has the A/B.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=20000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+)
+
+
+def _jvm_running() -> bool:
+    """Whether the driver JVM already runs (spark-submit, or an earlier
+    session), so that launch-time conf can no longer reach it."""
+    return SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+
 
 def _local_fs_conf(conf: dict) -> dict:
     """Conf that binds the in-process-permissions local filesystem.
@@ -37,7 +59,7 @@ def _local_fs_conf(conf: dict) -> dict:
     any caller entries). Into a JVM that is already running (spark-submit,
     or an earlier session) the binding goes only if its class loads there;
     otherwise Hadoop's default stays and one warning says how to add it."""
-    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if not _jvm_running():
         if os.path.isfile(LOCALFS_JAR):
             cp = conf.get("spark.driver.extraClassPath")
             return {
@@ -68,6 +90,34 @@ def _local_fs_conf(conf: dict) -> dict:
         "--driver-class-path <checkout>/multi_table_plugins_spark/jvm/"
         "mtp-localfs.jar to spark-submit."
     )
+    return {}
+
+
+def _jit_conf(conf: dict) -> dict:
+    """Conf that gives a JVM this call launches the :data:`JIT_POLICY`
+    flags, ahead of any caller ``spark.driver.extraJavaOptions`` (HotSpot
+    takes the last occurrence of a flag, so the caller's own value wins).
+    A JVM that already runs keeps the flags it was started with; one
+    warning says how to pass them if they are missing."""
+    if not _jvm_running():
+        opts = conf.get("spark.driver.extraJavaOptions")
+        return {
+            "spark.driver.extraJavaOptions": " ".join(
+                p for p in (*JIT_POLICY, opts) if p
+            )
+        }
+    SparkContext._ensure_initialized()
+    args = set(
+        SparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    if not args.issuperset(JIT_POLICY):
+        _log.warning(
+            "the driver JVM runs without the micro-batch JIT policy: it "
+            "recompiles per-batch code at C2 for most of a short batch's "
+            "CPU. Pass --driver-java-options '%s' to spark-submit.",
+            " ".join(JIT_POLICY),
+        )
     return {}
 
 
@@ -115,12 +165,13 @@ def get_spark(
         # dynamic-partition writes: concurrent per-partition writers instead
         # of a per-task sort — the sort dominates when rows carry arrays
         .config("spark.sql.maxConcurrentOutputFileWriters", "640")
-        # dimension tables / per-batch key sets broadcast freely on a
-        # 128 GiB box (cluster guidance: size to executor memory)
+        # dimension tables / per-batch key sets broadcast freely
+        # (cluster guidance: size to executor memory)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     conf = dict(extra_conf or {})
     conf.update(_local_fs_conf(conf))
+    conf.update(_jit_conf(conf))
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -33,6 +33,7 @@ did not commit, so only the failing tables lose the batch.
 
 from __future__ import annotations
 
+import functools
 import os
 import traceback
 from concurrent.futures import ThreadPoolExecutor
@@ -61,6 +62,19 @@ HISTORY_SUFFIX = "__history"
 #: that runs longer than the interval is followed at once, so a busy
 #: stream keeps its throughput.
 CONTINUOUS_TRIGGER_INTERVAL = "250 milliseconds"
+
+
+@functools.lru_cache(maxsize=1)
+def _compilation_bean(gateway):
+    """The driver JVM's CompilationMXBean; a new gateway (a new JVM)
+    evicts the handle of the old one."""
+    return gateway.jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+
+def _jvm_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds the driver JVM has spent JIT-compiling so far, over
+    all of its compiler threads (local-mode executors share this JVM)."""
+    return int(_compilation_bean(spark.sparkContext._gateway).getTotalCompilationTime())
 
 
 def _errors_path(warehouse: str) -> str:
@@ -241,6 +255,7 @@ def apply_cdc_batch(
         )
         return main
 
+    compile0 = _jvm_compile_ms(spark)
     good = batch_df
     obs_v = None
     if validate:
@@ -315,6 +330,7 @@ def apply_cdc_batch(
         stats["unsafe_tables"], failures,
     )
     fields = [f.name for f in payload_schema_of_changes(batch_df.schema).fields]
+    stats["jvm_compile_ms"] = _jvm_compile_ms(spark) - compile0
     _emit_applied(lineage, warehouse, app_id, epoch, fields, stats, results)
     # a COMPLETE batch advances the warehouse snapshot, pinning the
     # versions each commit ITSELF produced (never a re-read of "latest" —
@@ -478,7 +494,9 @@ def _report_rejected(
 
 
 def _emit_applied(lineage, warehouse, app_id, epoch, fields, stats, results) -> None:
-    """One ``cdc_apply`` lineage record per committed table."""
+    """One ``cdc_apply`` lineage record per committed table. The batch-wide
+    fields (``watermark``, ``max_lsn``, ``jvm_compile_ms``: the driver
+    JVM's JIT time while the batch ran) repeat on each."""
     for t, m in results.items():
         lineage.emit(
             {
@@ -490,6 +508,7 @@ def _emit_applied(lineage, warehouse, app_id, epoch, fields, stats, results) -> 
                 "fields": fields,
                 "watermark": stats.get("watermark"),
                 "max_lsn": stats.get("max_lsn"),
+                "jvm_compile_ms": stats["jvm_compile_ms"],
                 **m,
             }
         )

@@ -17,6 +17,21 @@ and add  --driver-class-path <repo>/multi_table_plugins_spark/jvm/mtp-localfs.ja
 so Hadoop's local filesystem sets file modes without forking chmod (the
 job runs without it, slower; it logs which ``file:`` filesystem is active).
 
+Also pass the driver JIT policy (README "Driver JIT policy"):
+
+    --driver-java-options '-XX:Tier4InvocationThreshold=50000
+        -XX:Tier4MinInvocationThreshold=20000 -XX:Tier4CompileThreshold=60000
+        -XX:Tier4BackEdgeThreshold=400000'
+
+(one line). It raises HotSpot's C2 promotion thresholds about 10x, so the
+driver stops recompiling code that runs a few hundred times per
+micro-batch at C2; hot loops still reach C2. On a 4-vCPU host it cut the
+CPU per event by 30% on a stream of 2,000-event batches and by 6% on
+80k-event batches, at the cost of slower batches while the code warms.
+A locally launched session sets these flags itself; under spark-submit
+the JVM is already running, so without the flag the job logs one warning
+naming it.
+
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executors); locally it falls back to local[$SPARK_GRAFT_CPUS]. The job is
 resumable: same --checkpoint + --app-id after a kill replays exactly-once

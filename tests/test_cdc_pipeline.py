@@ -439,3 +439,70 @@ def test_listener_removed_when_start_fails(spark, tmp_path):
             app_id="lfail",
         )
     assert len(spark.streams._jsqm.listListeners()) == before
+
+
+def _one_row_batch(spark, lsn, table="t0"):
+    return spark.createDataFrame(
+        [(lsn, table, "U", "a", [1], 1, "web", datetime(2026, 1, 1))],
+        CHANGE_FEED_SCHEMA,
+    )
+
+
+def test_cdc_apply_records_the_batch_jit_time(spark, tmp_path):
+    """Every ``cdc_apply`` record carries ``jvm_compile_ms``, the driver
+    JVM's JIT time over the batch: batch-wide, so equal on each table's
+    record, like ``watermark``."""
+    wh = str(tmp_path / "wh")
+    df = _one_row_batch(spark, 1).unionByName(_one_row_batch(spark, 2, "t1"))
+    apply_cdc_batch(spark, df, wh, epoch=0, app_id="jit", n_buckets=2)
+    recs = [r for r in LineageLog(wh).read() if r["kind"] == "cdc_apply"]
+    assert sorted(r["table"] for r in recs) == ["t0", "t1"]
+    ms = {r["jvm_compile_ms"] for r in recs}
+    assert len(ms) == 1
+    assert all(type(x) is int and x >= 0 for x in ms), ms
+
+
+def test_fast_lane_prechecks_list_the_log_once(spark, tmp_path, monkeypatch):
+    """``merge_many`` takes a table's key, bucket count and constraints
+    for its fast-lane pre-checks from one manifest read: between opening
+    the table and placing its run, ``_manifests/`` is listed once, for a
+    table the batch creates and for one that already exists."""
+    from multi_table_plugins_spark.lakehouse.fileio import LocalFileIO
+
+    calls = []
+
+    class Counting(LocalFileIO):
+        def isdir(self, path):
+            calls.append(("isdir", path))
+            return super().isdir(path)
+
+        def listdir(self, path):
+            calls.append(("listdir", path))
+            return super().listdir(path)
+
+    spans = []
+    open_table = LakeTable.get_or_create.__func__
+    append_staged = LakeTable.append_staged
+
+    def opened(cls, *a, **kw):
+        lt = open_table(cls, *a, **kw)
+        spans.append([len(calls)])
+        return lt
+
+    def placing(self, *a, **kw):
+        spans[-1].append(len(calls))
+        return append_staged(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "get_or_create", classmethod(opened))
+    monkeypatch.setattr(LakeTable, "append_staged", placing)
+    wh = str(tmp_path / "wh")
+    for epoch in (0, 1):
+        apply_cdc_batch(
+            spark, _one_row_batch(spark, epoch + 1), wh, epoch=epoch,
+            app_id="pre", n_buckets=2, io=Counting(),
+        )
+    mdir = os.path.join(wh, "t0", "_manifests")
+    assert [len(s) for s in spans] == [2, 2]
+    for start, end in spans:
+        log = [c for c in calls[start:end] if c[1] == mdir]
+        assert log == [("isdir", mdir), ("listdir", mdir)], calls[start:end]

@@ -1,7 +1,9 @@
 """The north rule requires the job to run under ``spark-submit
 --py-files``: package the library as a zip, submit the CDC job as a fresh
 application, and verify the final table state. The local-filesystem
-binding jar rides along on ``--driver-class-path`` and must be active."""
+binding jar rides along on ``--driver-class-path`` and must be active; the
+driver JIT policy rides along on ``--driver-java-options``, so the job
+logs no warning asking for it."""
 
 import os
 import shutil
@@ -11,7 +13,7 @@ import zipfile
 
 import pytest
 
-from multi_table_plugins_spark.session import LOCALFS_CONF, LOCALFS_JAR
+from multi_table_plugins_spark.session import JIT_POLICY, LOCALFS_CONF, LOCALFS_JAR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -54,6 +56,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
             "--master", "local[4]",
             "--py-files", zpath,
             "--driver-class-path", LOCALFS_JAR,
+            "--driver-java-options", " ".join(JIT_POLICY),
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.shuffle.partitions=4",
             os.path.join(REPO, "run_cdc_job.py"),
@@ -72,6 +75,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     fs_class = LOCALFS_CONF["spark.hadoop.fs.file.impl"]
     # spark-submit merges the Python driver's stderr into its own stdout
     assert f"file: filesystem: {fs_class}" in proc.stdout, proc.stdout[-3000:]
+    assert "JIT policy" not in proc.stdout + proc.stderr
 
     # verify final state against the batch oracle with a fresh local session
     oracle = expected_final_state(feed)
