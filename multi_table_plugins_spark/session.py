@@ -93,28 +93,23 @@ def _local_fs_conf(conf: dict) -> dict:
     return {}
 
 
-def _jit_conf(conf: dict) -> dict:
-    """Conf that gives a JVM this call launches the :data:`JIT_POLICY`
-    flags, ahead of any caller ``spark.driver.extraJavaOptions`` (HotSpot
-    takes the last occurrence of a flag, so the caller's own value wins).
-    A JVM that already runs keeps the flags it was started with; one
-    warning says how to pass them if they are missing."""
+def _jit_conf() -> dict:
+    """Conf that starts a JVM this call launches with :data:`JIT_POLICY`.
+
+    The flags go in ``spark.driver.defaultJavaOptions``, which Spark's
+    launcher puts ahead of ``spark.driver.extraJavaOptions``; HotSpot takes
+    the last occurrence of a flag, so a caller's own value wins. A JVM that
+    already runs keeps the flags it was started with; one warning says how
+    to pass them if its launch arguments lack any of the policy's flags."""
     if not _jvm_running():
-        opts = conf.get("spark.driver.extraJavaOptions")
-        return {
-            "spark.driver.extraJavaOptions": " ".join(
-                p for p in (*JIT_POLICY, opts) if p
-            )
-        }
+        return {"spark.driver.defaultJavaOptions": " ".join(JIT_POLICY)}
     SparkContext._ensure_initialized()
-    args = set(
-        SparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-        .getInputArguments()
-    )
-    if not args.issuperset(JIT_POLICY):
+    mgmt = SparkContext._jvm.java.lang.management
+    args = mgmt.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    if not {a.split("=")[0] for a in args} >= {f.split("=")[0] for f in JIT_POLICY}:
         _log.warning(
-            "the driver JVM runs without the micro-batch JIT policy: it "
-            "recompiles per-batch code at C2 for most of a short batch's "
+            "the driver JVM runs without the micro-batch JIT policy flags: "
+            "it recompiles per-batch code at C2 for most of a short batch's "
             "CPU. Pass --driver-java-options '%s' to spark-submit.",
             " ".join(JIT_POLICY),
         )
@@ -169,9 +164,8 @@ def get_spark(
         # (cluster guidance: size to executor memory)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    conf = dict(extra_conf or {})
+    conf = {**_jit_conf(), **(extra_conf or {})}
     conf.update(_local_fs_conf(conf))
-    conf.update(_jit_conf(conf))
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

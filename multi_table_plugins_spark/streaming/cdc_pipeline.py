@@ -33,7 +33,6 @@ did not commit, so only the failing tables lose the batch.
 
 from __future__ import annotations
 
-import functools
 import os
 import traceback
 from concurrent.futures import ThreadPoolExecutor
@@ -64,17 +63,11 @@ HISTORY_SUFFIX = "__history"
 CONTINUOUS_TRIGGER_INTERVAL = "250 milliseconds"
 
 
-@functools.lru_cache(maxsize=1)
-def _compilation_bean(gateway):
-    """The driver JVM's CompilationMXBean; a new gateway (a new JVM)
-    evicts the handle of the old one."""
-    return gateway.jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-
-
 def _jvm_compile_ms(spark: SparkSession) -> int:
     """Milliseconds the driver JVM has spent JIT-compiling so far, over
     all of its compiler threads (local-mode executors share this JVM)."""
-    return int(_compilation_bean(spark.sparkContext._gateway).getTotalCompilationTime())
+    mgmt = spark.sparkContext._jvm.java.lang.management
+    return int(mgmt.ManagementFactory.getCompilationMXBean().getTotalCompilationTime())
 
 
 def _errors_path(warehouse: str) -> str:

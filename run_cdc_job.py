@@ -17,20 +17,19 @@ and add  --driver-class-path <repo>/multi_table_plugins_spark/jvm/mtp-localfs.ja
 so Hadoop's local filesystem sets file modes without forking chmod (the
 job runs without it, slower; it logs which ``file:`` filesystem is active).
 
-Also pass the driver JIT policy (README "Driver JIT policy"):
+Also pass the driver JIT policy, the HotSpot flags in
+``multi_table_plugins_spark.session.JIT_POLICY`` (README "Driver JIT policy"):
 
-    --driver-java-options '-XX:Tier4InvocationThreshold=50000
-        -XX:Tier4MinInvocationThreshold=20000 -XX:Tier4CompileThreshold=60000
-        -XX:Tier4BackEdgeThreshold=400000'
+    JIT=$(cd <repo> && python -c "from multi_table_plugins_spark.session import JIT_POLICY; print(' '.join(JIT_POLICY))")
+    spark-submit --driver-java-options "$JIT" ...
 
-(one line). It raises HotSpot's C2 promotion thresholds about 10x, so the
-driver stops recompiling code that runs a few hundred times per
-micro-batch at C2; hot loops still reach C2. On a 4-vCPU host it cut the
-CPU per event by 30% on a stream of 2,000-event batches and by 6% on
-80k-event batches, at the cost of slower batches while the code warms.
-A locally launched session sets these flags itself; under spark-submit
-the JVM is already running, so without the flag the job logs one warning
-naming it.
+They raise HotSpot's C2 promotion thresholds about 10x, so the driver
+stops recompiling code that runs a few hundred times per micro-batch at
+C2; hot loops still reach C2. On a 4-vCPU host they cut the CPU per event
+by 30% on a stream of 2,000-event batches and by 6% on 80k-event batches,
+at the cost of slower batches while the code warms. A locally launched
+session sets these flags itself; under spark-submit the JVM is already
+running, so without them the job logs one warning naming the flag.
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executors); locally it falls back to local[$SPARK_GRAFT_CPUS]. The job is

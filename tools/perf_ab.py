@@ -85,10 +85,12 @@ def parse_run(stdout: str) -> dict:
             "steal_pct": steal, "metrics": metrics}
 
 
-def run_one(root: str, workload: str, seed: int, seconds: int, trace: int) -> dict:
+def run_one(root: str, workload: str, seed: int, trace: int) -> dict:
+    """One ``perfbench/run.py`` run of ``root`` for BENCHMARK.json's run
+    length."""
     proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+         "--seconds", str(_bench()["run_seconds"]), "--trace", str(trace)],
         cwd=root, capture_output=True, text=True, timeout=900,
     )
     if proc.returncode != 0:
@@ -161,7 +163,6 @@ def main(argv=None) -> int:
     p.add_argument("--workload", action="append",
                    help="workload to run (repeatable; default both)")
     p.add_argument("--seeds", default="1-5", help="e.g. 1501-1510 or 1,4,9")
-    p.add_argument("--seconds", type=int, default=20)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--metric", action="append",
                    help="metric to tabulate (repeatable; default the gated "
@@ -185,7 +186,7 @@ def main(argv=None) -> int:
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for w in args.workload or ["cdc_bulk", "cdc_trickle"]:
             for side in order:
-                r = run_one(roots[side], w, seed, args.seconds, args.trace)
+                r = run_one(roots[side], w, seed, args.trace)
                 r.update(side=side, workload=w, seed=seed, first=order[0])
                 runs.append(r)
                 print(f"{w} seed {seed} {side}: correct={r['correct']} "
