@@ -17,11 +17,16 @@ write side:
      generic/object-store backend — see fileio.py), read row counts
      from parquet footers (no job), and make one atomic ledger-checked
      manifest commit per table (``LakeTable.append_staged``);
-  4. one job folds every due table (``table.compact_due``): the tables
-     whose delta stacks reached the compaction threshold are read,
-     LWW-resolved per (table, bucket, key) and written with one more
-     ``partitionBy(table, bucket)`` write, then placed and committed
-     per table the same way (``table.fold_tables``).
+  4. one call folds every due table (``table.compact_due``), decided on
+     the manifests step 3's commits published (no listing of the log):
+     the tables whose delta stacks reached the compaction threshold are
+     read, LWW-resolved per (table, bucket, key) and written as one
+     staged ``(table, bucket)`` run, then placed and committed per table
+     the same way (``table.fold_tables``). A fold whose input fits in
+     one AQE partition runs on the driver with Arrow and no Spark job —
+     AQE would run it as one reduce task anyway, so a job would add only
+     its fixed cost; a larger one is one more Spark job with one
+     ``partitionBy(table, bucket)`` write.
 
 Row/delete counts, the watermark and the max LSN ride the write job via
 ``Observation`` — zero extra passes.
@@ -284,10 +289,12 @@ def merge_many(
         # remove the shared staging parent when no other batch is mid-flight
         io.remove_dir_if_empty(os.path.dirname(staging))
 
-    # one job folds every table that the commits made due; a table
-    # whose fold fails is a failed table, as a failed commit is
+    # every table that the commits made due folds in one call, decided
+    # on the manifests the commits published; a table whose fold fails
+    # is a failed table, as a failed commit is
     folded = sorted(t for t, m in results.items() if not m.get("skipped"))
-    for t, r in zip(folded, compact_due([handles[t] for t in folded])):
+    heads = [handles[t].published(results[t]["version"]) for t in folded]
+    for t, r in zip(folded, compact_due([handles[t] for t in folded], heads)):
         if isinstance(r, Exception):
             commit_failures[t] = r
             del results[t]

@@ -46,6 +46,7 @@ from __future__ import annotations
 import functools
 import json
 import logging
+import math
 import os
 import re
 import time
@@ -63,6 +64,7 @@ from ..schemas import (
     merge_schemas,
     schema_from_json,
 )
+from . import driver_fold
 from .fileio import FileIO, get_fileio
 
 _BUCKET_COL = "_bucket"
@@ -73,8 +75,9 @@ DATA_DIR = "data"
 REFS_DIR = "_refs"
 
 #: threads placing and committing tables concurrently after one shared
-#: write (``merge_many``'s per-table commits, :func:`fold_tables`), and
-#: across the per-table calls of a fast-path fallback
+#: write (``merge_many``'s per-table commits, :func:`fold_tables`),
+#: folding the (table, bucket)s of a driver-lane fold, and across the
+#: per-table calls of a fast-path fallback
 COMMIT_THREADS = 8
 
 #: write options for SHORT-LIVED delta files (folded by compaction):
@@ -845,6 +848,15 @@ class LakeTable:
         m = self._load_manifest(v)
         self._manifest_cache, self._manifest_cache_version = m, v
         return m
+
+    def published(self, version: int) -> dict:
+        """Manifest ``version`` without listing the log: the copy this
+        handle published or last loaded when it is that version (a data
+        commit's, handed to :func:`compact_due`), else its file. Treat
+        it as read-only."""
+        if version == self._manifest_cache_version and self._manifest_cache:
+            return self._manifest_cache
+        return self.manifest(version)
 
     def versions(self) -> list[int]:
         return _manifest_versions(self.io, self._mdir)
@@ -2863,7 +2875,7 @@ class LakeTable:
         else:
             result = self.recompute_on_conflict(attempt)
         if not result.get("skipped"):
-            folded = compact_due([self])[0]
+            folded = compact_due([self], [self.published(result["version"])])[0]
             if isinstance(folded, Exception):
                 raise folded
             result.update(folded)
@@ -3275,30 +3287,53 @@ class LakeTable:
 
 
 def fold_tables(
-    jobs: "list[tuple[LakeTable, list[str] | None]]", minor: bool = False
+    jobs: "list[tuple[LakeTable, list[str] | None]]",
+    minor: bool = False,
+    manifests: "list[dict | None] | None" = None,
 ) -> "list[dict | Exception]":
-    """Fold the buckets of many tables with ONE Spark job per group of
-    alike tables — the one-job-over-N-tables shape of the reference
-    (MultiTableDBSource.java:61-66) that ``merge_many`` uses to apply a
-    batch. ``jobs`` pairs a table with the buckets to fold (None: all).
-    A major fold rewrites a bucket's base and deltas as one base file;
-    a minor fold (``minor=True``) merges its deltas (>= 2) into one
-    delta file. Tables sharing a warehouse, internal schema, key and
-    bucket count form a group: its job reads every folded file tagged
-    with its table, hash-partitions on ``(_table, _bucket)`` — which
-    already clusters the per-(table, bucket, key) LWW aggregate, so the
-    plan has one exchange — and writes one staged ``partitionBy(_table,
-    _bucket)`` run. Per table, the driver places its files through the
-    FileIO seam (:func:`_place_run`) and publishes its manifest by CAS.
+    """Fold the buckets of many tables with at most ONE Spark job per
+    group of alike tables — the one-job-over-N-tables shape of the
+    reference (MultiTableDBSource.java:61-66) that ``merge_many`` uses
+    to apply a batch. ``jobs`` pairs a table with the buckets to fold
+    (None: all); ``manifests`` may hand in each table's head manifest
+    (None: list the table's log), such as the one its data commit just
+    published — a stale copy loses at the CAS. A major fold rewrites a
+    bucket's base and deltas as one base file; a minor fold
+    (``minor=True``) merges its deltas (>= 2) into one delta file.
 
-    Returns one result per job: the fold's result dict, or the
-    exception that failed it (a group's job failing fails each of its
-    tables; a lost version race is a ``CommitConflict``). A failed
-    table keeps no new file."""
+    Tables sharing a warehouse, internal schema, key and bucket count
+    form a group, folded on one of two lanes into one staged run laid
+    out as ``_table=i/_bucket=b``:
+
+      * the **driver lane**, when the group's fold input (the summed
+        entry ``bytes`` of its due buckets) is at most one AQE partition
+        (``spark.sql.adaptive.advisoryPartitionSizeInBytes``): AQE would
+        run such a fold's resolve as one coalesced reduce task anyway, so
+        a Spark job buys it no parallelism, only its fixed cost. Arrow
+        folds each due (table, bucket) on ``COMMIT_THREADS`` threads
+        (:func:`_fold_on_driver`). Tables whose key is not a string, int
+        or long, or whose columns Arrow cannot write alike, take the
+        Spark lane;
+      * the **Spark lane**, one job (:func:`_fold_write`): it reads every
+        folded file tagged with its table, hash-partitions on ``(_table,
+        _bucket)`` — which already clusters the per-(table, bucket, key)
+        LWW aggregate, so the plan has one exchange — and writes one
+        ``partitionBy(_table, _bucket)`` run.
+
+    Per table, the driver places its files through the FileIO seam
+    (:func:`_place_run`) and publishes its manifest by CAS; a row
+    hashed outside its bucket refuses the commit on either lane.
+
+    Returns one result per job: the fold's result dict (with
+    ``fold_lane``: ``"driver"`` or ``"spark"``), or the exception that
+    failed it (a group's fold failing fails each of its tables; a lost
+    version race is a ``CommitConflict``). A failed table keeps no new
+    file."""
     out: "list[dict | Exception]" = [{} for _ in jobs]
     groups: "dict[tuple, list]" = {}
     for i, (lt, buckets) in enumerate(jobs):
-        m = json.loads(json.dumps(lt.manifest()))
+        m = (manifests or [None] * len(jobs))[i]
+        m = json.loads(json.dumps(lt.manifest() if m is None else m))
         buckets = [
             b
             for b in (m["buckets"] if buckets is None else buckets)
@@ -3313,6 +3348,7 @@ def fold_tables(
         groups.setdefault(g, []).append((i, lt, m, buckets, target))
     for (warehouse, *_), members in groups.items():
         staging = os.path.join(warehouse, "_staging", f"fold-{uuid.uuid4().hex[:8]}")
+        lane = _fold_lane(members, minor)
 
         def publish(member) -> None:
             i, lt, m, buckets, _ = member
@@ -3338,13 +3374,15 @@ def fold_tables(
                         "compact-minor" if minor else "compact", minor=minor,
                     ),
                 )
-                out[i] = {_fold_key(minor): sorted(buckets, key=int)}
+                out[i] = {_fold_key(minor): sorted(buckets, key=int), "fold_lane": lane}
             except Exception as e:
                 out[i] = e
 
         io = members[0][1].io
         try:
-            _fold_write(members, minor, staging)
+            (_fold_on_driver if lane == "driver" else _fold_write)(
+                members, minor, staging
+            )
             with ThreadPoolExecutor(max_workers=COMMIT_THREADS) as ex:
                 list(ex.map(publish, members))
         except Exception as e:  # the shared job; publish() keeps its own
@@ -3360,14 +3398,102 @@ def _fold_key(minor: bool) -> str:
     return "minor_compacted_buckets" if minor else "compacted_buckets"
 
 
-def _fold_write(members: list, minor: bool, staging: str) -> None:
-    """The shared job of one :func:`fold_tables` group."""
+def _fold_parts(minor: bool) -> "tuple[str, ...]":
+    return ("delta",) if minor else ("base", "delta")
+
+
+def _byte_size(s: str) -> int:
+    """A Spark byte-size string (``64m``, ``1b``, ``67108864b``) in bytes."""
+    hit = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", s.strip().lower())
+    if hit is None:
+        raise ValueError(f"not a byte size: {s!r}")
+    return int(hit.group(1)) << (10 * " kmgtp".index(hit.group(2) or " "))
+
+
+def _fold_lane(members: list, minor: bool) -> str:
+    """The lane of one :func:`fold_tables` group: ``"driver"`` when its
+    fold input is at most one AQE partition and Arrow can fold it,
+    else ``"spark"``. An entry without ``bytes`` counts as too large."""
     _, lt0, m0, _, target = members[0]
-    parts = ("delta",) if minor else ("base", "delta")
+    conf = lt0.spark.conf
+    size = sum(
+        e.get("bytes", math.inf)
+        for _, _, m, bs, _ in members
+        for e in _entries_of(m, bs, _fold_parts(minor))
+    )
+    fields = {f.name: f.dataType for f in target.fields}
+    ok = (
+        size <= _byte_size(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        and all(fields[k] in driver_fold.HASHABLE_KEYS for k in _key_cols(m0))
+        and driver_fold.arrow_schema(target) is not None
+        and (minor or conf.get("spark.sql.parquet.compression.codec") in driver_fold.CODECS)
+    )
+    return "driver" if ok else "spark"
+
+
+def _fold_on_driver(members: list, minor: bool, staging: str) -> None:
+    """The driver lane of one :func:`fold_tables` group: the staged run
+    :func:`_fold_write` would write, folded with Arrow per due (table,
+    bucket) on ``COMMIT_THREADS`` threads. Each entry is read with the
+    file schema of its ``sv`` and conformed to the target; the max-
+    ``_lsn`` row per key is kept, tombstones included; rows go to the
+    bucket Spark's hash gives them, so a file hashed with another bucket
+    count lands outside its bucket and :meth:`LakeTable._commit_rewrite`
+    refuses the fold. A major fold writes with the session codec, a
+    minor one as ``DELTA_WRITE_OPTS`` says."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, lt0, m0, _, target = members[0]
+    schema = driver_fold.arrow_schema(target)
+    keys = _key_cols(m0)
+    if minor:
+        opts = {
+            "compression": driver_fold.CODECS[DELTA_WRITE_OPTS["compression"]],
+            "use_dictionary": DELTA_WRITE_OPTS["parquet.enable.dictionary"] == "true",
+        }
+    else:
+        codec = lt0.spark.conf.get("spark.sql.parquet.compression.codec")
+        opts = {"compression": driver_fold.CODECS[codec]}
+
+    def fold(unit) -> None:
+        i, lt, m, b = unit
+        columns = {
+            sv: lt._internal_schema(schema_from_json(j)).fieldNames()
+            for sv, j in m["schemas"].items()
+        }
+        t = driver_fold.latest_per_key(
+            pa.concat_tables([
+                driver_fold.read_conformed(
+                    lt.io, os.path.join(lt.path, e["path"]), columns[str(e["sv"])], schema
+                )
+                for e in _entries_of(m, [b], _fold_parts(minor))
+            ]),
+            keys,
+        )
+        ids = driver_fold.bucket_ids(t, keys, m["n_buckets"])
+        for bid in np.unique(ids):
+            d = os.path.join(staging, f"{_TABLE_COL}={i}", f"{_BUCKET_COL}={bid}")
+            lt.io.makedirs(d)
+            pq.write_table(
+                t.filter(pa.array(ids == bid)),
+                os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"),
+                **opts,
+            )
+
+    units = [(i, lt, m, b) for i, lt, m, bs, _ in members for b in bs]
+    with ThreadPoolExecutor(max_workers=COMMIT_THREADS) as ex:
+        list(ex.map(fold, units))
+
+
+def _fold_write(members: list, minor: bool, staging: str) -> None:
+    """The Spark lane of one :func:`fold_tables` group: one job."""
+    _, lt0, m0, _, target = members[0]
     df = functools.reduce(
         DataFrame.unionByName,
         [
-            lt._read_files(_entries_of(m, bs, parts), target, m)
+            lt._read_files(_entries_of(m, bs, _fold_parts(minor)), target, m)
             .withColumn(_TABLE_COL, F.lit(i))
             for i, lt, m, bs, _ in members
         ],
@@ -3382,26 +3508,33 @@ def _fold_write(members: list, minor: bool, staging: str) -> None:
     w.options(**(DELTA_WRITE_OPTS if minor else {})).mode("error").parquet(staging)
 
 
-def compact_due(tables: "list[LakeTable]") -> "list[dict | Exception]":
+def compact_due(
+    tables: "list[LakeTable]", manifests: "list[dict]"
+) -> "list[dict | Exception]":
     """The threshold ladder after data commits (``merge_many``'s last
-    step, and ``merge_into``'s): buckets whose deltas reached
-    ``compact_threshold`` fold into their base;
-    with ``minor_compact_threshold`` set, other buckets whose deltas
-    reached it get a minor fold. Plain tables share one
-    :func:`fold_tables` job per kind; a table with a persisted sort
-    order takes its own clustered lane (:meth:`LakeTable.compact`).
+    step, and ``merge_into``'s), decided on ``manifests``: the manifest
+    each table's data commit published, so no log is listed again (a
+    copy gone stale loses the fold's CAS). Buckets whose deltas reached
+    ``compact_threshold`` fold into their base; with
+    ``minor_compact_threshold`` set, other buckets whose deltas reached
+    it get a minor fold. Plain tables share one :func:`fold_tables` call
+    per kind — on the driver when the fold is small enough for one AQE
+    partition (AQE would run it as one reduce task anyway), else one
+    Spark job; a table with a persisted sort order takes its own
+    clustered lane (:meth:`LakeTable.compact`, a Spark job).
 
     Returns one dict per table: ``compacted_buckets`` and/or
     ``minor_compacted_buckets`` plus ``compact_ms`` (the wall time of
-    the fold calls it was in) if it folded — or the exception that
-    failed its fold. The data commits are durable, so a fold that loses
-    the version race is no failure: its run is gone, one ``degraded``
-    lineage record (``site: compaction``, the data commit's
-    ``version``) names the table, and the next commit folds again."""
+    the fold calls it was in) and ``fold_lane`` (``"driver"``, or
+    ``"spark"`` if any of its folds ran a Spark job) if it folded — or
+    the exception that failed its fold. The data commits are durable,
+    so a fold that loses the version race is no failure: its run is
+    gone, one ``degraded`` lineage record (``site: compaction``, the
+    data commit's ``version``) names the table, and the next commit
+    folds again."""
     out: "list[dict | Exception]" = [{} for _ in tables]
     versions, major, lanes, small, lost = {}, [], [], [], set()
-    for n, lt in enumerate(tables):
-        m = lt.manifest()
+    for n, m in enumerate(manifests):
         versions[n] = m["version"]
         deltas = {b: len(v.get("delta", [])) for b, v in m["buckets"].items()}
         cut = max(1, m["compact_threshold"])
@@ -3417,9 +3550,12 @@ def compact_due(tables: "list[LakeTable]") -> "list[dict | Exception]":
         if not jobs:
             return
         t0 = time.time()
-        results = fold([(tables[n], b) for n, b in jobs])
+        # a table folded once already is past its data commit's manifest
+        heads = [None if n in out_of_date else manifests[n] for n, _ in jobs]
+        results = fold([(tables[n], b) for n, b in jobs], heads)
         ms = (time.time() - t0) * 1000
         for (n, _), r in zip(jobs, results):
+            out_of_date.add(n)
             if isinstance(r, Exception):
                 lost.add(n)
                 if isinstance(r, CommitConflict):
@@ -3427,9 +3563,14 @@ def compact_due(tables: "list[LakeTable]") -> "list[dict | Exception]":
                 else:
                     out[n] = r
             else:
-                out[n].update(r, compact_ms=round(out[n].get("compact_ms", 0) + ms, 1))
+                lanes_run = (out[n].get("fold_lane"), r.get("fold_lane", "spark"))
+                out[n].update(
+                    r,
+                    compact_ms=round(out[n].get("compact_ms", 0) + ms, 1),
+                    fold_lane="spark" if "spark" in lanes_run else "driver",
+                )
 
-    def clustered(jobs) -> list:
+    def clustered(jobs, _heads) -> list:
         results = []
         for lt, b in jobs:
             try:
@@ -3438,9 +3579,13 @@ def compact_due(tables: "list[LakeTable]") -> "list[dict | Exception]":
                 results.append(e)
         return results
 
-    run(major, fold_tables)
+    out_of_date: "set[int]" = set()
+    run(major, lambda jobs, heads: fold_tables(jobs, manifests=heads))
     run(lanes, clustered)
-    run([j for j in small if j[0] not in lost], lambda jobs: fold_tables(jobs, True))
+    run(
+        [j for j in small if j[0] not in lost],
+        lambda jobs, heads: fold_tables(jobs, minor=True, manifests=heads),
+    )
     return out
 
 

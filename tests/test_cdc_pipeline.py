@@ -2,6 +2,7 @@
 kill-and-resume from checkpoint, exactly-once under duplicate delivery,
 error modes, and mid-stream schema evolution."""
 
+import contextlib
 import glob
 import os
 import time
@@ -21,6 +22,7 @@ from pyspark.sql.types import (
 
 from multi_table_plugins_spark.feed import FeedSpec, generate_feed, expected_final_state
 from multi_table_plugins_spark.lakehouse import LakeTable, latest_snapshot
+from multi_table_plugins_spark.lakehouse import multi_merge
 from multi_table_plugins_spark.lakehouse.fileio import get_fileio
 from multi_table_plugins_spark.lakehouse.multi_merge import is_safe_table_name
 from multi_table_plugins_spark.schemas import CHANGE_FEED_SCHEMA
@@ -460,6 +462,70 @@ def test_cdc_apply_records_the_batch_jit_time(spark, tmp_path):
     ms = {r["jvm_compile_ms"] for r in recs}
     assert len(ms) == 1
     assert all(type(x) is int and x >= 0 for x in ms), ms
+
+
+@pytest.mark.parametrize("lane", ["driver", "spark"])
+def test_fold_records_name_their_lane(spark, tmp_path, lane):
+    """Every ``cdc_apply`` record of a fold carries ``fold_lane`` beside
+    ``compact_ms``: ``driver`` for a fold within one AQE partition,
+    ``spark`` when the fold input exceeds it."""
+    from test_lakehouse import spark_lane
+
+    wh = str(tmp_path / "wh")
+    kw = dict(app_id="lane", n_buckets=2, compact_threshold=2)
+    with spark_lane(spark) if lane == "spark" else contextlib.nullcontext():
+        for epoch in (0, 1):
+            df = _one_row_batch(spark, 2 * epoch + 1).unionByName(
+                _one_row_batch(spark, 2 * epoch + 2, "t1")
+            )
+            apply_cdc_batch(spark, df, wh, epoch=epoch, **kw)
+    recs = [
+        r for r in LineageLog(wh).read()
+        if r["kind"] == "cdc_apply" and "compact_ms" in r
+    ]
+    assert sorted(r["table"] for r in recs) == ["t0", "t1"]
+    assert {r["fold_lane"] for r in recs} == {lane}
+
+
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_fast_lane_commit_is_not_followed_by_a_listing(
+    spark, tmp_path, monkeypatch, backend
+):
+    """``merge_many`` decides what is due on the manifest each commit
+    published: after a fast-lane commit of a batch that makes no bucket
+    due, it lists no ``_manifests/`` directory."""
+    calls = []
+    base = type(get_fileio(backend))
+
+    class Counting(base):
+        def isdir(self, path):
+            calls.append(("isdir", path))
+            return super().isdir(path)
+
+        def listdir(self, path):
+            calls.append(("listdir", path))
+            return super().listdir(path)
+
+    after = []
+    append_staged = LakeTable.append_staged
+
+    def placed(self, *a, **kw):
+        r = append_staged(self, *a, **kw)
+        after.append(len(calls))
+        return r
+
+    monkeypatch.setattr(LakeTable, "append_staged", placed)
+    wh = str(tmp_path / "wh")
+    for epoch in (0, 1):
+        n = len(calls)
+        multi_merge.merge_many(
+            spark, _one_row_batch(spark, epoch + 1), wh, app_id="no-list",
+            epoch=epoch, n_buckets=2, compact_threshold=4, io=Counting(),
+        )
+        assert len(after) == epoch + 1
+        tail = [c for c in calls[after[-1]:] if "_manifests" in c[1]]
+        assert tail == [], tail
+        assert any("_manifests" in c[1] for c in calls[n:after[-1]])
 
 
 def test_fast_lane_prechecks_list_the_log_once(spark, tmp_path, monkeypatch):

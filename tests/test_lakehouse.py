@@ -3,6 +3,7 @@ evolution, compaction, atomic commit. The golden-final-state style mirrors
 the reference's PipelineTest.java:185-230 (assert exact end state)."""
 
 import base64
+import contextlib
 import json
 import os
 
@@ -328,6 +329,27 @@ def _count_parquet_writes(monkeypatch):
     return n
 
 
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@contextlib.contextmanager
+def spark_lane(spark):
+    """Every fold inside takes the Spark lane (``table.fold_tables``):
+    no fold input fits in a one-byte AQE partition."""
+    old = spark.conf.get(ADVISORY)
+    spark.conf.set(ADVISORY, "1b")
+    try:
+        yield
+    finally:
+        spark.conf.set(ADVISORY, old)
+
+
+@pytest.fixture()
+def spark_fold_lane(spark):
+    with spark_lane(spark):
+        yield
+
+
 def _assert_folded(lt, r, op="compact"):
     """``lt``'s newest commit is the fold of its data commit ``r``: the
     state is unchanged, every folded bucket holds one file and, for a
@@ -342,11 +364,10 @@ def _assert_folded(lt, r, op="compact"):
             assert b["base"] == [] and len(b["delta"]) == 1
 
 
-@pytest.mark.parametrize("backend", ["local", "generic"])
-def test_one_job_folds_every_due_table(spark, tmp_path, monkeypatch, backend):
-    """A batch that makes three tables due folds them with one write
-    after the batch write; each table's state is unchanged by its fold
-    and the shared staging directory is gone."""
+def _fold_three_due_tables(spark, tmp_path, monkeypatch, backend, lane):
+    """A batch that makes three tables due folds them; each table's
+    state is unchanged by its fold, it names ``lane`` and the shared
+    staging directory is gone. Returns the batch's Spark writes."""
     from multi_table_plugins_spark.lakehouse.fileio import get_fileio
     from multi_table_plugins_spark.lakehouse.multi_merge import merge_many
 
@@ -359,17 +380,36 @@ def test_one_job_folds_every_due_table(spark, tmp_path, monkeypatch, backend):
     res = merge_many(
         spark, _mm_batch(spark, names, 1000, delete={0, 7}), wh, epoch=1, **kw
     )
-    assert writes["writes"] == 2  # the batch write and ONE fold write
     for t in names:
         lt = LakeTable(spark, os.path.join(wh, t), io=io)
         assert res[t]["compacted_buckets"] == ["0", "1"]
         assert res[t]["compact_ms"] > 0
+        assert res[t]["fold_lane"] == lane
         _assert_folded(lt, res[t])
         assert len(_by_key(lt.read())) == 38  # tombstones stay hidden
     assert not os.path.exists(os.path.join(wh, "_staging"))
+    return writes["writes"]
 
 
-def test_fold_groups_tables_by_schema(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_one_job_folds_every_due_table(
+    spark, tmp_path, monkeypatch, backend, spark_fold_lane
+):
+    """On the Spark lane, the three tables fold with one write after
+    the batch write."""
+    writes = _fold_three_due_tables(spark, tmp_path, monkeypatch, backend, "spark")
+    assert writes == 2  # the batch write and ONE fold write
+
+
+@pytest.mark.parametrize("backend", ["local", "generic"])
+def test_small_fold_runs_no_spark_job(spark, tmp_path, monkeypatch, backend):
+    """A fold input within one AQE partition folds on the driver: the
+    batch write is the batch's only Spark write."""
+    writes = _fold_three_due_tables(spark, tmp_path, monkeypatch, backend, "driver")
+    assert writes == 1
+
+
+def test_fold_groups_tables_by_schema(spark, tmp_path, monkeypatch, spark_fold_lane):
     """Two tables due in the same batch, one of them evolved with an
     added column: one fold job per schema, both fold to the state they
     had, and the evolved table's rows keep the added column."""
@@ -409,7 +449,9 @@ def test_fold_groups_tables_by_schema(spark, tmp_path, monkeypatch):
     assert got[7]["x"] is None and got[7]["n"] > 1000  # batch wins by lsn
 
 
-def test_sorted_table_keeps_its_clustered_lane(spark, tmp_path, monkeypatch):
+def test_sorted_table_keeps_its_clustered_lane(
+    spark, tmp_path, monkeypatch, spark_fold_lane
+):
     """A table with a persisted sort order, due alongside plain tables,
     compacts on its own clustered lane (several base files per bucket);
     the plain tables share one fold job."""
@@ -436,7 +478,9 @@ def test_sorted_table_keeps_its_clustered_lane(spark, tmp_path, monkeypatch):
     assert _by_key(z.read(version=res["z"]["version"])) == _by_key(z.read())
 
 
-def test_minor_ladder_uses_the_shared_fold(spark, tmp_path, monkeypatch):
+def test_minor_ladder_uses_the_shared_fold(
+    spark, tmp_path, monkeypatch, spark_fold_lane
+):
     """With ``minor_compact_threshold`` reached, both tables' deltas are
     merged by one minor fold call (one job); bases stay empty."""
     from multi_table_plugins_spark.lakehouse import table as table_mod
@@ -451,9 +495,9 @@ def test_minor_ladder_uses_the_shared_fold(spark, tmp_path, monkeypatch):
     calls = []
     real = table_mod.fold_tables
 
-    def spy(jobs, minor=False):
+    def spy(jobs, minor=False, manifests=None):
         calls.append((sorted(os.path.basename(lt.path) for lt, _ in jobs), minor))
-        return real(jobs, minor=minor)
+        return real(jobs, minor=minor, manifests=manifests)
 
     monkeypatch.setattr(table_mod, "fold_tables", spy)
     writes = _count_parquet_writes(monkeypatch)

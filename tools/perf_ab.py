@@ -34,8 +34,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: value, unit
 _METRIC = re.compile(r"^  (\S+)\s+(\S+) (\S+)$")
 _STEAL = re.compile(r"steal ([\d.]+)%")
-#: ungated metrics reported beside the gated ones by default
-EXTRA = ("trigger_p50_s", "freshness_p50_s")
+#: the trickle's note on its timed triggers: ``trigger MIN .. MAX s``
+_TRIGGERS = re.compile(r"trigger ([\d.]+) \.\. ([\d.]+) s")
+#: ungated metrics reported beside the gated ones by default;
+#: ``trigger_max_s`` is the trickle's largest timed trigger, the one of
+#: its compaction batch
+EXTRA = ("trigger_p50_s", "freshness_p50_s", "trigger_max_s")
 
 
 def _seeds(spec: str) -> "list[int]":
@@ -65,7 +69,8 @@ def export_rev(rev: str, workdir: str) -> str:
 
 
 def parse_run(stdout: str) -> dict:
-    """Metrics, steal and verdict of one ``perfbench/run.py`` output."""
+    """Metrics, steal and verdict of one ``perfbench/run.py`` output;
+    ``trigger_max_s`` comes from the trickle's trigger note."""
     lines = stdout.strip().splitlines()
     last = json.loads(lines[-1])
     metrics = {}
@@ -75,6 +80,9 @@ def parse_run(stdout: str) -> dict:
             hit = _STEAL.search(line)
             if hit:
                 steal = float(hit.group(1))
+            hit = _TRIGGERS.search(line)
+            if hit:
+                metrics["trigger_max_s"] = float(hit.group(2))
             continue
         hit = _METRIC.match(line)
         if hit:
