@@ -1,12 +1,12 @@
 """The driver lane of a small fold: Arrow reads, resolves and buckets
-one (table, bucket) of a fold without a Spark job.
+each (table, bucket) of a fold without a Spark job.
 
-A fold whose input fits in one AQE partition
-(``spark.sql.adaptive.advisoryPartitionSizeInBytes``) would run its
-resolve as one coalesced reduce task anyway, so a Spark job buys it no
-parallelism, only its fixed cost: planning, task launch and code the
-JIT has not compiled. :func:`table.fold_tables` folds such groups with
-these helpers and then places and commits the run exactly as it does a
+For a fold this small a Spark job buys little parallelism — AQE
+coalesces its resolve into one or a few reduce tasks — and costs its
+fixed price: planning, task launch and code the JIT has not compiled. :func:`table.fold_tables`
+decides which folds are small enough (``table.DRIVER_FOLD_MAX_BYTES``)
+and which tables this lane :func:`supports`, hands it the entries to
+:func:`fold`, and then places and commits the run exactly as it does a
 Spark fold's.
 
 Bucket ids are recomputed with a numpy port of Spark's ``hash()``
@@ -15,6 +15,10 @@ different bucket count is still refused at commit, as on the Spark lane.
 """
 
 from __future__ import annotations
+
+import os
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pyarrow as pa
@@ -45,9 +49,58 @@ _ARROW_LEAVES = {
 #: strings only: a collated key groups and hashes differently)
 HASHABLE_KEYS = (T.StringType(), T.IntegerType(), T.LongType())
 
-#: ``spark.sql.parquet.compression.codec`` values Arrow writes alike
+#: Spark parquet ``compression`` values Arrow writes alike
 CODECS = {"none": "none", "uncompressed": "none", "snappy": "snappy",
           "gzip": "gzip", "zstd": "zstd"}
+
+
+def supports(target: T.StructType, keys: "list[str]", write_opts: dict) -> bool:
+    """Whether this lane folds a table of schema ``target`` keyed on
+    ``keys`` into files written as the Spark writer options
+    ``write_opts`` say: every key a type the hash port covers, every
+    column a type Arrow writes as Spark does, and a codec Arrow has."""
+    fields = {f.name: f.dataType for f in target.fields}
+    return (
+        all(fields[k] in HASHABLE_KEYS for k in keys)
+        and arrow_schema(target) is not None
+        and write_opts.get("compression") in CODECS
+    )
+
+
+def fold(units: list, target: T.StructType, keys: "list[str]", write_opts: dict,
+         threads: int) -> None:
+    """Fold every unit ``(io, files, n_buckets, out)`` on ``threads``
+    threads. ``files`` pairs each entry's path with the columns of its
+    schema version; they are read through ``io``, conformed to
+    ``target`` and resolved to the max-``_lsn`` row per key (tombstones
+    included). Each row is written to ``out.format(bucket)``, the bucket
+    Spark's hash gives it, as one parquet file per bucket with the Spark
+    writer options ``write_opts`` (``compression``,
+    ``parquet.enable.dictionary``)."""
+    schema = arrow_schema(target)
+    opts = {
+        "compression": CODECS[write_opts["compression"]],
+        "use_dictionary": write_opts.get("parquet.enable.dictionary", "true") == "true",
+    }
+
+    def one(unit) -> None:
+        io, files, n_buckets, out = unit
+        t = latest_per_key(
+            pa.concat_tables([read_conformed(io, p, names, schema) for p, names in files]),
+            keys,
+        )
+        ids = bucket_ids(t, keys, n_buckets)
+        for b in np.unique(ids):
+            d = out.format(b)
+            io.makedirs(d)
+            pq.write_table(
+                t.filter(pa.array(ids == b)),
+                os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"),
+                **opts,
+            )
+
+    with ThreadPoolExecutor(max_workers=threads) as ex:
+        list(ex.map(one, units))
 
 
 def _arrow_type(dt: T.DataType) -> pa.DataType:

@@ -23,10 +23,10 @@ write side:
      read, LWW-resolved per (table, bucket, key) and written as one
      staged ``(table, bucket)`` run, then placed and committed per table
      the same way (``table.fold_tables``). A fold whose input fits in
-     one AQE partition runs on the driver with Arrow and no Spark job —
-     AQE would run it as one reduce task anyway, so a job would add only
-     its fixed cost; a larger one is one more Spark job with one
-     ``partitionBy(table, bucket)`` write.
+     ``table.DRIVER_FOLD_MAX_BYTES`` runs on the driver with Arrow and
+     no Spark job — AQE would run it as one or a few reduce tasks, so a
+     job would add mostly its fixed cost; a larger one is one more Spark
+     job with one ``partitionBy(table, bucket)`` write.
 
 Row/delete counts, the watermark and the max LSN ride the write job via
 ``Observation`` — zero extra passes.
@@ -194,9 +194,6 @@ def merge_many(
             for f in io.listdir(os.path.join(sdir, b))
             if f.endswith(".parquet")
         ]
-        if not files:
-            results[table] = {"skipped": False, "rows_applied": 0}
-            return
         file_schema = StructType(list(payload_schema.fields))
         file_schema = file_schema.add(LSN_COL, "long").add(
             DELETED_COL, "boolean"

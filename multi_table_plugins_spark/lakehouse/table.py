@@ -80,6 +80,15 @@ REFS_DIR = "_refs"
 #: per-table calls of a fast-path fallback
 COMMIT_THREADS = 8
 
+#: largest fold input (the summed entry ``bytes`` of the files a fold
+#: group reads) that folds on the driver with Arrow instead of in a
+#: Spark job (:func:`fold_tables`). Measured with
+#: ``tools/fold_lane_probe.py`` (token-array table, local[4]): the
+#: driver lane is 8-14x faster in wall time from 1 to 64 MiB, and its
+#: Python resident set rises about 5.5x the input (+88 MiB at 16 MiB,
+#: +305 MiB at 64 MiB) — the cut bounds that driver memory
+DRIVER_FOLD_MAX_BYTES = 16 << 20
+
 #: write options for SHORT-LIVED delta files (folded by compaction):
 #: random token ids don't compress and the encode CPU is ~20% of apply
 #: time; compacted base files keep the session codec (snappy)
@@ -3306,14 +3315,16 @@ def fold_tables(
     out as ``_table=i/_bucket=b``:
 
       * the **driver lane**, when the group's fold input (the summed
-        entry ``bytes`` of its due buckets) is at most one AQE partition
-        (``spark.sql.adaptive.advisoryPartitionSizeInBytes``): AQE would
-        run such a fold's resolve as one coalesced reduce task anyway, so
-        a Spark job buys it no parallelism, only its fixed cost. Arrow
-        folds each due (table, bucket) on ``COMMIT_THREADS`` threads
-        (:func:`_fold_on_driver`). Tables whose key is not a string, int
-        or long, or whose columns Arrow cannot write alike, take the
-        Spark lane;
+        entry ``bytes`` of its due buckets) is at most
+        ``DRIVER_FOLD_MAX_BYTES``: AQE would run such a fold's resolve
+        as one or a few reduce tasks, so a Spark job buys it little
+        parallelism and costs planning, task launch and cold JIT code;
+        the driver lane measured faster at every size up to the cut
+        and beyond it, which is set by driver memory. Arrow folds each due (table,
+        bucket) on ``COMMIT_THREADS`` threads (:func:`_fold_on_driver`).
+        Tables the lane does not support (:func:`driver_fold.supports`:
+        a key that is not a string, int or long, a column Arrow cannot
+        write alike) take the Spark lane;
       * the **Spark lane**, one job (:func:`_fold_write`): it reads every
         folded file tagged with its table, hash-partitions on ``(_table,
         _bucket)`` — which already clusters the per-(table, bucket, key)
@@ -3402,89 +3413,55 @@ def _fold_parts(minor: bool) -> "tuple[str, ...]":
     return ("delta",) if minor else ("base", "delta")
 
 
-def _byte_size(s: str) -> int:
-    """A Spark byte-size string (``64m``, ``1b``, ``67108864b``) in bytes."""
-    hit = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", s.strip().lower())
-    if hit is None:
-        raise ValueError(f"not a byte size: {s!r}")
-    return int(hit.group(1)) << (10 * " kmgtp".index(hit.group(2) or " "))
-
-
 def _fold_lane(members: list, minor: bool) -> str:
     """The lane of one :func:`fold_tables` group: ``"driver"`` when its
-    fold input is at most one AQE partition and Arrow can fold it,
-    else ``"spark"``. An entry without ``bytes`` counts as too large."""
-    _, lt0, m0, _, target = members[0]
-    conf = lt0.spark.conf
+    fold input is at most ``DRIVER_FOLD_MAX_BYTES`` and the driver lane
+    supports its tables, else ``"spark"``. An entry without ``bytes``
+    counts as too large."""
     size = sum(
         e.get("bytes", math.inf)
         for _, _, m, bs, _ in members
         for e in _entries_of(m, bs, _fold_parts(minor))
     )
-    fields = {f.name: f.dataType for f in target.fields}
-    ok = (
-        size <= _byte_size(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-        and all(fields[k] in driver_fold.HASHABLE_KEYS for k in _key_cols(m0))
-        and driver_fold.arrow_schema(target) is not None
-        and (minor or conf.get("spark.sql.parquet.compression.codec") in driver_fold.CODECS)
-    )
-    return "driver" if ok else "spark"
+    _, lt0, m0, _, target = members[0]
+    if size <= DRIVER_FOLD_MAX_BYTES and driver_fold.supports(
+        target, _key_cols(m0), _fold_write_opts(lt0, minor)
+    ):
+        return "driver"
+    return "spark"
+
+
+def _fold_write_opts(lt: LakeTable, minor: bool) -> dict:
+    """The Spark writer options of a fold's files: a minor fold writes
+    deltas (``DELTA_WRITE_OPTS``), a major one the session codec."""
+    if minor:
+        return DELTA_WRITE_OPTS
+    return {"compression": lt.spark.conf.get("spark.sql.parquet.compression.codec")}
 
 
 def _fold_on_driver(members: list, minor: bool, staging: str) -> None:
     """The driver lane of one :func:`fold_tables` group: the staged run
-    :func:`_fold_write` would write, folded with Arrow per due (table,
-    bucket) on ``COMMIT_THREADS`` threads. Each entry is read with the
-    file schema of its ``sv`` and conformed to the target; the max-
-    ``_lsn`` row per key is kept, tombstones included; rows go to the
-    bucket Spark's hash gives them, so a file hashed with another bucket
-    count lands outside its bucket and :meth:`LakeTable._commit_rewrite`
-    refuses the fold. A major fold writes with the session codec, a
-    minor one as ``DELTA_WRITE_OPTS`` says."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    :func:`_fold_write` would write, folded by :func:`driver_fold.fold`
+    per due (table, bucket). A row lands in the bucket Spark's hash
+    gives it, so a file hashed with another bucket count lands outside
+    its bucket and :meth:`LakeTable._commit_rewrite` refuses the fold."""
     _, lt0, m0, _, target = members[0]
-    schema = driver_fold.arrow_schema(target)
-    keys = _key_cols(m0)
-    if minor:
-        opts = {
-            "compression": driver_fold.CODECS[DELTA_WRITE_OPTS["compression"]],
-            "use_dictionary": DELTA_WRITE_OPTS["parquet.enable.dictionary"] == "true",
-        }
-    else:
-        codec = lt0.spark.conf.get("spark.sql.parquet.compression.codec")
-        opts = {"compression": driver_fold.CODECS[codec]}
-
-    def fold(unit) -> None:
-        i, lt, m, b = unit
+    units = []
+    for i, lt, m, bs, _ in members:
         columns = {
             sv: lt._internal_schema(schema_from_json(j)).fieldNames()
             for sv, j in m["schemas"].items()
         }
-        t = driver_fold.latest_per_key(
-            pa.concat_tables([
-                driver_fold.read_conformed(
-                    lt.io, os.path.join(lt.path, e["path"]), columns[str(e["sv"])], schema
-                )
+        out = os.path.join(staging, f"{_TABLE_COL}={i}", f"{_BUCKET_COL}={{}}")
+        for b in bs:
+            files = [
+                (os.path.join(lt.path, e["path"]), columns[str(e["sv"])])
                 for e in _entries_of(m, [b], _fold_parts(minor))
-            ]),
-            keys,
-        )
-        ids = driver_fold.bucket_ids(t, keys, m["n_buckets"])
-        for bid in np.unique(ids):
-            d = os.path.join(staging, f"{_TABLE_COL}={i}", f"{_BUCKET_COL}={bid}")
-            lt.io.makedirs(d)
-            pq.write_table(
-                t.filter(pa.array(ids == bid)),
-                os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"),
-                **opts,
-            )
-
-    units = [(i, lt, m, b) for i, lt, m, bs, _ in members for b in bs]
-    with ThreadPoolExecutor(max_workers=COMMIT_THREADS) as ex:
-        list(ex.map(fold, units))
+            ]
+            units.append((lt.io, files, m["n_buckets"], out))
+    driver_fold.fold(
+        units, target, _key_cols(m0), _fold_write_opts(lt0, minor), COMMIT_THREADS
+    )
 
 
 def _fold_write(members: list, minor: bool, staging: str) -> None:
@@ -3518,9 +3495,10 @@ def compact_due(
     ``compact_threshold`` fold into their base; with
     ``minor_compact_threshold`` set, other buckets whose deltas reached
     it get a minor fold. Plain tables share one :func:`fold_tables` call
-    per kind — on the driver when the fold is small enough for one AQE
-    partition (AQE would run it as one reduce task anyway), else one
-    Spark job; a table with a persisted sort order takes its own
+    per kind — on the driver when the fold input is at most
+    ``DRIVER_FOLD_MAX_BYTES`` (a Spark job would buy it little
+    parallelism at a fixed cost), else one Spark job; a table with a
+    persisted sort order takes its own
     clustered lane (:meth:`LakeTable.compact`, a Spark job).
 
     Returns one dict per table: ``compacted_buckets`` and/or

@@ -467,13 +467,13 @@ def test_cdc_apply_records_the_batch_jit_time(spark, tmp_path):
 @pytest.mark.parametrize("lane", ["driver", "spark"])
 def test_fold_records_name_their_lane(spark, tmp_path, lane):
     """Every ``cdc_apply`` record of a fold carries ``fold_lane`` beside
-    ``compact_ms``: ``driver`` for a fold within one AQE partition,
+    ``compact_ms``: ``driver`` for a fold within the driver-lane size,
     ``spark`` when the fold input exceeds it."""
     from test_lakehouse import spark_lane
 
     wh = str(tmp_path / "wh")
     kw = dict(app_id="lane", n_buckets=2, compact_threshold=2)
-    with spark_lane(spark) if lane == "spark" else contextlib.nullcontext():
+    with spark_lane() if lane == "spark" else contextlib.nullcontext():
         for epoch in (0, 1):
             df = _one_row_batch(spark, 2 * epoch + 1).unionByName(
                 _one_row_batch(spark, 2 * epoch + 2, "t1")

@@ -150,7 +150,7 @@ def test_driver_and_spark_lanes_fold_alike(spark, tmp_path, minor):
 
     fold = LakeTable.compact_deltas if minor else LakeTable.compact
     r_drv = fold(drv)
-    with spark_lane(spark):
+    with spark_lane():
         r_spk = fold(spk)
     assert r_drv["fold_lane"] == "driver" and r_spk["fold_lane"] == "spark"
     key = "minor_compacted_buckets" if minor else "compacted_buckets"
@@ -177,7 +177,7 @@ def test_fold_of_files_hashed_with_another_bucket_count_is_refused(
 
     lt._commit_metadata("edit", relayout)
     head = lt.manifest()["version"]
-    with spark_lane(spark) if lane == "spark" else contextlib.nullcontext():
+    with spark_lane() if lane == "spark" else contextlib.nullcontext():
         with pytest.raises(RuntimeError, match="bucket-layout mismatch"):
             lt.compact()
     assert lt.manifest()["version"] == head

@@ -329,24 +329,23 @@ def _count_parquet_writes(monkeypatch):
     return n
 
 
-ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-
 @contextlib.contextmanager
-def spark_lane(spark):
+def spark_lane():
     """Every fold inside takes the Spark lane (``table.fold_tables``):
-    no fold input fits in a one-byte AQE partition."""
-    old = spark.conf.get(ADVISORY)
-    spark.conf.set(ADVISORY, "1b")
+    no fold input fits under a negative driver-lane size."""
+    from multi_table_plugins_spark.lakehouse import table
+
+    old = table.DRIVER_FOLD_MAX_BYTES
+    table.DRIVER_FOLD_MAX_BYTES = -1
     try:
         yield
     finally:
-        spark.conf.set(ADVISORY, old)
+        table.DRIVER_FOLD_MAX_BYTES = old
 
 
 @pytest.fixture()
-def spark_fold_lane(spark):
-    with spark_lane(spark):
+def spark_fold_lane():
+    with spark_lane():
         yield
 
 
@@ -403,8 +402,8 @@ def test_one_job_folds_every_due_table(
 
 @pytest.mark.parametrize("backend", ["local", "generic"])
 def test_small_fold_runs_no_spark_job(spark, tmp_path, monkeypatch, backend):
-    """A fold input within one AQE partition folds on the driver: the
-    batch write is the batch's only Spark write."""
+    """A fold input within ``DRIVER_FOLD_MAX_BYTES`` folds on the
+    driver: the batch write is the batch's only Spark write."""
     writes = _fold_three_due_tables(spark, tmp_path, monkeypatch, backend, "driver")
     assert writes == 1
 
